@@ -27,7 +27,7 @@ def ivf(spark, emb, tmp_path_factory):
 
 def _brute(emb, metric, k=10):
     return (emb.withColumn("__score",
-                           distance_column(F.col("embedding"), QVEC, metric))
+                           distance_column("embedding", QVEC, metric))
                .orderBy("__score").limit(k))
 
 

@@ -24,7 +24,7 @@ def emb(spark):
 
 def _brute(emb, metric, k=10):
     return (emb.withColumn("__score",
-                           distance_column(F.col("embedding"), QVEC, metric))
+                           distance_column("embedding", QVEC, metric))
                .orderBy("__score", "vec_id").limit(k))
 
 
@@ -473,7 +473,7 @@ def test_rebuild_recenters_and_clears_mutation_state(spark, emb, tmp_path):
     survivors = emb.where(~F.col("vec_id").isin(gone))
     want = [r["vec_id"] for r in
             survivors.withColumn(
-                "__s", distance_column(F.col("embedding"), QVEC, "l2"))
+                "__s", distance_column("embedding", QVEC, "l2"))
             .orderBy("__s", "vec_id").limit(10).collect()]
     assert got == want
     # a reload sees the rebuilt state

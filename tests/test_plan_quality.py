@@ -51,6 +51,7 @@ def test_knn_is_zero_exchange_takeordered(eng):
     assert "TakeOrderedAndProject" in plan
     assert "Exchange" not in plan          # per-partition heap + driver merge
     assert "Python" not in plan            # distance stays JVM-side
+    assert plan.count("zip_with(") == 1    # distance evaluated once
 
 
 def test_hybrid_knn_pushes_filter(eng):
@@ -59,6 +60,7 @@ def test_hybrid_knn_pushes_filter(eng):
     assert "TakeOrderedAndProject" in plan
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pushed and "label" in pushed[0]
+    assert plan.count("zip_with(") == 1
 
 
 def test_aggregate_has_partial_aggregation(eng):

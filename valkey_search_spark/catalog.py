@@ -214,8 +214,9 @@ class VectorField(FieldDef):
             v = json_vector_expr(self.source(df))
         else:
             v = F.col(self.name).cast(T.ArrayType(T.FloatType()))
-        # wrong-length vectors are rejected -> untracked (search-data-formats.md:131-150)
-        v = F.when(F.size(v) == self.dim, v)
+        # wrong-length vectors, and vectors with a null element, are
+        # rejected -> untracked (search-data-formats.md:131-150)
+        v = F.when(F.size(F.array_compact(v)) == self.dim, v)
         if self.metric == "cosine":
             norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x.cast("double") * x))
             v = F.when(norm > 0, F.transform(v, lambda x: (x / norm).cast("float")))

@@ -34,18 +34,18 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 
-def _project_col(vec: Column, w: np.ndarray, offset: np.ndarray) -> Column:
+def _project_col(vec_col: str, w: np.ndarray, offset: np.ndarray) -> Column:
     """(x @ W) + offset as a JVM expression: one dot-product fold per
     output component (reusing distance.py's literal-vector dot). W is
     (d, k). Null input vectors yield a NULL ARRAY (not an array of
     nulls) so downstream isNotNull guards — IVFIndex.build's included —
     keep working."""
-    from .distance import _dot
+    from .distance import _dot_sql
 
     k = w.shape[1]
-    comps = [(_dot(vec, list(w[:, j])) + F.lit(float(offset[j])))
-             .cast("float") for j in range(k)]
-    return F.when(vec.isNotNull(), F.array(*comps))
+    comps = [(F.expr(_dot_sql(vec_col, list(w[:, j])))
+              + F.lit(float(offset[j]))).cast("float") for j in range(k)]
+    return F.when(F.col(vec_col).isNotNull(), F.array(*comps))
 
 
 class EmbeddingPCA:
@@ -85,8 +85,7 @@ class EmbeddingPCA:
         w = self._effective_w()
         offset = -(self.mean @ w)
         if w.size <= self._JVM_LITERAL_BUDGET:
-            return df.withColumn(out_col, _project_col(F.col(vec_col), w,
-                                                       offset))
+            return df.withColumn(out_col, _project_col(vec_col, w, offset))
 
         w64, off64 = np.asarray(w, dtype=np.float64), \
             np.asarray(offset, dtype=np.float64)

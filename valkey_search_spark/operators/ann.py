@@ -542,7 +542,7 @@ class IVFIndex:
             if prefilter is not None:
                 df = df.where(prefilter)
             scored = df.withColumn(
-                score_name, distance_column(F.col(self.vec_col), q, self.metric))
+                score_name, distance_column(self.vec_col, q, self.metric))
         order = [F.col(score_name).asc()]
         if tiebreak_col is not None:
             order.append(F.col(tiebreak_col).asc())

@@ -901,14 +901,20 @@ class SearchEngine:
         knn = parsed.knn
         fdef = self._validate_knn(schema, knn)
         score = knn.score_alias()
-        dist = distance_column(F.col(vec_col(fdef.attr)), knn.vector, fdef.metric)
-        df = df.withColumn(score, dist).where(F.col(score).isNotNull())
+        dist = distance_column(vec_col(fdef.attr), knn.vector, fdef.metric)
         # top-k: Catalyst compiles orderBy+limit to TakeOrderedAndProject —
         # per-partition heap + driver merge, the same shape as the reference's
         # per-shard top-k fan-in (/root/reference/src/query/fanout.cc:69).
         # __key tiebreak: ties at the k-th distance resolve deterministically
-        # (a distributed scan has no stable iteration order to fall back on)
-        return df.orderBy(F.col(score).asc(), F.col("__key").asc()).limit(knn.k)
+        # (a distributed scan has no stable iteration order to fall back on).
+        # Untracked (null-distance) rows are dropped AFTER the cut: a filter
+        # above the Project would be pushed below it and evaluate the
+        # distance twice. Nulls sort last, so a null inside the top-k means
+        # every non-null row is already in it.
+        return (df.withColumn(score, dist)
+                .orderBy(F.col(score).asc_nulls_last(), F.col("__key").asc())
+                .limit(knn.k)
+                .where(F.col(score).isNotNull()))
 
     def _project(self, schema: IndexSchema, df: DataFrame,
                  return_fields, nocontent: bool, score_col: str | None,
