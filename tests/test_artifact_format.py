@@ -1,0 +1,63 @@
+"""Artifact format stamps: persisted index artifacts carry a versioned
+"format" tag (the reference versions its RDB chunks the same way,
+src/rdb_serialization.cc). Loads must accept the PRE-stamp layout
+(checked-in miniature fixtures under tests/data/artifacts_v1, written
+by the pre-stamp writer: identical files, no format key) and fail
+a foreign tag with a versioned error — never deserialize garbage."""
+from __future__ import annotations
+
+import json as _json
+import os
+import shutil as _shutil
+
+import pytest
+
+from pyspark.sql import functions as F
+
+_V1 = os.path.join(os.path.dirname(__file__), "data", "artifacts_v1")
+
+
+def test_legacy_artifacts_load_and_search(spark):
+    from valkey_search_spark.operators.ann import IVFIndex
+    from valkey_search_spark.operators.hnsw import HNSWIndex
+
+    ivf = IVFIndex.load(spark, os.path.join(_V1, "ivf"))
+    assert _json.load(open(os.path.join(
+        _V1, "ivf", "_ivf_meta.json"))).get("format") is None
+    out = ivf.search([0.0] * 4, k=3, nprobe=ivf.n_lists).collect()
+    assert len(out) == 3
+    hnsw = HNSWIndex.load(spark, os.path.join(_V1, "hnsw"))
+    rows = hnsw.search([0.0] * 4, k=3, ef=16).collect()
+    assert len(rows) == 3
+
+
+def test_foreign_format_tag_fails_versioned(spark, tmp_path):
+    from valkey_search_spark.artifact import ArtifactFormatError
+    from valkey_search_spark.operators.ann import IVFIndex
+    from valkey_search_spark.operators.hnsw import HNSWIndex
+
+    for kind, metaname, loader in (
+            ("ivf", "_ivf_meta.json", IVFIndex.load),
+            ("hnsw", "_hnsw_meta.json", HNSWIndex.load)):
+        dst = str(tmp_path / kind)
+        _shutil.copytree(os.path.join(_V1, kind), dst)
+        mp = os.path.join(dst, metaname)
+        m = _json.load(open(mp))
+        m["format"] = f"{kind}-index-v9"
+        _json.dump(m, open(mp, "w"))
+        with pytest.raises(ArtifactFormatError, match="v9"):
+            loader(spark, dst)
+
+
+def test_current_writer_stamps_and_reloads(spark, sf_dir, tmp_path):
+    from valkey_search_spark.operators.ann import IVFIndex
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(16).select(
+        F.col("vec_id").alias("cid"), F.slice("embedding", 1, 4)
+        .alias("embedding"))
+    path = str(tmp_path / "ivf_new")
+    IVFIndex.build(emb, path=path, vec_col="embedding", metric="l2",
+                   n_lists=2)
+    m = _json.load(open(os.path.join(path, "_ivf_meta.json")))
+    assert m["format"] == "ivf-index-v1"
+    assert IVFIndex.load(spark, path).n_lists == 2

@@ -1,14 +1,12 @@
 """Capstone: the crawl ingestion lifecycle through this session's
 operators — WARC archives -> HTML extraction -> Unicode cleaning ->
-URL canonicalization dedup -> domain blocklist -> curation gates ->
-JSONL training shards. Every hop has its own oracle elsewhere; this
+URL canonicalization dedup -> domain blocklist -> curation gates.
+Every hop has its own oracle elsewhere; this
 pins that they COMPOSE into the C4/RefinedWeb-shaped pipeline the
 modules document."""
 from __future__ import annotations
 
-import glob
 import gzip
-import json
 
 from pyspark.sql import functions as F
 
@@ -16,7 +14,6 @@ from valkey_search_spark.operators.cleaning import clean_text
 from valkey_search_spark.operators.html import extract_documents
 from valkey_search_spark.operators.pipeline import (CurationConfig,
                                                     curate_documents)
-from valkey_search_spark.operators.sharding import write_training_shards
 from valkey_search_spark.operators.urlops import domain_filter, url_dedup
 from valkey_search_spark.sources.warc import warc_html_documents
 
@@ -121,13 +118,3 @@ def test_crawl_lifecycle(spark, sf_dir, tmp_path):
     # the mojibake page came out repaired
     m = [r for r in rows if "m.example.com" in r.url]
     assert len(m) == 1 and "café don’t" in m[0].text
-
-    # 6. JSONL shards a dataloader can stream
-    man = write_training_shards(
-        clean.select("doc_id", "url", "text"), str(tmp_path / "shards"),
-        key="doc_id", n_shards=3, fmt="jsonl").collect()
-    assert sum(r["rows"] for r in man) == len(rows)
-    files = sorted(glob.glob(str(tmp_path / "shards" / "__shard=*/*.json")))
-    assert files
-    line = json.loads(open(files[0], encoding="utf-8").readline())
-    assert {"doc_id", "url", "text"} <= set(line)

@@ -1,5 +1,5 @@
 """Capstone: one corpus lifecycle through the session's operators —
-z-ordered write -> MERGE refresh -> diff verification -> expectations
+z-ordered write -> upsert/delete refresh -> diff verification -> expectations
 gate -> hybrid (BM25 + vector) search fused by RRF, MMR-diversified,
 scored by IR metrics against exact-KNN qrels. Every hop is an operator
 with its own oracle elsewhere; this pins that they COMPOSE."""
@@ -19,7 +19,6 @@ from valkey_search_spark.operators.ranking import (bm25_corpus_stats,
                                                    bm25_rank)
 from valkey_search_spark.operators.textops import hashed_embeddings
 from valkey_search_spark.sources.layout import write_zordered
-from valkey_search_spark.sources.merge import merge_parquet
 
 
 def test_corpus_lifecycle(spark, sf_dir, tmp_path):
@@ -38,12 +37,12 @@ def test_corpus_lifecycle(spark, sf_dir, tmp_path):
          (999_999, "brand new spark document", 24)],
         "doc_id long, text string, n_chars long")
     deletes = spark.createDataFrame([(2,)], "doc_id long")
-    stats = merge_parquet(spark, path, updates=updates, deletes=deletes,
-                          key="doc_id")
-    assert stats["rows"] == n0 + 1 - 1
+    after = before.join(updates.select("doc_id").unionByName(deletes),
+                        "doc_id", "left_anti").unionByName(updates) \
+        .localCheckpoint()
+    assert after.count() == n0 + 1 - 1
 
     # 3. the diff IS the batch
-    after = spark.read.parquet(path)
     got = {r["verdict"]: r["n"]
            for r in diff_summary(before, after, key="doc_id").collect()}
     assert got["added"] == 1 and got["removed"] == 1

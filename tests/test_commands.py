@@ -196,6 +196,42 @@ def test_execute_reply_wire_shapes(spark, part):
                    "collect")
 
 
+def test_reply_mode_is_per_call_across_threads():
+    """Two threads share one dispatcher: while one is inside
+    execute_reply's FT.SEARCH, the other's execute must still take the
+    DataFrame path (ft_search), not the reply path."""
+    import threading
+
+    inside, release = threading.Event(), threading.Event()
+    calls = []
+
+    class StubEngine:
+        def ft_search_reply(self, index, query, **kw):
+            calls.append("ft_search_reply")
+            if not inside.is_set():
+                inside.set()
+                release.wait(10)
+            return [0]
+
+        def ft_search(self, index, query, **kw):
+            calls.append("ft_search")
+            return "frame"
+
+    d = CommandDispatcher(StubEngine(), source=None)
+    t = threading.Thread(target=d.execute_reply,
+                         args=("FT.SEARCH", "idx", "*"))
+    t.start()
+    try:
+        assert inside.wait(10)
+        got = d.execute("FT.SEARCH", "idx", "*")
+    finally:
+        release.set()
+        t.join(10)
+    assert not t.is_alive()
+    assert got == "frame"
+    assert calls == ["ft_search_reply", "ft_search"]
+
+
 def test_repl_main_end_to_end(spark):
     """python -m valkey_search_spark: script a session through main()
     with a StringIO stdin and check the RESP-shaped output."""

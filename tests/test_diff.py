@@ -1,5 +1,5 @@
 """diff_tables / resample vs DuckDB, plus the merge-verification loop:
-a merge_parquet batch's diff must be exactly the batch."""
+an upsert/delete batch's diff must be exactly the batch."""
 from __future__ import annotations
 
 import duckdb
@@ -32,23 +32,16 @@ def test_diff_hand_case(spark):
                        "unchanged": 1}
 
 
-def test_diff_verifies_merge(spark, tmp_path):
-    from valkey_search_spark.sources.merge import merge_parquet
-
-    path = str(tmp_path / "t")
-    spark.range(100).select(
+def test_diff_verifies_merge(spark):
+    before = spark.range(100).select(
         F.col("id").alias("doc_id"),
-        F.concat(F.lit("v"), F.col("id")).alias("text")) \
-        .write.parquet(path)
-    # localCheckpoint (not cache): the CacheManager would substitute a
-    # cached plan for the identical-path read AFTER the merge
-    before = spark.read.parquet(path).localCheckpoint()
+        F.concat(F.lit("v"), F.col("id")).alias("text"))
     updates = spark.createDataFrame(
         [(3, "u3"), (500, "new")], "doc_id long, text string")
     deletes = spark.createDataFrame([(7,)], "doc_id long")
-    merge_parquet(spark, path, updates=updates, deletes=deletes,
-                  key="doc_id")
-    after = spark.read.parquet(path)
+    # upsert + delete batch applied with plain DataFrame ops
+    after = before.join(updates.select("doc_id").unionByName(deletes),
+                        "doc_id", "left_anti").unionByName(updates)
     got = {r["doc_id"]: r["verdict"]
            for r in diff_tables(before, after, key="doc_id").collect()
            if r["verdict"] != "unchanged"}

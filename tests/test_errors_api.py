@@ -502,3 +502,35 @@ def test_concurrent_searches_classify_independently(spark):
     assert qs["query_text_term_count"] == 5
     assert qs["query_text_prefix_count"] == 5
     assert e.info_search()["query"]["successful_requests_count"] == 20
+
+
+def test_metric_counter_is_exact_under_threads():
+    """INFO SEARCH counters are bumped from many request threads at once;
+    every bump must land (a bare ``Counter[k] += n`` can lose updates
+    when a thread switch falls between its read and its write)."""
+    import sys
+    import threading
+
+    e = SearchEngine(None)                # counters need no Spark session
+    n_threads, n_iter = 8, 5_000
+
+    def worker():
+        for _ in range(n_iter):
+            e._count("successful_requests_count")
+            e._count("flat_vector_index_search_latency_usec", 3)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ts = [threading.Thread(target=worker) for _ in range(n_threads)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in ts)
+    info = e.info_search()
+    assert info["query"]["successful_requests_count"] == n_threads * n_iter
+    assert info["latency"]["flat_vector_index_search_latency_usec"] == \
+        3 * n_threads * n_iter

@@ -273,6 +273,32 @@ def test_append_delete_compact(spark, tmp_path):
         (set(range(120)) - {3, 5})
 
 
+def test_delete_writes_tombstones_in_stored_key_type(spark, tmp_path):
+    """A list delete (Python ints infer bigint) and a DataFrame delete
+    over an int-keyed index must both write the STORED physical key
+    type, or later reads fail on mixed parquet column types."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    rng = np.random.RandomState(11)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(8)]) for i in range(200)],
+        "vec_id: int, embedding: array<float>")
+    idx = HNSWIndex.build(df, str(tmp_path / "h"), m=6, ef_construction=40,
+                          max_segment_rows=100)
+    idx.delete([1, 2])
+    idx.delete(df.where(F.col("vec_id").isin(3, 4)).select("vec_id"))
+
+    def key_type(path):
+        return pq.read_schema(path).field("vec_id").type
+
+    stored = key_type(glob.glob(f"{idx.path}/__seg=*/*.parquet")[0])
+    tombs = glob.glob(f"{idx._tomb_path()}/*.parquet")
+    assert tombs and {key_type(p) for p in tombs} == {stored}
+    assert idx.scan_raw().count() == 200 - 4
+
+
 def test_deterministic_rebuild(spark, sf_dir, tmp_path):
     emb = load(spark, sf_dir, "embeddings").repartition(7)
     a = HNSWIndex.build(emb, str(tmp_path / "a"), m=8,

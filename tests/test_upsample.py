@@ -144,38 +144,6 @@ def test_error_contracts(spark):
         upsample_to_token_budget(df, "doc_id", 10, max_epochs=0)
 
 
-def test_shard_writer_spreads_epochs(spark, sf_dir, tmp_path):
-    """Composition with write_training_shards: replicas of one doc must
-    scatter across shards (spread_cols=['epoch']); without it they all
-    hash to the same shard — the documented footgun."""
-    from valkey_search_spark.operators.sharding import (
-        write_training_shards,
-    )
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    up = upsample_to_token_budget(docs, "doc_id", 60_000)  # ~3 epochs
-    spread = write_training_shards(
-        up, str(tmp_path / "spread"), key="doc_id", n_shards=8,
-        spread_cols=["epoch"])
-    assert spread.agg(F.sum("rows")).collect()[0][0] == up.count()
-    back = spark.read.parquet(str(tmp_path / "spread"))
-    per_doc = (back.groupBy("doc_id")
-               .agg(F.count(F.lit(1)).alias("copies"),
-                    F.count_distinct("__shard").alias("shards"))
-               .where("copies >= 3"))
-    n_multi = per_doc.count()
-    n_spread = per_doc.where("shards > 1").count()
-    assert n_multi > 0
-    assert n_spread / n_multi > 0.8  # P(all 3 in one of 8 shards) ~ 1/64
-    # regression of the keyed-only behavior: no spread_cols -> replicas
-    # of a doc share one shard
-    keyed = write_training_shards(
-        up, str(tmp_path / "keyed"), key="doc_id", n_shards=8)
-    back2 = spark.read.parquet(str(tmp_path / "keyed"))
-    assert (back2.groupBy("doc_id")
-            .agg(F.count_distinct("__shard").alias("s"))
-            .where("s > 1").count()) == 0
-
-
 def test_epochs_invariant_to_partitioning(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     base = sorted((r["doc_id"], r["epoch"]) for r in

@@ -256,7 +256,6 @@ class CommandDispatcher:
         self.source = source
         self.json_column = json_column
         self.key_column = key_column
-        self._reply_mode = False
 
     # -- entry points -----------------------------------------------------
     def execute_reply(self, *args):
@@ -264,16 +263,17 @@ class CommandDispatcher:
         RESP-shaped reply list (``[total, key, [f, v, ...], ...]`` /
         ``[n, [k, v, ...], ...]``) instead of a DataFrame — the wire
         form a reference client sees (ft_search.cc:74)."""
-        self._reply_mode = True
-        try:
-            return self.execute(*args)
-        finally:
-            self._reply_mode = False
+        return self._dispatch(args, reply=True)
 
     def execute(self, *args):
         """Dispatch one command. ``args`` is the RESP argv (the command
         name may be the first element or passed as separate words), or
         a single string parsed with shell quoting."""
+        return self._dispatch(args, reply=False)
+
+    def _dispatch(self, args: tuple, reply: bool):
+        # the reply shape is per call, never instance state: threads may
+        # share one dispatcher
         if len(args) == 1 and isinstance(args[0], str) and " " in args[0]:
             args = split_command_line(args[0])
         elif len(args) == 1 and isinstance(args[0], (list, tuple)):
@@ -285,8 +285,8 @@ class CommandDispatcher:
         cmd = str(args[0]).upper()
         handler = {
             "FT.CREATE": self._create,
-            "FT.SEARCH": self._search,
-            "FT.AGGREGATE": self._aggregate,
+            "FT.SEARCH": lambda a: self._search(a, reply),
+            "FT.AGGREGATE": lambda a: self._aggregate(a, reply),
             "FT.DROPINDEX": self._dropindex,
             "FT._LIST": self._list,
             "FT.INFO": self._info,
@@ -361,7 +361,7 @@ class CommandDispatcher:
             prefixes=prefixes)
 
     # -- FT.SEARCH ----------------------------------------------------------
-    def _search(self, a: _Args):
+    def _search(self, a: _Args, reply: bool):
         from .operators.search import ReturnField
 
         index = a.next("index name")
@@ -430,7 +430,7 @@ class CommandDispatcher:
             else:
                 raise QuerySyntaxError(
                     f"unknown FT.SEARCH argument {opt!r}")
-        if self._reply_mode:
+        if reply:
             kw2 = dict(kw)
             if kw2.pop("count_only", False):
                 kw2["limit"] = (0, 0)
@@ -441,7 +441,7 @@ class CommandDispatcher:
                                      params=params or None, **kw)
 
     # -- FT.AGGREGATE -------------------------------------------------------
-    def _aggregate(self, a: _Args):
+    def _aggregate(self, a: _Args, reply: bool):
         index = a.next("index name")
         query = a.next("query")
         kw: dict = {}
@@ -485,7 +485,7 @@ class CommandDispatcher:
         stages = shlex.join(stage_toks)
         out = self.engine.ft_aggregate(index, query, stages,
                                        params=params or None, **kw)
-        if self._reply_mode:
+        if reply:
             from .operators.reply import aggregate_reply
 
             return aggregate_reply(out)

@@ -34,6 +34,24 @@ from ..functions.distance import distance_column
 from ..sources.swap import require_local_path, sibling_swap
 
 
+def append_tombstones(spark: SparkSession, data_path: str, tomb_path: str,
+                      key: str, keys, gen_col: str, gen: int) -> None:
+    """Append ``(key, gen_col=gen)`` tombstone rows for ``keys`` (a Python
+    sequence or a one-column DataFrame) under ``tomb_path`` — the delete
+    step IVF and HNSW share. Keys are always cast to the key type STORED
+    at ``data_path``: a narrower/wider caller key would write mixed
+    physical parquet types into the tombstone dir and poison every later
+    read (the same hazard the IVF append guards against)."""
+    ktype = spark.read.parquet(data_path).schema[key].dataType
+    if isinstance(keys, DataFrame):
+        tomb = keys.select(F.col(keys.columns[0]).cast(ktype).alias(key))
+    else:
+        tomb = spark.createDataFrame(
+            [(k,) for k in keys], schema=f"`{key}` {ktype.simpleString()}")
+    (tomb.withColumn(gen_col, F.lit(gen))
+     .write.mode("append").parquet(tomb_path))
+
+
 class IVFIndex:
     """Persisted IVF index over one vector column."""
 
@@ -369,18 +387,8 @@ class IVFIndex:
         set; tombstones vanish at the next rebuild."""
         key = self._resolve_key(key_col)
         gen = self.gen + 1
-        # always cast to the STORED key type: a narrower/wider caller key
-        # would write mixed physical parquet types into the tombstone dir
-        # and poison every later read (same hazard append guards against)
-        ktype = self.spark.read.parquet(self.path).schema[key].dataType
-        if isinstance(keys, DataFrame):
-            tomb = keys.select(
-                F.col(keys.columns[0]).cast(ktype).alias(key))
-        else:
-            tomb = self.spark.createDataFrame(
-                [(k,) for k in keys], schema=f"`{key}` {ktype.simpleString()}")
-        (tomb.withColumn("__gen", F.lit(gen))
-         .write.mode("append").parquet(self._tomb_path))
+        append_tombstones(self.spark, self.path, self._tomb_path, key, keys,
+                          "__gen", gen)
         self.gen = gen
         if self.key_col is None:
             self.key_col = key

@@ -60,6 +60,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..sources.swap import require_local_path, sibling_swap
+from .ann import append_tombstones
 
 _META = "_hnsw_meta.json"
 _TOMBS = "_hnsw_tombstones"
@@ -811,13 +812,8 @@ class HNSWIndex:
         route traversal, like hnswlib's soft deletes) but search masks
         them out of results."""
         self.gen += 1
-        if isinstance(keys, DataFrame):
-            kdf = keys.select(F.col(keys.columns[0]).alias(self.key_col))
-        else:
-            kdf = self.spark.createDataFrame(
-                [(k,) for k in keys], [self.key_col])
-        (kdf.withColumn("__tgen", F.lit(self.gen))
-            .write.mode("append").parquet(self._tomb_path()))
+        append_tombstones(self.spark, self.path, self._tomb_path(),
+                          self.key_col, keys, "__tgen", self.gen)
         self._save_meta()
 
     def upsert(self, df: DataFrame, n_new_segments: int = 1) -> None:
@@ -835,7 +831,7 @@ class HNSWIndex:
         BEFORE the swap leaves the live index untouched; the swap
         itself is two local renames with a narrow window where the old
         index sits at ``<path>.old`` (recover by moving it back —
-        same recovery contract as merge_parquet/IVFIndex.compact).
+        same recovery contract as IVFIndex.compact).
         Cosine rows are already ingest-normalized (idempotent)."""
         live = self.scan_raw()
         staging = self.path.rstrip("/") + ".compact"

@@ -32,6 +32,7 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.analysis import raw_tokens_column
+from .dedup import _pin
 
 
 class BM25Stats:
@@ -135,15 +136,12 @@ def bm25_rank(df: DataFrame, terms: list[str], key: str = "doc_id",
     else:
         toks_src = F.col(tokens_col)
     if not isinstance(tokens_col, str):
-        # pin ONE tokenizer evaluation: every consumer here (the
-        # arrays_overlap match, size() dl, the per-term tf counting
-        # folds) is token-ORDER-invariant, so a nondeterministic
-        # shuffle() wrapper changes no output while stopping the
-        # optimizer from inlining the tokenizer into the match filter
-        # and pushing it below the staged projection (measured: that
-        # pushdown re-tokenized the full corpus a second time — 2
+        # pin ONE tokenizer evaluation (dedup._pin, value-preserving):
+        # stops the optimizer from inlining the tokenizer into the match
+        # filter and pushing it below the staged projection (measured:
+        # that pushdown re-tokenized the full corpus a second time — 2
         # regexp_extract_all copies in the plan; this shape has 1)
-        toks_src = F.shuffle(toks_src)
+        toks_src = _pin(toks_src)
     staged = df.withColumn("__bm_toks", toks_src)
     toks = F.col("__bm_toks")
 
@@ -170,7 +168,7 @@ def bm25_rank(df: DataFrame, terms: list[str], key: str = "doc_id",
     # expression (with its 7 token-array references) below the staged
     # projection and re-tokenize every row several times over (measured:
     # 11 tokenizer copies in the executed plan; this shape has 1, via
-    # the shuffle() evaluation pin above)
+    # the _pin above)
     if match_only:
         staged = staged.where(F.arrays_overlap(
             toks, F.array(*[F.lit(t) for t in terms])))
@@ -296,14 +294,12 @@ def bm25f_rank(df: DataFrame, terms: list[str],
         # null fields tokenize to an EMPTY array, not null: a doc whose
         # title matched must score off its real fields, not have every
         # tf/dl go null through size(null) and emit bm25f_score = null
-        # shuffle() pins one tokenizer evaluation per field (every
-        # consumer — any-field df stats, dl sizes, tf counting folds,
-        # the match arrays_overlap — is token-order-invariant; same
+        # _pin keeps one tokenizer evaluation per field (same
         # anti-inlining pin as bm25_rank)
         staged = staged.withColumn(
             f"__bmf_{f}",
-            F.shuffle(F.coalesce(raw_tokens_column(F.col(f)),
-                                 F.array().cast("array<string>"))))
+            _pin(F.coalesce(raw_tokens_column(F.col(f)),
+                            F.array().cast("array<string>"))))
     tcols = {f: F.col(f"__bmf_{f}") for f in fnames}
 
     any_field = {t: F.lit(False) for t in terms}

@@ -225,8 +225,8 @@ def upsample_to_token_budget(df: DataFrame, key: str,
     source with a share above its size repeats (e.g. 3.2 epochs), a
     large source thins, and the output carries an ``epoch`` column
     (0-based replica index) so downstream shuffles/shard writers can
-    interleave replicas instead of emitting them adjacent (pass
-    ``spread_cols=["epoch"]`` to ``write_training_shards``).
+    interleave replicas instead of emitting them adjacent (hash on
+    key + epoch, not key alone).
 
     Per group, ``rate = budget / group_tokens``; every document gets
     ``floor(rate)`` full copies plus one more iff its salted-hash unit

@@ -79,6 +79,14 @@ class SearchEngine:
         import threading
 
         self._req = threading.local()
+        self._metrics_lock = threading.Lock()
+
+    def _count(self, key: str, n: int = 1) -> None:
+        """Bump one INFO SEARCH counter. ``+=`` on a Counter is a
+        read-modify-write, so concurrent requests would lose updates
+        without the lock."""
+        with self._metrics_lock:
+            self._metrics[key] += n
 
     # -- DDL ---------------------------------------------------------------
     def ft_create(self, name: str, df: DataFrame, fields: list[FieldDef],
@@ -333,7 +341,8 @@ class SearchEngine:
         Coordinator/thread-pool/hnswlib sections have no
         analogue (shuffle service + Catalyst own those concerns) and are
         omitted rather than faked."""
-        m = self._metrics
+        with self._metrics_lock:
+            m = self._metrics.copy()
         out = {
             "query": {k: int(m[k]) for k in (
                 "successful_requests_count", "failure_requests_count",
@@ -417,12 +426,12 @@ class SearchEngine:
                 timeout_ms=timeout_ms, withsortkeys=withsortkeys,
                 _observe_total=_observe_total)
         except Exception:
-            self._metrics["failure_requests_count"] += 1
+            self._count("failure_requests_count")
             raise
         # "successful" for a LAZY call means accepted + planned (execution
         # happens outside the engine, on the returned DataFrame, and is
         # not attributed back); count_only / reply calls execute here.
-        self._metrics["successful_requests_count"] += 1
+        self._count("successful_requests_count")
         # classify SUCCESSFUL requests (search-observables.md: nonvector =
         # exclusively non-vector; vector = any vector component; hybrid =
         # vector + filter, a subset of vector) from the query _ft_search
@@ -430,17 +439,17 @@ class SearchEngine:
         # preprocessing, so a pure-stopword filter classifies as nonhybrid
         parsed = self._req.parsed
         if parsed.knn is None:
-            self._metrics["nonvector_requests_count"] += 1
+            self._count("nonvector_requests_count")
         else:
-            self._metrics["vector_requests_count"] += 1
+            self._count("vector_requests_count")
             if not isinstance(parsed.predicate, MatchAll):
-                self._metrics["hybrid_requests_count"] += 1
+                self._count("hybrid_requests_count")
         # per-operation query_stats counters (search.cc:907-935
         # IncrementQueryOperationMetrics) — classified from the final
         # predicate, after the SLOP/INORDER proximity upgrade
         ops = query_operation_flags(self._req.pred)
         if "text" in ops:
-            self._metrics["query_text_requests_cnt"] += 1
+            self._count("query_text_requests_cnt")
         for op, counter in (("numeric", "query_numeric_count"),
                             ("tag", "query_tag_count"),
                             ("text_term", "query_text_term_count"),
@@ -449,7 +458,7 @@ class SearchEngine:
                             ("text_fuzzy", "query_text_fuzzy_count"),
                             ("proximity", "query_text_proximity_count")):
             if op in ops:
-                self._metrics[counter] += 1
+                self._count(counter)
         return out
 
     def _ft_search(
@@ -638,11 +647,11 @@ class SearchEngine:
                                   else "ann")
             if prefilter is not None and not explaining:
                 # predicate evaluated IN-traversal on the graph
-                self._metrics["inline_filtering_requests_count"] += 1
+                self._count("inline_filtering_requests_count")
             if ann_route is not None and not explaining:
                 # segment routing engaged (extension metric — the
                 # reference has no segment concept to route over)
-                self._metrics["routed_requests_count"] += 1
+                self._count("routed_requests_count")
             hits = artifact.search(parsed.knn.vector, k=parsed.knn.k,
                                    ef=ann_ef, where=prefilter,
                                    route_segments=ann_route)
@@ -650,8 +659,8 @@ class SearchEngine:
             df = schema.indexed_df().join(F.broadcast(hits), "__key")
             if count_only:
                 n = self._run_with_timeout(df.count, timeout_ms)
-                self._metrics["hnsw_vector_index_search_latency_usec"] += \
-                    int((_time.perf_counter() - _t0) * 1e6)
+                self._count("hnsw_vector_index_search_latency_usec",
+                            int((_time.perf_counter() - _t0) * 1e6))
                 return n
             if _observe_total is not None:
                 # ANN replies report the (<=k) probed result count
@@ -671,14 +680,14 @@ class SearchEngine:
                                       else "ann")
                 if prefilter is not None and not explaining:
                     # predicate evaluated INSIDE the probed lists
-                    self._metrics["inline_filtering_requests_count"] += 1
+                    self._count("inline_filtering_requests_count")
                 df = ann.search(parsed.knn.vector, k=parsed.knn.k,
                                 nprobe=ann_nprobe, prefilter=prefilter,
                                 score_name=score, tiebreak_col="__key")
                 if count_only:
                     n = self._run_with_timeout(df.count, timeout_ms)
-                    self._metrics["hnsw_vector_index_search_latency_usec"] += \
-                        int((_time.perf_counter() - _t0) * 1e6)
+                    self._count("hnsw_vector_index_search_latency_usec",
+                                int((_time.perf_counter() - _t0) * 1e6))
                     return n
                 if _observe_total is not None:
                     # ANN replies report the (<=k) probed result count
@@ -696,15 +705,15 @@ class SearchEngine:
             self._req.ann_mode = "prefilter" if not match_all else "exact"
             if not match_all and not explaining:
                 # exact hybrid: filter first, then distance — pre-filtering
-                self._metrics["prefiltering_requests_count"] += 1
+                self._count("prefiltering_requests_count")
             df = self._knn(schema, df, parsed)
         if count_only:
             # count AFTER the top-k cut so the exact path agrees with the
             # ANN branch above (both report the <=k result-set size)
             n = self._run_with_timeout(df.count, timeout_ms)
             if parsed.knn is not None:
-                self._metrics["flat_vector_index_search_latency_usec"] += \
-                    int((_time.perf_counter() - _t0) * 1e6)
+                self._count("flat_vector_index_search_latency_usec",
+                            int((_time.perf_counter() - _t0) * 1e6))
             return n
         if _observe_total is not None:
             # pre-LIMIT total in the SAME job (search.cc:779-842 computes

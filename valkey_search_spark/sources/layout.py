@@ -21,8 +21,7 @@ aggregation job, or caller-supplied stats) onto ``bits``-bit fixed
 point. The bit interleave unrolls Python-side into literal shift
 expressions — whole-stage codegen, no UDF. The write is
 ``repartitionByRange(z) + sortWithinPartitions(z)``: ONE shuffle at
-write time buys every later multi-dimensional scan its pruning, the
-same pay-once contract as ``sources/bucketing.py``.
+write time buys every later multi-dimensional scan its pruning.
 
 Linear normalization degrades to few distinct cells on heavily skewed
 columns — pre-transform (log, rank) such columns, as Delta users do.

@@ -1,14 +1,13 @@
 """Crash-safe sibling-swap for directory artifacts — the ONE copy of
-the move/rename/rmtree dance shared by ``merge_parquet``,
-``compact_parquet``, ``IVFIndex.compact/rebuild`` and
-``HNSWIndex.compact`` (they previously carried four near-copies with
+the move/rename/rmtree dance shared by ``IVFIndex.compact/rebuild``
+and ``HNSWIndex.compact`` (they previously carried near-copies with
 subtly different recovery notes).
 
 Contract (LOCAL / shared-POSIX filesystem only — see
 ``require_local_path``):
 
 1. The caller fully writes the replacement artifact at a sibling path
-   (``<path>.merge`` / ``.compact`` / ``.rebuild``) — the live artifact
+   (``<path>.compact`` / ``.rebuild``) — the live artifact
    is untouched, so a kill before the swap loses nothing.
 2. ``sibling_swap`` then runs: remove any stale ``<path>.old``, rename
    live -> ``.old``, rename sibling -> live, remove ``.old``.

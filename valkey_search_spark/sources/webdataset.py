@@ -15,8 +15,7 @@ multimodal story: decode/feature ops (``multimodal/``) curate binary
 columns in DataFrames; this is how the result leaves for a trainer —
 or how an existing WebDataset corpus enters.
 
-Scale + determinism contract (same scheme as
-``operators/sharding.write_training_shards``):
+Scale + determinism contract:
 
 - shard id = ``pmod(xxhash64(key, seed), n_shards)`` and intra-shard
   position = ``xxhash64(key, seed+1)`` — membership and order are pure
