@@ -61,3 +61,36 @@ def test_current_writer_stamps_and_reloads(spark, sf_dir, tmp_path):
     m = _json.load(open(os.path.join(path, "_ivf_meta.json")))
     assert m["format"] == "ivf-index-v1"
     assert IVFIndex.load(spark, path).n_lists == 2
+
+
+@pytest.mark.parametrize("kind", ["ivf", "hnsw"])
+def test_failed_meta_write_keeps_previous_meta(spark, tmp_path, monkeypatch,
+                                               kind):
+    """A meta write that dies midway (a kill, a full disk) must leave the
+    previous meta whole: ``load`` still reads it, and no temp file is
+    left beside it."""
+    from valkey_search_spark.operators.ann import IVFIndex
+    from valkey_search_spark.operators.hnsw import HNSWIndex
+
+    df = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 5), 1.0, 0.5]) for i in range(40)],
+        "vec_id: int, embedding: array<float>")
+    path = str(tmp_path / kind)
+    if kind == "ivf":
+        cls = IVFIndex
+        idx = IVFIndex.build(df, path, n_lists=2, key_col="vec_id")
+    else:
+        cls = HNSWIndex
+        idx = HNSWIndex.build(df, path, m=4, ef_construction=20)
+
+    def torn(obj, fh, **kw):
+        fh.write(_json.dumps(obj)[:20])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(_json, "dump", torn)
+    with pytest.raises(OSError, match="disk full"):
+        idx.delete([3])
+    monkeypatch.undo()
+    again = cls.load(spark, path)
+    assert again.gen == 0
+    assert not [f for f in os.listdir(path) if f.endswith(".tmp")]

@@ -133,6 +133,8 @@ TRAILING_CASES = [
     ["FT.INFO", "ix", "SIDEWAYS"],
     ["FT.EXPLAIN", "ix", "*", "VERBOSE"],
     ["FT.BOGUS"],
+    # EF_RUNTIME is a KNN-clause argument, not a FT.SEARCH option
+    ["FT.SEARCH", "ix", "*", "EF_RUNTIME", "10"],
 ]
 
 

@@ -299,6 +299,32 @@ def test_delete_writes_tombstones_in_stored_key_type(spark, tmp_path):
     assert idx.scan_raw().count() == 200 - 4
 
 
+def test_append_writes_rows_in_stored_key_type(spark, tmp_path):
+    """A bigint-keyed batch appended into an int-keyed index must be
+    written in the STORED key type: a bigint file beside int files fails
+    every later read of the dataset."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    rng = np.random.RandomState(12)
+    base = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(8)]) for i in range(100)],
+        "vec_id: int, embedding: array<float>")
+    idx = HNSWIndex.build(base, str(tmp_path / "h"), m=6, ef_construction=40,
+                          max_segment_rows=100)
+    extra = [float(x) for x in rng.randn(8)]
+    idx.append(spark.createDataFrame([(1000, extra)],
+                                     "vec_id: bigint, embedding: array<float>"))
+
+    types = {pq.read_schema(p).field("vec_id").type
+             for p in glob.glob(f"{idx.path}/__seg=*/*.parquet")}
+    assert len(types) == 1
+    assert idx.scan_raw().count() == 101
+    top = idx.search(extra, k=1, ef=200).first()
+    assert top["vec_id"] == 1000 and top["__score"] < 1e-6
+
+
 def test_deterministic_rebuild(spark, sf_dir, tmp_path):
     emb = load(spark, sf_dir, "embeddings").repartition(7)
     a = HNSWIndex.build(emb, str(tmp_path / "a"), m=8,

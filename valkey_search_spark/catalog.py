@@ -218,8 +218,9 @@ class VectorField(FieldDef):
         # rejected -> untracked (search-data-formats.md:131-150)
         v = F.when(F.size(F.array_compact(v)) == self.dim, v)
         if self.metric == "cosine":
-            norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x.cast("double") * x))
-            v = F.when(norm > 0, F.transform(v, lambda x: (x / norm).cast("float")))
+            from .operators.ann_layer import unit_vector_expr
+
+            v = unit_vector_expr(v)
         return {vec_col(self.attr): v}
 
 

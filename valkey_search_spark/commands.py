@@ -425,8 +425,6 @@ class CommandDispatcher:
                 kw["dialect"] = a.next_int("DIALECT")
             elif opt == "TIMEOUT":
                 kw["timeout_ms"] = a.next_int("TIMEOUT")
-            elif opt == "EF_RUNTIME":
-                kw["ann_ef"] = a.next_int("EF_RUNTIME")
             else:
                 raise QuerySyntaxError(
                     f"unknown FT.SEARCH argument {opt!r}")

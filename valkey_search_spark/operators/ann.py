@@ -22,7 +22,6 @@ vector_base.h:46), so scores are directly comparable to FLAT search.
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -30,30 +29,21 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.distance import distance_column
+from ..functions.distance import distance_column, normalize_query
 from ..sources.swap import require_local_path, sibling_swap
+from .ann_layer import (
+    ANNArtifact, check_tier, kmeans_cells, nearest_cells,
+    nearest_cells_udf, prepare_vectors, split_cells, train_codebook,
+)
 
 
-def append_tombstones(spark: SparkSession, data_path: str, tomb_path: str,
-                      key: str, keys, gen_col: str, gen: int) -> None:
-    """Append ``(key, gen_col=gen)`` tombstone rows for ``keys`` (a Python
-    sequence or a one-column DataFrame) under ``tomb_path`` — the delete
-    step IVF and HNSW share. Keys are always cast to the key type STORED
-    at ``data_path``: a narrower/wider caller key would write mixed
-    physical parquet types into the tombstone dir and poison every later
-    read (the same hazard the IVF append guards against)."""
-    ktype = spark.read.parquet(data_path).schema[key].dataType
-    if isinstance(keys, DataFrame):
-        tomb = keys.select(F.col(keys.columns[0]).cast(ktype).alias(key))
-    else:
-        tomb = spark.createDataFrame(
-            [(k,) for k in keys], schema=f"`{key}` {ktype.simpleString()}")
-    (tomb.withColumn(gen_col, F.lit(gen))
-     .write.mode("append").parquet(tomb_path))
-
-
-class IVFIndex:
+class IVFIndex(ANNArtifact):
     """Persisted IVF index over one vector column."""
+
+    _META = "_ivf_meta.json"
+    _FORMAT = "ivf-index-v1"
+    _TOMBS = "_tombstones"
+    _TOMB_GEN = "__gen"
 
     def __init__(self, spark: SparkSession, path: str, vec_col: str,
                  metric: str, centroids: np.ndarray,
@@ -72,10 +62,7 @@ class IVFIndex:
         # physical sub-lists, so split indexes keep unsplit recall)
         self.list_map = (list_map if list_map is not None
                          else [[c] for c in range(len(centroids))])
-        # mutation generation counter: every append/delete bumps it; rows
-        # carry the __gen they were written at, tombstones the gen they
-        # were issued at, and a row is dead iff a tombstone for its key
-        # exists at gen >= the row's own (so later appends re-insert)
+        # mutation generation counter (ann_layer's generation rule)
         self.gen = gen
         self.key_col = key_col                # tombstone identity column
 
@@ -118,168 +105,57 @@ class IVFIndex:
         index while no physical partition exceeds the cap (up to hash
         fluctuation around the 75% target). Sizes come free from the
         KMeans training summary (scaled when fit on a sample)."""
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector, vector_to_array
-
-        # pure argument validation FIRST — failing after the KMeans fit
-        # would waste an entire distributed clustering job
         path = require_local_path(path, "IVFIndex artifacts")
-        if quantize and pq_m:
-            raise ValueError("quantize and pq_m are mutually exclusive")
-        if pq_opq_iters and not pq_m:
-            raise ValueError("pq_opq_iters requires pq_m (OPQ is a PQ "
-                             "refinement — without codes there is "
-                             "nothing to rotate for)")
-        spark = df.sparkSession
-        work = df.where(F.col(vec_col).isNotNull())
-        if pq_m:
-            probe = work.select(F.size(F.col(vec_col))).first()
-            if probe is not None and probe[0] % pq_m:
-                raise ValueError(
-                    f"dim {probe[0]} not divisible by m={pq_m}")
-        if metric == "cosine":
-            norm = F.sqrt(F.aggregate(F.col(vec_col), F.lit(0.0),
-                                      lambda a, x: a + x.cast("double") * x))
-            work = work.withColumn(
-                vec_col,
-                F.when(norm > 0, F.transform(F.col(vec_col),
-                                             lambda x: (x / norm).cast("float"))))
-            work = work.where(F.col(vec_col).isNotNull())
-
-        feats = work.withColumn("__feat", array_to_vector(
-            F.col(vec_col).cast("array<double>")))
-        fit_on = feats.sample(sample_fraction, seed=seed) if sample_fraction else feats
-        model = KMeans(k=n_lists, seed=seed, maxIter=max_iter,
-                       featuresCol="__feat", predictionCol="__list").fit(fit_on)
-        assigned = model.transform(feats).drop("__feat")
-        list_map = [[c] for c in range(n_lists)]
-        if max_list_rows is not None:
-            # per-centroid sizes from the training summary — zero extra
-            # jobs; a sampled fit gives scaled estimates, which is fine
-            # for a soft memory cap
-            sizes = [int(s) for s in model.summary.clusterSizes]
-            if sample_fraction:
-                sizes = [int(s / sample_fraction) for s in sizes]
-            nxt = n_lists
-            remap = F.col("__list")
-            for c, cnt in enumerate(sizes):
-                if cnt <= max_list_rows:
-                    continue
-                # target ~75% fill so uniform-hash fluctuation stays
-                # under the cap; the split is deterministic (xxhash64
-                # of the vector)
-                s = max(2, -(-cnt // max(1, int(0.75 * max_list_rows))))
-                ids = [c] + list(range(nxt, nxt + s - 1))
-                nxt += s - 1
-                list_map[c] = ids
-                sub = F.pmod(F.xxhash64(F.col(vec_col)), F.lit(s))
-                remap = F.when(
-                    F.col("__list") == c,
-                    F.element_at(F.array(*[F.lit(i) for i in ids]),
-                                 sub.cast("int") + 1)).otherwise(remap)
-            if nxt > n_lists:
-                assigned = assigned.withColumn("__list", remap)
-        codebook = None
-        if quantize:
-            from ..functions.quantize import quantize_vector_expr
-
-            assigned = (assigned
-                        .withColumn("__qvec", quantize_vector_expr(F.col(vec_col)))
-                        .drop(vec_col))
-        elif pq_m:
-            from ..functions.pq import PQCodebook
-
-            # pq_opq_iters > 0 learns the OPQ rotation (Ge et al.) —
-            # same code bytes, better recall on correlated embeddings
-            if pq_opq_iters:
-                codebook = PQCodebook.train_opq(
-                    work, vec_col, m=pq_m, seed=seed,
-                    opq_iters=pq_opq_iters)
-            else:
-                codebook = PQCodebook.train(work, vec_col, m=pq_m,
-                                            seed=seed)
-            assigned = (codebook.encode(assigned, vec_col)
-                        .drop(vec_col))
-        assigned = assigned.withColumn("__gen", F.lit(0))
-        assigned.write.mode("overwrite").partitionBy("__list").parquet(path)
-
-        centroids = np.vstack([np.asarray(c) for c in model.clusterCenters()])
-        index = cls(spark, path, vec_col, metric, centroids,
-                    quantized=quantize, pq=codebook, list_map=list_map,
-                    gen=0, key_col=key_col)
+        work = prepare_vectors(df, vec_col, metric)
+        # validate FIRST — failing after the KMeans fit would waste an
+        # entire distributed clustering job
+        check_tier(work, vec_col, quantize, pq_m, pq_opq_iters)
+        assigned, centroids, list_map = kmeans_cells(
+            work, vec_col, "__list", n_lists, seed, sample_fraction,
+            max_list_rows, max_iter)
+        index = cls(df.sparkSession, path, vec_col, metric, centroids,
+                    quantized=quantize,
+                    pq=train_codebook(work, vec_col, pq_m, pq_opq_iters, seed),
+                    list_map=list_map, gen=0, key_col=key_col)
+        (index._encode(assigned).withColumn("__gen", F.lit(0))
+         .write.mode("overwrite").partitionBy("__list").parquet(path))
         index._save_meta()
         return index
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IVFIndex":
-        path = require_local_path(path, "IVFIndex artifacts")
-        with open(os.path.join(path, "_ivf_meta.json")) as fh:
-            meta = json.load(fh)
-        # pre-r10 artifacts carry no tag but the identical v1 layout
-        from ..artifact import check_format
-
-        check_format(meta, "ivf-index-v1", path)
-        pq = None
-        if meta.get("pq"):
-            from ..functions.pq import PQCodebook
-
-            pq = PQCodebook.from_json(meta["pq"])
+        path, meta = cls._load_meta(path)
         return cls(spark, path, meta["vec_col"], meta["metric"],
                    np.asarray(meta["centroids"]),
-                   quantized=meta.get("quantized", False), pq=pq,
+                   quantized=meta.get("quantized", False), pq=meta["pq"],
                    list_map=meta.get("list_map"),
                    gen=meta.get("gen", 0), key_col=meta.get("key_col"))
 
-    def _save_meta(self, into: str | None = None) -> None:
-        # versioned like the reference's RDB chunks
-        # (src/rdb_serialization.cc); see artifact.check_format
-        with open(os.path.join(into or self.path, "_ivf_meta.json"),
-                  "w") as fh:
-            json.dump({"format": "ivf-index-v1",
-                       "vec_col": self.vec_col, "metric": self.metric,
-                       "quantized": self.quantized,
-                       "pq": self.pq.to_json() if self.pq else None,
-                       "centroids": self.centroids.tolist(),
-                       "list_map": self.list_map,
-                       "gen": self.gen, "key_col": self.key_col}, fh)
+    def _meta(self) -> dict:
+        return {"vec_col": self.vec_col, "metric": self.metric,
+                "quantized": self.quantized,
+                "pq": self.pq.to_json() if self.pq else None,
+                "centroids": self.centroids.tolist(),
+                "list_map": self.list_map,
+                "gen": self.gen, "key_col": self.key_col}
+
+    @property
+    def _code_col(self) -> str:
+        # int8 and PQ codes live in their own columns; float in vec_col
+        if self.quantized:
+            return "__qvec"
+        return "__pqcode" if self.pq is not None else self.vec_col
 
     # -- mutation layer (reference: live index mutation on keyspace
     # events, src/indexes/vector_base.cc AddRecord/RemoveRecord — here
     # parquet appends + generation-versioned tombstones, no rebuild) ----
-    @property
-    def _tomb_path(self) -> str:
-        return os.path.join(self.path, "_tombstones")
-
-    def _tombstones(self) -> DataFrame | None:
-        """The tombstone frame (key_col, __gen) or None when no delete
-        has ever been issued. Tombstones are tiny relative to the corpus
-        (they compact away at the next rebuild), so read paths apply
-        them as one BROADCAST join — no corpus shuffle."""
-        if not os.path.isdir(self._tomb_path):
-            return None
-        return self.spark.read.parquet(self._tomb_path)
-
-    def _alive(self, df: DataFrame) -> DataFrame:
-        """Filter deleted rows: keep a row unless a tombstone for its key
-        exists at generation >= the row's __gen. Appends after a delete
-        carry a higher generation, so re-inserted keys survive."""
-        tomb = self._tombstones()
-        if tomb is None:
-            return df
-        if "__gen" not in df.columns:      # pre-mutation-era artifact
-            df = df.withColumn("__gen", F.lit(0))
-        dead = (tomb.groupBy(self.key_col)
-                .agg(F.max("__gen").alias("__tomb_gen")))
-        return (df.join(F.broadcast(dead), on=self.key_col, how="left")
-                .where(F.col("__tomb_gen").isNull()
-                       | (F.col("__gen") > F.col("__tomb_gen")))
-                .drop("__tomb_gen"))
+    _tomb_path = ANNArtifact._tomb_dir
 
     def scan_raw(self) -> DataFrame:
         """The persisted rows in STORAGE form (float / int8 struct / PQ
         code bytes) with deleted rows filtered out — the one read entry
         point every search path goes through."""
-        return self._alive(self.spark.read.parquet(self.path))
+        return self._live(self.spark.read.parquet(self.path))
 
     def _resolve_key(self, key_col: str | None) -> str:
         key = key_col or self.key_col
@@ -294,10 +170,11 @@ class IVFIndex:
         # versioned rows into it would mix file schemas, and tombstones
         # could not distinguish old rows from re-inserts — require a
         # rebuild instead of corrupting the layout (metadata-only check)
-        if "__gen" not in self.spark.read.parquet(self.path).schema.names:
+        if "__gen" not in self._stored_schema().names:
             raise ValueError(
                 "this index artifact predates the mutation layer (no "
                 "__gen column) — rebuild it to enable append/delete/upsert")
+        self.key_col = key                 # the first mutation binds it
         return key
 
     def append(self, df: DataFrame, key_col: str | None = None) -> None:
@@ -320,79 +197,22 @@ class IVFIndex:
         reference: one writer per shard); appends accumulate small
         parquet files — compact by rebuilding when list sizes drift past
         the build-time skew cap."""
-        key = self._resolve_key(key_col)
-        gen = self.gen + 1
-        work = df.where(F.col(self.vec_col).isNotNull())
-        if self.metric == "cosine":
-            vec = self.vec_col
-            norm = F.sqrt(F.aggregate(F.col(vec), F.lit(0.0),
-                                      lambda a, x: a + x.cast("double") * x))
-            work = work.withColumn(
-                vec, F.when(norm > 0, F.transform(
-                    F.col(vec), lambda x: (x / norm).cast("float"))))
-            work = work.where(F.col(vec).isNotNull())
-
-        cents = self.centroids
-
-        @F.pandas_udf("int")
-        def assign(vs: pd.Series) -> pd.Series:
-            if len(vs) == 0:
-                return pd.Series([], dtype="int32")
-            q = np.stack(vs.to_numpy()).astype(np.float64)
-            d = ((q * q).sum(1)[:, None] - 2.0 * (q @ cents.T)
-                 + (cents * cents).sum(1)[None, :])
-            return pd.Series(np.argmin(d, axis=1).astype("int32"))
-
-        assigned = work.withColumn("__list", assign(F.col(self.vec_col)))
-        # identical hash-split routing to build: a centroid with physical
-        # sub-lists spreads appends with the same xxhash64(vec) formula
-        remap = F.col("__list")
-        for c, ids in enumerate(self.list_map):
-            if len(ids) == 1:
-                continue
-            sub = F.pmod(F.xxhash64(F.col(self.vec_col)), F.lit(len(ids)))
-            remap = F.when(
-                F.col("__list") == c,
-                F.element_at(F.array(*[F.lit(i) for i in ids]),
-                             sub.cast("int") + 1)).otherwise(remap)
-        if any(len(ids) > 1 for ids in self.list_map):
-            assigned = assigned.withColumn("__list", remap)
-        if self.quantized:
-            from ..functions.quantize import quantize_vector_expr
-
-            assigned = (assigned
-                        .withColumn("__qvec",
-                                    quantize_vector_expr(F.col(self.vec_col)))
-                        .drop(self.vec_col))
-        elif self.pq is not None:
-            assigned = self.pq.encode(assigned, self.vec_col).drop(self.vec_col)
-        assigned = assigned.withColumn("__gen", F.lit(gen))
-        # align to the persisted layout — names AND types (a bigint batch
-        # appended into an int32 column writes mixed physical types that
-        # poison every later scan); metadata-only schema read
-        want = self.spark.read.parquet(self.path).schema
-        assigned = assigned.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name)
-              for f in want.fields])
-        assigned.write.mode("append").partitionBy("__list").parquet(self.path)
-        self.gen = gen
-        if self.key_col is None:
-            self.key_col = key
-        self._save_meta()
+        self._resolve_key(key_col)
+        work = prepare_vectors(df, self.vec_col, self.metric)
+        nearest = nearest_cells_udf(self.centroids, 1, self.metric)
+        assigned = split_cells(
+            work.withColumn("__list", nearest(F.col(self.vec_col))[0]),
+            "__list", self.vec_col, self.list_map)
+        with self._generation() as gen:
+            self._append_rows(self._encode(assigned)
+                              .withColumn("__gen", F.lit(gen)), "__list")
 
     def delete(self, keys, key_col: str | None = None) -> None:
         """Tombstone-delete by key (reference: RemoveRecord). ``keys`` is
         a Python sequence or a one-column DataFrame. Read paths drop dead
         rows via one broadcast join against the (key, max gen) tombstone
         set; tombstones vanish at the next rebuild."""
-        key = self._resolve_key(key_col)
-        gen = self.gen + 1
-        append_tombstones(self.spark, self.path, self._tomb_path, key, keys,
-                          "__gen", gen)
-        self.gen = gen
-        if self.key_col is None:
-            self.key_col = key
-        self._save_meta()
+        self._delete(keys, self._resolve_key(key_col))
 
     def upsert(self, df: DataFrame, key_col: str | None = None) -> None:
         """Replace-by-key: tombstone the batch's keys at gen g, append
@@ -447,8 +267,6 @@ class IVFIndex:
         For PQ indexes pass ``source``: rebuilding from the index's own
         rows re-trains the codebook on lossy reconstructions (error
         compounds); int8/float tiers rebuild fine from themselves."""
-        import shutil
-
         if source is None:
             source = self._read().drop("__list", "__gen")
         kwargs = {"quantize": self.quantized,
@@ -457,17 +275,10 @@ class IVFIndex:
                                    and self.pq.rotation is not None else 0)}
         kwargs.update(build_kwargs)
         tmp = self.path.rstrip("/") + ".rebuild"
-        fresh = IVFIndex.build(
+        self._swap_in(IVFIndex.build(
             source, tmp, vec_col=self.vec_col, metric=self.metric,
             n_lists=n_lists or self.n_lists, key_col=self.key_col,
-            **kwargs)
-        sibling_swap(self.path, tmp)
-        self.centroids = fresh.centroids
-        self.list_map = fresh.list_map
-        self.quantized = fresh.quantized
-        self.pq = fresh.pq
-        self.gen = 0
-        self._save_meta()
+            **kwargs))
         return self
 
     def list_sizes(self) -> dict[int, int]:
@@ -488,35 +299,15 @@ class IVFIndex:
         JVM-side (whole-stage codegen) when the index stores int8 or PQ
         codes, so the parquet scan reads the smaller column either way
         (PQ reconstruction is lossy by design)."""
-        df = self.scan_raw()
-        if self.quantized:
-            from ..functions.quantize import dequantize_vector_expr
-
-            df = (df.withColumn(self.vec_col,
-                                dequantize_vector_expr(F.col("__qvec")))
-                    .drop("__qvec"))
-        elif self.pq is not None:
-            df = self.pq.attach_decode(df, self.vec_col)
-        return df
+        return self._decode(self.scan_raw())
 
     # ------------------------------------------------------------------
     def _probe_lists(self, qvec: list[float], nprobe: int) -> list[int]:
         """PHYSICAL list ids for the ``nprobe`` nearest centroids —
         nprobe counts centroids; a split centroid contributes all of its
         sub-lists, so recall is independent of build-time splitting."""
-        q = np.asarray(qvec, dtype=np.float64)
-        if self.metric == "cosine":
-            n = np.linalg.norm(q)
-            if n > 0:
-                q = q / n
-        # ALWAYS euclidean: list membership was decided by euclidean
-        # KMeans (on ingest-normalized vectors for cosine), so probing
-        # must rank by the SAME rule — dot-product ranking against the
-        # non-unit centroids can miss a vector's own list (centroid
-        # norms skew argmax dot); same fix as hnsw._route_queries
-        d = ((self.centroids - q) ** 2).sum(axis=1)
-        return [p for i in np.argsort(d)[:nprobe]
-                for p in self.list_map[int(i)]]
+        return nearest_cells([qvec], self.centroids, nprobe, self.metric,
+                             self.list_map)[0].tolist()
 
     def search(self, qvec: list[float], k: int = 10, nprobe: int = 4,
                prefilter=None, score_name: str = "__score",
@@ -527,11 +318,7 @@ class IVFIndex:
         final k-row merge). ``tiebreak_col`` (a key column) makes the cut
         deterministic under distance ties."""
         lists = self._probe_lists(qvec, nprobe)
-        q = list(qvec)
-        if self.metric == "cosine":
-            n = float(np.linalg.norm(q))
-            if n > 0:
-                q = [x / n for x in q]
+        q = normalize_query(list(qvec)) if self.metric == "cosine" else list(qvec)
         if self.pq is not None:
             # ADC fast path: score straight off the m-byte codes (exact
             # query vs per-subspace LUT, pure JVM element_at) — the
@@ -918,30 +705,12 @@ def knn_join_bucketed(queries: DataFrame, index: IVFIndex, k: int = 10,
     from pyspark.sql import types as T
     from pyspark.sql.window import Window
 
-    cents = index.centroids
     metric = index.metric
     nprobe = min(nprobe, index.n_lists)
-    lmap = index.list_map
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe_lists(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        q = np.stack(vs.to_numpy()).astype(np.float64)
-        if metric == "cosine":
-            n = np.linalg.norm(q, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            q = q / n
-        # ALWAYS euclidean — must match the euclidean KMeans list
-        # assignment (see IVFIndex._probe_lists / hnsw._route_queries)
-        d = ((q * q).sum(1)[:, None] - 2.0 * (q @ cents.T)
-             + (cents * cents).sum(1)[None, :])
-        idx = np.argsort(d, axis=1)[:, :nprobe]
-        # expand probed centroids -> their physical sub-lists (identity
-        # unless the build split an oversized list)
-        return pd.Series([
-            np.array([p for c in row for p in lmap[c]], dtype="int32")
-            for row in idx])
+    # nearest centroids expanded to their physical sub-lists (identity
+    # unless the build split an oversized list)
+    probe_lists = nearest_cells_udf(index.centroids, nprobe, metric,
+                                    index.list_map)
 
     if nprobe >= index.n_lists:
         # full probe: every query scores against every list — no need
@@ -979,21 +748,14 @@ def knn_join_bucketed(queries: DataFrame, index: IVFIndex, k: int = 10,
     pq = index.pq
     cvec = "__pqcode" if pq is not None else index.vec_col
 
-    def _raw_corpus():
-        if pq is not None:
-            return index.scan_raw()
-        return index._read()
-
+    corpus = (index.scan_raw() if pq is not None else index._read()).select(
+        "__list", corpus_key, cvec)
     # partition pruning: the probed-list set is at most n_lists ints — the
     # ONLY driver-side materialization on this path. At FULL probe every
     # list is touched by construction, so skip the pruning job entirely
-    if nprobe >= index.n_lists:
-        corpus = _raw_corpus().select("__list", corpus_key, cvec)
-    else:
+    if nprobe < index.n_lists:
         lists = [r[0] for r in probed.select("__list").distinct().collect()]
-        corpus = (_raw_corpus()
-                  .where(F.col("__list").isin(lists))
-                  .select("__list", corpus_key, cvec))
+        corpus = corpus.where(F.col("__list").isin(lists))
 
     qkey_field = queries.schema[query_key]
     ckey_type = corpus.schema[corpus_key].dataType

@@ -50,7 +50,6 @@ s3a://) are rejected at build/load.
 from __future__ import annotations
 
 import heapq
-import json
 import math
 import os
 
@@ -59,11 +58,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..sources.swap import require_local_path, sibling_swap
-from .ann import append_tombstones
+from ..sources.swap import require_local_path
+from .ann_layer import (
+    ANNArtifact, check_tier, kmeans_cells, nearest_cells_udf,
+    prepare_vectors, replace_file, train_codebook,
+)
 
-_META = "_hnsw_meta.json"
-_TOMBS = "_hnsw_tombstones"
 _CENTROIDS = "_hnsw_centroids.npy"
 
 
@@ -376,33 +376,26 @@ def _graph_arrays(right: pd.DataFrame, vec_col: str):
     return vecs, levels, nbrs, entry, top
 
 
-def _prepare_vectors(df: DataFrame, vec_col: str, cols: list[str],
-                     metric: str) -> DataFrame:
-    """Shared build/append vector prep: null filter, FLOAT32 cast
-    (vector_base.h data_type — also guards appends from writing a
-    mixed-element-type parquet dataset, which breaks the vectorized
-    reader), and cosine ingest-normalization (zero vectors dropped,
-    vector_base.h:46)."""
-    work = df.select(*cols).where(F.col(vec_col).isNotNull())
-    work = work.withColumn(vec_col, F.col(vec_col).cast("array<float>"))
-    if metric == "cosine":
-        norm = F.sqrt(F.aggregate(
-            F.col(vec_col), F.lit(0.0),
-            lambda a, x: a + x.cast("double") * x))
-        work = work.withColumn(
-            vec_col,
-            F.when(norm > 0, F.transform(
-                F.col(vec_col), lambda x: (x / norm).cast("float"))))
-        work = work.where(F.col(vec_col).isNotNull())
-    return work
+def _graph_rows(df: DataFrame, vec_col: str, key_col: str,
+                payload_cols, metric: str) -> DataFrame:
+    """Build/append input: key, FLOAT32 vector (vector_base.h data_type),
+    payloads, through the shared vector prep."""
+    return prepare_vectors(
+        df.select(key_col, F.col(vec_col).cast("array<float>").alias(vec_col),
+                  *payload_cols), vec_col, metric)
 
 
 # ---------------------------------------------------------------------------
 # public API
 # ---------------------------------------------------------------------------
 
-class HNSWIndex:
+class HNSWIndex(ANNArtifact):
     """Persisted per-segment HNSW graphs over one vector column."""
+
+    _META = "_hnsw_meta.json"
+    _FORMAT = "hnsw-index-v1"
+    _TOMBS = "_hnsw_tombstones"
+    _TOMB_GEN = "__tgen"
 
     def __init__(self, spark: SparkSession, path: str, vec_col: str,
                  key_col: str, metric: str, m: int, ef_construction: int,
@@ -505,37 +498,24 @@ class HNSWIndex:
         path = require_local_path(path, "HNSWIndex artifacts")
         if partitioner not in ("hash", "kmeans"):
             raise ValueError(f"unknown partitioner {partitioner!r}")
-        if quantize and (pq_m or _pq_codebook is not None):
-            raise ValueError("quantize and pq_m are mutually exclusive")
-        if pq_opq_iters and not pq_m:
-            raise ValueError("pq_opq_iters requires pq_m (OPQ rotates "
-                             "PQ codes — nothing to rotate without them)")
-        spark = df.sparkSession
-        work = _prepare_vectors(df, vec_col,
-                                [key_col, vec_col, *payload_cols], metric)
-        if pq_m and _pq_codebook is None:
-            # dim validation BEFORE the KMeans job — failing after a
-            # distributed clustering fit wastes it (the ann.py rule)
-            probe = work.select(F.size(F.col(vec_col))).first()
-            if probe is not None and probe[0] % pq_m:
-                raise ValueError(
-                    f"dim {probe[0]} not divisible by m={pq_m}")
-        if n_segments is None:
-            n = work.count()
-            if n == 0:
-                raise ValueError(
-                    "no indexable vectors (all null/zero) — an empty "
-                    "partitioned write would be unreadable later")
-            n_segments = max(1, -(-n // max_segment_rows))
-        elif work.isEmpty():
+        work = _graph_rows(df, vec_col, key_col, payload_cols, metric)
+        # BEFORE the KMeans job — failing after a distributed clustering
+        # fit wastes it
+        check_tier(work, vec_col, quantize, pq_m, pq_opq_iters)
+        n = work.count() if n_segments is None else int(not work.isEmpty())
+        if n == 0:
             raise ValueError(
                 "no indexable vectors (all null/zero) — an empty "
                 "partitioned write would be unreadable later")
+        if n_segments is None:
+            n_segments = max(1, -(-n // max_segment_rows))
         centroids, seg_map = None, None
         if partitioner == "kmeans" and n_segments > 1:
-            work, centroids, seg_map, n_segments = cls._kmeans_assign(
-                work, vec_col, n_segments, seed, max_segment_rows,
-                sample_fraction)
+            # spatially coherent segments: the IVF list recipe
+            work, centroids, seg_map = kmeans_cells(
+                work, vec_col, "__seg", n_segments, seed, sample_fraction,
+                max_segment_rows)
+            n_segments = sum(len(ids) for ids in seg_map)
         else:
             if partitioner == "kmeans":      # one segment: nothing to route
                 partitioner = "hash"
@@ -543,91 +523,19 @@ class HNSWIndex:
                 "__seg", F.pmod(F.xxhash64(F.col(key_col)),
                                 F.lit(n_segments)).cast("int"))
         codebook = _pq_codebook
-        if codebook is None and pq_m:
-            from ..functions.pq import PQCodebook
-
-            if pq_opq_iters:
-                # OPQ (Ge et al.): learned rotation, same code bytes,
-                # better recall on correlated embeddings — IVF parity
-                codebook = PQCodebook.train_opq(work, vec_col, m=pq_m,
-                                                seed=seed,
-                                                opq_iters=pq_opq_iters)
-            else:
-                codebook = PQCodebook.train(work, vec_col, m=pq_m,
-                                            seed=seed)
-        index = cls(spark, path, vec_col, key_col, metric, m,
+        if codebook is None:
+            codebook = train_codebook(work, vec_col, pq_m, pq_opq_iters, seed)
+        index = cls(df.sparkSession, path, vec_col, key_col, metric, m,
                     ef_construction, n_segments, seed,
                     payload_cols=tuple(payload_cols), gen=0,
                     quantized=quantize, partitioner=partitioner,
                     centroids=centroids, seg_map=seg_map, pq=codebook,
                     sample_fraction=sample_fraction)
         graph = index._build_segments(work, gen=0)
-        graph = index._quantize_storage(graph)
+        graph = index._encode(graph)
         graph.write.mode("overwrite").partitionBy("__seg").parquet(path)
         index._save_meta()
         return index
-
-    def _quantize_storage(self, graph: DataFrame) -> DataFrame:
-        """Apply the storage tier to a float graph frame: int8 struct
-        or PQ code bytes, both kept under the vec column's NAME so the
-        parquet layout is tier-agnostic."""
-        if self.quantized:
-            from ..functions.quantize import quantize_vector_expr
-
-            return graph.withColumn(
-                self.vec_col, quantize_vector_expr(F.col(self.vec_col)))
-        if self.pq is not None:
-            return graph.withColumn(
-                self.vec_col, self.pq.encode_udf()(F.col(self.vec_col)))
-        return graph
-
-    @staticmethod
-    def _kmeans_assign(work: DataFrame, vec_col: str, n_segments: int,
-                       seed: int, max_segment_rows: int,
-                       sample_fraction: float | None):
-        """Cluster rows into spatially coherent segments (the IVF list
-        recipe, ann.py): one KMeans fit (sample-bounded), assignment of
-        every row, and a deterministic hash-split of clusters whose
-        (summary-estimated) size exceeds ``max_segment_rows`` — targeting
-        ~75% fill so hash fluctuation stays under the numpy-graph memory
-        cap. Returns (assigned work, centroid matrix, cluster->physical
-        seg ids, total physical segments)."""
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feats = work.withColumn("__feat", array_to_vector(
-            F.col(vec_col).cast("array<double>")))
-        fit_on = feats.sample(sample_fraction, seed=seed) \
-            if sample_fraction else feats
-        model = KMeans(k=n_segments, seed=seed, maxIter=20,
-                       featuresCol="__feat",
-                       predictionCol="__seg").fit(fit_on)
-        assigned = (model.transform(feats).drop("__feat")
-                    .withColumn("__seg", F.col("__seg").cast("int")))
-        seg_map = [[c] for c in range(n_segments)]
-        sizes = [int(s) for s in model.summary.clusterSizes]
-        if sample_fraction:
-            sizes = [int(s / sample_fraction) for s in sizes]
-        nxt = n_segments
-        remap = F.col("__seg")
-        for c, cnt in enumerate(sizes):
-            if cnt <= max_segment_rows:
-                continue
-            s = max(2, -(-cnt // max(1, int(0.75 * max_segment_rows))))
-            ids = [c] + list(range(nxt, nxt + s - 1))
-            nxt += s - 1
-            seg_map[c] = ids
-            sub = F.pmod(F.xxhash64(F.col(vec_col)), F.lit(s))
-            remap = F.when(
-                F.col("__seg") == c,
-                F.element_at(F.array(*[F.lit(i) for i in ids]),
-                             sub.cast("int") + 1)).otherwise(remap)
-        if nxt > n_segments:
-            assigned = assigned.withColumn("__seg",
-                                           remap.cast("int"))
-        centroids = np.vstack([np.asarray(c)
-                               for c in model.clusterCenters()])
-        return assigned, centroids, seg_map, nxt
 
     def _graph_schema(self, work: DataFrame) -> T.StructType:
         fields = [T.StructField("__seg", T.IntegerType()),
@@ -674,12 +582,8 @@ class HNSWIndex:
         return work.groupBy("__seg").applyInPandas(build_seg, schema)
 
     # -- persistence ------------------------------------------------------
-    def _save_meta(self) -> None:
-        # versioned like the reference's RDB chunks
-        # (src/rdb_serialization.cc): load rejects a foreign tag with a
-        # versioned error instead of deserializing garbage
-        meta = {"format": "hnsw-index-v1",
-                "vec_col": self.vec_col, "key_col": self.key_col,
+    def _meta(self) -> dict:
+        return {"vec_col": self.vec_col, "key_col": self.key_col,
                 "metric": self.metric, "m": self.m,
                 "ef_construction": self.ef_construction,
                 "n_segments": self.n_segments, "seed": self.seed,
@@ -695,29 +599,20 @@ class HNSWIndex:
                 "seg_map": self.seg_map,
                 "pq": self.pq.to_json() if self.pq is not None else None,
                 "sample_fraction": self.sample_fraction}
+
+    def _save_meta(self, into: str | None = None) -> None:
         if self.centroids is not None:
-            np.save(os.path.join(self.path, _CENTROIDS),
-                    np.asarray(self.centroids, dtype=np.float64))
-        with open(os.path.join(self.path, _META), "w") as fh:
-            json.dump(meta, fh)
+            cents = np.asarray(self.centroids, dtype=np.float64)
+            replace_file(os.path.join(into or self.path, _CENTROIDS),
+                         lambda fh: np.save(fh, cents), mode="wb")
+        super()._save_meta(into)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "HNSWIndex":
-        path = require_local_path(path, "HNSWIndex artifacts")
-        with open(os.path.join(path, _META)) as fh:
-            meta = json.load(fh)
-        # pre-r10 artifacts carry no tag but the identical v1 layout
-        from ..artifact import check_format
-
-        check_format(meta, "hnsw-index-v1", path)
+        path, meta = cls._load_meta(path)
         cents = meta.get("centroids")
         if cents == _CENTROIDS:                    # binary sidecar form
             cents = np.load(os.path.join(path, _CENTROIDS))
-        pq = None
-        if meta.get("pq"):
-            from ..functions.pq import PQCodebook
-
-            pq = PQCodebook.from_json(meta["pq"])
         return cls(spark, path, meta["vec_col"], meta["key_col"],
                    meta["metric"], meta["m"], meta["ef_construction"],
                    meta["n_segments"], meta["seed"],
@@ -727,7 +622,7 @@ class HNSWIndex:
                    partitioner=meta.get("partitioner", "hash"),
                    centroids=(np.asarray(cents, dtype=np.float64)
                               if cents is not None else None),
-                   seg_map=meta.get("seg_map"), pq=pq,
+                   seg_map=meta.get("seg_map"), pq=meta["pq"],
                    sample_fraction=meta.get("sample_fraction"))
 
     # -- reads ------------------------------------------------------------
@@ -735,51 +630,12 @@ class HNSWIndex:
         return self.spark.read.parquet(self.path)
 
     def _tomb_path(self) -> str:
-        return os.path.join(self.path, _TOMBS)
-
-    def _tombstones(self) -> DataFrame | None:
-        if not os.path.isdir(self._tomb_path()):
-            return None
-        return self.spark.read.parquet(self._tomb_path())
-
-    def _with_alive(self, df: DataFrame) -> DataFrame:
-        """Mark each row __alive: dead iff a tombstone for its key exists
-        at gen >= the row's own gen (later appends re-insert). One
-        broadcast join against the tiny tombstone table — the graph is
-        never rewritten, exactly hnswlib's markDelete economics."""
-        tombs = self._tombstones()
-        if tombs is None:
-            return df.withColumn("__alive", F.lit(True))
-        t = (tombs.groupBy(F.col(self.key_col).alias("__tkey"))
-                  .agg(F.max("__tgen").alias("__tgen")))
-        return (df.join(F.broadcast(t),
-                        df[self.key_col] == F.col("__tkey"), "left")
-                  .withColumn("__alive", F.col("__tgen").isNull()
-                              | (F.col("__tgen") < F.col("__gen")))
-                  .drop("__tkey", "__tgen"))
-
-    def _dequantized(self, df: DataFrame) -> DataFrame:
-        if self.quantized:
-            from ..functions.quantize import dequantize_vector_expr
-
-            return df.withColumn(
-                self.vec_col,
-                dequantize_vector_expr(F.col(self.vec_col))
-                .cast("array<float>"))
-        if self.pq is not None:
-            # JVM reconstruction from code bytes (broadcast codebook)
-            df = df.withColumnRenamed(self.vec_col, "__pqcode")
-            out = self.pq.attach_decode(df, self.vec_col,
-                                        code_col="__pqcode")
-            return out.withColumn(
-                self.vec_col, F.col(self.vec_col).cast("array<float>"))
-        return df
+        return self._tomb_dir
 
     def scan_raw(self) -> DataFrame:
         """Live rows with original columns (key, vector, payloads);
         quantized storage is dequantized on read (JVM expression)."""
-        df = self._with_alive(self._read()).where(F.col("__alive"))
-        return self._dequantized(df).select(
+        return self._decode(self._live(self._read())).select(
             self.key_col, self.vec_col, *self.payload_cols)
 
     # -- mutations ----------------------------------------------------------
@@ -791,30 +647,24 @@ class HNSWIndex:
         Appended segments are hash-assigned and therefore NOT routable
         (every routed search still probes them in full); compact()
         re-clusters them back under the centroids."""
-        self.gen += 1
-        work = _prepare_vectors(
-            df, self.vec_col,
-            [self.key_col, self.vec_col, *self.payload_cols], self.metric)
+        work = _graph_rows(df, self.vec_col, self.key_col,
+                           self.payload_cols, self.metric)
         base = self.n_segments
         work = work.withColumn(
             "__seg", (F.lit(base) + F.pmod(F.xxhash64(F.col(self.key_col)),
                                            F.lit(n_new_segments))).cast("int"))
-        graph = self._build_segments(work, gen=self.gen)
-        # same storage tier as the build (int8 expr or the FROZEN PQ
-        # codebook — the IVF append contract)
-        graph = self._quantize_storage(graph)
-        graph.write.mode("append").partitionBy("__seg").parquet(self.path)
-        self.n_segments = base + n_new_segments
-        self._save_meta()
+        with self._generation() as gen:
+            # same storage tier as the build (int8 expr or the FROZEN PQ
+            # codebook — the IVF append contract)
+            self._append_rows(
+                self._encode(self._build_segments(work, gen=gen)), "__seg")
+            self.n_segments = base + n_new_segments
 
     def delete(self, keys) -> None:
         """Generation tombstones; the graphs keep the nodes (they still
         route traversal, like hnswlib's soft deletes) but search masks
         them out of results."""
-        self.gen += 1
-        append_tombstones(self.spark, self.path, self._tomb_path(),
-                          self.key_col, keys, "__tgen", self.gen)
-        self._save_meta()
+        self._delete(keys, self.key_col)
 
     def upsert(self, df: DataFrame, n_new_segments: int = 1) -> None:
         """Replace-by-key: tombstone the incoming keys, then append the
@@ -841,7 +691,9 @@ class HNSWIndex:
         n_seg = (len(self.seg_map)
                  if self.partitioner == "kmeans" and self.seg_map
                  else None)
-        rebuilt = HNSWIndex.build(
+        # re-clustering folds appended (non-routable) segments back
+        # under fresh centroids — routability is fully restored
+        self._swap_in(HNSWIndex.build(
             live, staging, vec_col=self.vec_col, key_col=self.key_col,
             metric=self.metric, m=self.m,
             ef_construction=self.ef_construction,
@@ -849,16 +701,7 @@ class HNSWIndex:
             seed=self.seed, payload_cols=self.payload_cols,
             quantize=self.quantized, partitioner=self.partitioner,
             _pq_codebook=self.pq,
-            sample_fraction=self.sample_fraction)
-        sibling_swap(self.path, staging)
-        self.n_segments = rebuilt.n_segments
-        # re-clustering folds appended (non-routable) segments back
-        # under fresh centroids — routability is fully restored
-        self.partitioner = rebuilt.partitioner
-        self.centroids = rebuilt.centroids
-        self.seg_map = rebuilt.seg_map
-        self.gen = 0
-        self._save_meta()
+            sample_fraction=self.sample_fraction))
 
     # -- search -------------------------------------------------------------
     def search(self, qvec: list[float], k: int = 10, ef: int = 64,
@@ -875,43 +718,6 @@ class HNSWIndex:
                             query_key="__qid",
                             route_segments=route_segments)
         return out.select(self.key_col, F.col("distance").alias("__score"))
-
-
-def _route_queries(qside: DataFrame, index: HNSWIndex,
-                   r: int) -> DataFrame:
-    """Assign each query its ``r`` nearest segment centroids (one Arrow
-    matmul against the broadcast centroid matrix — the IVF probe_lists
-    recipe) expanded to physical sub-segments, PLUS every non-routable
-    segment (post-build appends), exploded to (query, __seg) rows."""
-    cents = index.centroids
-    seg_map = index.seg_map
-    metric = index.metric
-    non_routable = sorted(set(range(index.n_segments))
-                          - index.routable_segments())
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe_segs(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        q = np.stack(vs.to_numpy()).astype(np.float64)
-        if metric == "cosine":
-            n = np.linalg.norm(q, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            q = q / n
-        # ALWAYS euclidean: segment membership was decided by euclidean
-        # KMeans (on ingest-normalized vectors for cosine), so routing
-        # must use the SAME rule — a dot-product ranking against the
-        # non-unit centroids can send a corpus member's own vector away
-        # from its own segment (centroid norms skew argmax dot)
-        d = ((q * q).sum(1)[:, None] - 2.0 * (q @ cents.T)
-             + (cents * cents).sum(1)[None, :])
-        idx = np.argsort(d, axis=1)[:, :r]
-        return pd.Series([
-            np.array([p for c in row for p in seg_map[c]]
-                     + non_routable, dtype="int32")
-            for row in idx])
-
-    return qside.withColumn("__seg", F.explode(probe_segs(F.col("__qvec"))))
 
 
 def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,
@@ -982,9 +788,17 @@ def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,
         # query frame (sample(), rand()-derived) re-evaluated per job
         # could route a query to a segment the scan was pruned away
         # from, silently dropping its results. Spark's ContextCleaner
-        # unpersists the block once the frame is unreferenced.
-        probed = _route_queries(qside, index,
-                                int(route_segments)).persist()
+        # unpersists the block once the frame is unreferenced. Each query
+        # probes its r nearest segment centroids (the IVF probe recipe),
+        # expanded to physical sub-segments, plus every non-routable
+        # segment (post-build appends).
+        non_routable = sorted(set(range(index.n_segments))
+                              - index.routable_segments())
+        probe_segs = nearest_cells_udf(index.centroids, int(route_segments),
+                                       index.metric, index.seg_map,
+                                       always=non_routable)
+        probed = qside.withColumn(
+            "__seg", F.explode(probe_segs(F.col("__qvec")))).persist()
     else:
         if route_segments is not None and index.centroids is None:
             raise ValueError(
@@ -998,7 +812,7 @@ def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,
 
     from pyspark.sql import Column
 
-    graph = index._dequantized(index._with_alive(index._read()))
+    graph = index._decode(index._with_alive(index._read()))
     if routed:
         # partition-prune the graph scan to the probed-segment union —
         # a driver-side distinct of at most n_segments ints (the only
