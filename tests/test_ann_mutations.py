@@ -202,12 +202,13 @@ def test_engine_ann_mutates_by_document_key(spark, emb, tmp_path):
     ivf = e.ft_build_ann("mut_emb", "embedding",
                          str(tmp_path / "ann"), n_lists=8)
     q = [round(math.sin(i + 1), 6) for i in range(64)]
-    before = e.ft_search("mut_emb", "*=>[KNN 5 @embedding $v]",
-                         params={"v": q}, limit=(0, 5), ann_nprobe=8)
+    # EF_RUNTIME 40 at k 5 probes all 8 lists
+    before = e.ft_search("mut_emb", "*=>[KNN 5 @embedding $v EF_RUNTIME 40]",
+                         params={"v": q}, limit=(0, 5))
     top_key = before.first()["__key"]
     ivf.delete([top_key])
-    after = e.ft_search("mut_emb", "*=>[KNN 5 @embedding $v]",
-                        params={"v": q}, limit=(0, 5), ann_nprobe=8)
+    after = e.ft_search("mut_emb", "*=>[KNN 5 @embedding $v EF_RUNTIME 40]",
+                        params={"v": q}, limit=(0, 5))
     keys = [r["__key"] for r in after.collect()]
     assert top_key not in keys and len(keys) == 5
 

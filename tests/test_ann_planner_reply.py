@@ -33,13 +33,14 @@ def _ids(df):
 def test_ann_path_matches_exact_at_full_probe(eng):
     exact = eng.ft_search("emb", "*=>[KNN 10 @embedding $v]",
                           params={"v": QVEC}, limit=(0, 10))
-    ann = eng.ft_search("emb", "*=>[KNN 10 @embedding $v]",
-                        params={"v": QVEC}, limit=(0, 10), ann_nprobe=8)
+    # EF_RUNTIME 80 at k 10 probes all 8 lists
+    ann = eng.ft_search("emb", "*=>[KNN 10 @embedding $v EF_RUNTIME 80]",
+                        params={"v": QVEC}, limit=(0, 10))
     assert _ids(ann) == _ids(exact)
 
 
 def test_hybrid_prefilter_exact_without_nprobe(eng):
-    """Hybrid KNN with no nprobe budget takes pre-filter exact."""
+    """Hybrid KNN with no EF_RUNTIME takes pre-filter exact."""
     out = eng.ft_search("emb", "@label:[3 5]=>[KNN 5 @embedding $v]",
                         params={"v": QVEC}, limit=(0, 5))
     rows = out.collect()
@@ -47,25 +48,27 @@ def test_hybrid_prefilter_exact_without_nprobe(eng):
 
 
 def test_hybrid_inline_filter_with_nprobe(eng):
-    """Hybrid KNN with an nprobe budget runs the predicate inside the
-    probed lists (the reference's inline-filtering branch); full probe
-    makes it equal to pre-filter exact."""
+    """Hybrid KNN with an EF_RUNTIME probe budget runs the predicate
+    inside the probed lists (the reference's inline-filtering branch);
+    full probe makes it equal to pre-filter exact."""
     exact = eng.ft_search("emb", "@label:[3 5]=>[KNN 5 @embedding $v]",
                           params={"v": QVEC}, limit=(0, 5))
-    inline = eng.ft_search("emb", "@label:[3 5]=>[KNN 5 @embedding $v]",
-                           params={"v": QVEC}, limit=(0, 5), ann_nprobe=8)
+    inline = eng.ft_search(
+        "emb", "@label:[3 5]=>[KNN 5 @embedding $v EF_RUNTIME 40]",
+        params={"v": QVEC}, limit=(0, 5))
     assert _ids(inline) == _ids(exact)
     # partial probe: still only matching rows, possibly fewer than k
-    part = eng.ft_search("emb", "@label:[3 5]=>[KNN 5 @embedding $v]",
-                         params={"v": QVEC}, limit=(0, 5), ann_nprobe=1)
+    part = eng.ft_search(
+        "emb", "@label:[3 5]=>[KNN 5 @embedding $v EF_RUNTIME 5]",
+        params={"v": QVEC}, limit=(0, 5))
     assert all(3 <= r["label"] <= 5 for r in part.collect())
 
 
 def test_ann_partial_probe_plan_prunes(eng):
-    # nprobe=1 scans one list only — may return fewer than k (the probed
-    # cell can be small); never more, and all scores valid
-    df = eng.ft_search("emb", "*=>[KNN 5 @embedding $v]",
-                       params={"v": QVEC}, limit=(0, 5), ann_nprobe=1)
+    # EF_RUNTIME 5 at k 5 scans one list only — may return fewer than k
+    # (the probed cell can be small); never more, and all scores valid
+    df = eng.ft_search("emb", "*=>[KNN 5 @embedding $v EF_RUNTIME 5]",
+                       params={"v": QVEC}, limit=(0, 5))
     rows = df.collect()
     assert 1 <= len(rows) <= 5
     assert all(r["__embedding_score"] >= 0 for r in rows)
@@ -126,7 +129,7 @@ def test_search_reply_total_is_single_job(eng, spark):
 
 def test_ef_runtime_maps_to_nprobe(eng):
     """EF_RUNTIME (the reference's HNSW recall dial) selects the IVF probe
-    budget when no explicit ann_nprobe is given: ef/k lists, clamped."""
+    budget: ef/k lists, clamped."""
     exact = eng.ft_search("emb", "*=>[KNN 10 @embedding $v]",
                           params={"v": QVEC}, limit=(0, 10))
     # ef = 80, k = 10 -> 8 probes == n_lists -> identical to exact

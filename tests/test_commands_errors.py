@@ -112,6 +112,8 @@ UNDERCOUNT_CASES = [
     ["FT.SEARCH", "ix", "*", "SLOP", "close"],
     # DIALECT non-integer
     ["FT.SEARCH", "ix", "*", "DIALECT", "two"],
+    # DIALECT out of range: FT.EXPLAIN validates it like FT.SEARCH
+    ["FT.EXPLAIN", "ix", "*", "DIALECT", "9"],
 ]
 
 

@@ -265,19 +265,23 @@ def test_query_guard_configurables(spark):
                 key_column="p_partkey")
     e.ft_create("limv", emb, [VF("embedding", dim=64)], key_column="vec_id")
 
-    with pytest.raises(QuerySyntaxError, match="query-string-bytes"):
-        e.ft_search("lim", "@p_brand:{" + "x" * 300 + "}")
-    with pytest.raises(QuerySyntaxError, match="query-string-depth"):
+    # FT.SEARCH and FT.AGGREGATE share the search phase, so both reject
+    over = [
+        ("query-string-bytes", "lim", "@p_brand:{" + "x" * 300 + "}", None),
         # alternating AND/OR nests the predicate tree 4 deep (plain parens
         # collapse at parse time, as in the reference's recursion counting)
-        e.ft_search("lim", "@p_size:[1 2] (@p_size:[1 2] | "
-                           "(@p_size:[3 4] @p_size:[5 6]))")
-    with pytest.raises(QuerySyntaxError, match="terms-count"):
-        e.ft_search("lim", " | ".join("@p_size:[%d %d]" % (i, i + 1)
-                                      for i in range(6)))
-    with pytest.raises(QuerySyntaxError, match="max-vector-knn"):
-        e.ft_search("limv", "*=>[KNN 9 @embedding $v]",
-                    params={"v": [0.0] * 64})
+        ("query-string-depth", "lim", "@p_size:[1 2] (@p_size:[1 2] | "
+                                      "(@p_size:[3 4] @p_size:[5 6]))", None),
+        ("terms-count", "lim", " | ".join("@p_size:[%d %d]" % (i, i + 1)
+                                          for i in range(6)), None),
+        ("max-vector-knn", "limv", "*=>[KNN 9 @embedding $v]",
+         {"v": [0.0] * 64}),
+    ]
+    for guard, index, query, params in over:
+        with pytest.raises(QuerySyntaxError, match=guard):
+            e.ft_search(index, query, params=params)
+        with pytest.raises(QuerySyntaxError, match=guard):
+            e.ft_aggregate(index, query, params=params)
     # within limits: all four forms pass
     assert e.ft_search("lim", "@p_size:[1 10]", count_only=True) >= 0
     assert e.ft_search("limv", "*=>[KNN 8 @embedding $v]",
@@ -330,7 +334,9 @@ def test_text_weight_pinned_to_one(spark):
 
 def test_timeout_cancels_executing_search(spark):
     """TIMEOUT on an executing (count_only / reply) call cancels the job
-    group and raises SearchTimeoutError; a generous budget succeeds."""
+    group and raises SearchTimeoutError; a generous budget succeeds.
+    FT.AGGREGATE's TIMEOUT bounds the reply that executes its frame."""
+    from valkey_search_spark import CommandDispatcher
     from valkey_search_spark.errors import SearchTimeoutError
 
     e = SearchEngine(spark)
@@ -344,6 +350,12 @@ def test_timeout_cancels_executing_search(spark):
         e.ft_search("tmo", "%windote%", count_only=True, timeout_ms=1)
     # the engine stays usable after a cancelled group
     assert e.ft_search("tmo", "window", count_only=True) >= 0
+    d = CommandDispatcher(e, source=None)
+    with pytest.raises(SearchTimeoutError):
+        d.execute_reply(["FT.AGGREGATE", "tmo", "%windote%", "TIMEOUT", "1"])
+    reply = d.execute_reply(["FT.AGGREGATE", "tmo", "%windote%",
+                             "TIMEOUT", "120000"])
+    assert reply[0] == len(reply) - 1
 
 
 def test_genuine_error_mentioning_cancel_is_not_a_timeout(spark):

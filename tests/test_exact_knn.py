@@ -100,7 +100,8 @@ def test_null_element_vector_is_untracked(eng, tmp_path):
     assert all(vecs[f"g{i}"] is not None for i in range(8))
     eng.ft_build_ann("ivf", "v", str(tmp_path / "ivf"), algorithm="ivf",
                      n_lists=2)
-    rows = eng.ft_search("ivf", "*=>[KNN 20 @v $q]",
+    # EF_RUNTIME 40 at k 20 probes both lists
+    rows = eng.ft_search("ivf", "*=>[KNN 20 @v $q EF_RUNTIME 40]",
                          params={"q": [float(x) for x in GOOD[0]]},
-                         ann_nprobe=2, limit=(0, 20)).collect()
+                         limit=(0, 20)).collect()
     assert sorted(r["__key"] for r in rows) == [f"g{i}" for i in range(8)]

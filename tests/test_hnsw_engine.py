@@ -1,5 +1,5 @@
 """Engine routing for the segment-graph HNSW artifact:
-ft_build_ann(algorithm="hnsw") + ann_ef / EF_RUNTIME dials
+ft_build_ann(algorithm="hnsw") + the KNN clause's EF_RUNTIME beam
 (/root/reference/src/indexes/vector_hnsw.cc ef_runtime;
 ft.create.md M / EF_CONSTRUCTION)."""
 
@@ -17,6 +17,8 @@ from valkey_search_spark.errors import QuerySyntaxError
 from .conftest import load
 
 QVEC = [round(math.sin(i + 1), 6) for i in range(64)]
+# a beam wider than any segment explores every node: exact results
+FULL_EXPLORE = "*=>[KNN {k} @embedding $v EF_RUNTIME 1000000 AS dist]"
 
 
 @pytest.fixture(scope="module")
@@ -46,8 +48,7 @@ def _brute(rows, k, pred=lambda r: True):
 
 def test_matchall_ann_ef_full_explore_exact(eng):
     e, emb = eng
-    df = e.ft_search("hemb", "*=>[KNN 5 @embedding $v AS dist]",
-                     params={"v": QVEC}, ann_ef=10 ** 6)
+    df = e.ft_search("hemb", FULL_EXPLORE.format(k=5), params={"v": QVEC})
     got = [r["vec_id"] for r in df.orderBy("dist", "vec_id").collect()]
     assert got == _brute(emb.collect(), 5)
 
@@ -66,24 +67,37 @@ def test_ef_runtime_routes_to_graph_beam(eng):
     assert ex["knn"]["mode"] == "inline"
 
 
-def test_planner_defaults_beam_for_loose_hybrid(eng):
+def test_planner_defaults_beam_for_loose_hybrid(eng, monkeypatch):
+    from valkey_search_spark.plans.predicate_translator import (
+        PredicateTranslator,
+    )
+
     e, emb = eng
-    # loose filter + no dials: the planner picks the inline graph path
+    # loose filter + no EF_RUNTIME: the planner picks the inline graph path
     ex = e.ft_explain("hemb", "@label:[0 9]=>[KNN 5 @embedding $v AS dist]",
                       params={"v": QVEC})
     assert ex["knn"]["mode"] == "inline"
+    # the planner's probe and the inline filter share ONE translation
+    calls = []
+    orig = PredicateTranslator.translate
+
+    def counting(self, *a, **k):
+        calls.append(1)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(PredicateTranslator, "translate", counting)
     n = e.ft_search("hemb", "@label:[0 9]=>[KNN 5 @embedding $v AS dist]",
                     params={"v": QVEC}, count_only=True)
     assert n == 5
+    assert len(calls) == 1
 
 
 def test_count_only_and_return_projection(eng):
     e, emb = eng
-    n = e.ft_search("hemb", "*=>[KNN 7 @embedding $v AS dist]",
-                    params={"v": QVEC}, ann_ef=10 ** 6, count_only=True)
+    n = e.ft_search("hemb", FULL_EXPLORE.format(k=7), params={"v": QVEC},
+                    count_only=True)
     assert n == 7
-    df = e.ft_search("hemb", "*=>[KNN 3 @embedding $v AS dist]",
-                     params={"v": QVEC}, ann_ef=10 ** 6,
+    df = e.ft_search("hemb", FULL_EXPLORE.format(k=3), params={"v": QVEC},
                      return_fields=["label"])
     rows = df.collect()
     assert len(rows) == 3 and set(df.columns) >= {"label", "dist"}
@@ -114,8 +128,7 @@ def test_delete_by_document_key_masks_engine_results(spark, sf_dir,
                          algorithm="hnsw", max_segment_rows=60)
     winner = _brute(emb.collect(), 1)[0]
     art.delete([str(winner)])
-    df = e.ft_search("hmut", "*=>[KNN 5 @embedding $v AS dist]",
-                     params={"v": QVEC}, ann_ef=10 ** 6)
+    df = e.ft_search("hmut", FULL_EXPLORE.format(k=5), params={"v": QVEC})
     got = [r["vec_id"] for r in df.orderBy("dist", "vec_id").collect()]
     assert winner not in got
     assert got == [v for v in _brute(emb.collect(), 6) if v != winner][:5]
@@ -128,13 +141,6 @@ def test_unknown_algorithm_rejected(eng, tmp_path):
                        algorithm="faiss")
 
 
-def test_wrong_dial_for_artifact_kind_raises(eng):
-    e, _ = eng
-    with pytest.raises(QuerySyntaxError):
-        e.ft_search("hemb", "*=>[KNN 5 @embedding $v AS dist]",
-                    params={"v": QVEC}, ann_nprobe=4)
-
-
 def test_graph_payload_excludes_raw_columns(eng):
     # the artifact persists only predicate-visible derived columns —
     # raw source columns / the corpus text never duplicate into it
@@ -143,3 +149,23 @@ def test_graph_payload_excludes_raw_columns(eng):
     assert all(c.startswith(("_t_", "_n_", "_x_", "_s_", "_sp_", "__fm_"))
                for c in art.payload_cols)
     assert any(c == "_n_label" for c in art.payload_cols)
+
+
+def test_ft_info_reports_partitioner_and_routability(spark, tmp_path):
+    # a kmeans-partitioned artifact reports its partitioner, and every
+    # segment is routable until an append adds unrouted ones
+    rng = np.random.RandomState(5)
+    rows = [(i, [float(x) for x in 80.0 * np.eye(8)[i % 4] + rng.randn(8)])
+            for i in range(120)]
+    df = spark.createDataFrame(rows, "doc_id bigint, embedding array<float>")
+    e = SearchEngine(spark)
+    e.ft_create("vr", df, [VectorField("embedding", dim=8, metric="l2")],
+                key_column="doc_id")
+    e.ft_build_ann("vr", "embedding", str(tmp_path / "art"),
+                   algorithm="hnsw", partitioner="kmeans", n_segments=4,
+                   max_segment_rows=10_000, m=8, ef_construction=40)
+    vec = next(a for a in e.catalog.info("vr")["attributes"]
+               if a["attribute"] == "embedding")
+    ann = vec["index"]["ann"]
+    assert ann["partitioner"] == "kmeans"
+    assert ann["routable_segments"] == ann["segments"]

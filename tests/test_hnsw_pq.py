@@ -136,9 +136,9 @@ def test_engine_builds_pq_graph_artifact(spark, tmp_path):
                    algorithm="hnsw", pq_m=8, m=6, ef_construction=32,
                    n_segments=2, max_segment_rows=10_000)
     qv = [float(x) for x in df.first()["embedding"]]
-    rows = e.ft_search("pqv", "*=>[KNN 3 @embedding $v AS d]",
-                       params={"v": qv}, ann_ef=10**6,
-                       limit=(0, 3)).collect()
+    rows = e.ft_search("pqv",
+                       "*=>[KNN 3 @embedding $v EF_RUNTIME 1000000 AS d]",
+                       params={"v": qv}, limit=(0, 3)).collect()
     assert len(rows) == 3
     info = e.catalog.info("pqv")
     ann = next(a for a in info["attributes"]

@@ -94,6 +94,26 @@ def test_routed_graph_scan_is_partition_pruned(spark, kidx):
     assert seg_rows == 3
 
 
+def test_routed_hybrid_inline_filter(spark, tmp_path):
+    # routing composes with an inline payload filter: r=1 returns the
+    # same filtered hits as the unrouted full explore, all matching
+    df = _clustered_df(spark, n_clusters=4, per=30).withColumn(
+        "grp", F.concat(F.lit("c"),
+                        F.floor(F.col("vec_id") / 30).cast("string")))
+    idx = HNSWIndex.build(df, str(tmp_path / "pf"), metric="l2", m=8,
+                          ef_construction=40, n_segments=4,
+                          partitioner="kmeans", max_segment_rows=10_000,
+                          payload_cols=("grp",))
+    q = df.where(F.col("vec_id") == 35) \
+          .select(F.col("vec_id").alias("qid"), "embedding")
+    routed = knn_join_hnsw(q, idx, k=3, ef=10**6, route_segments=1,
+                           where="grp = 'c1'")
+    full = knn_join_hnsw(q, idx, k=3, ef=10**6, where="grp = 'c1'")
+    got = sorted(r["vec_id"] for r in routed.collect())
+    assert got == sorted(r["vec_id"] for r in full.collect())
+    assert len(got) == 3 and all(v // 30 == 1 for v in got)
+
+
 def test_hash_index_rejects_routing(spark, tmp_path):
     df = _clustered_df(spark, n_clusters=2, per=20)
     idx = HNSWIndex.build(df, str(tmp_path / "h"), metric="l2", m=4,

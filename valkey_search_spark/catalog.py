@@ -245,6 +245,7 @@ class IndexSchema:
         self._by_attr: dict[str, FieldDef] = {}
         self._cached: DataFrame | None = None
         self.ingest_store = None        # live-ingest link (attach_store)
+        self._ann: dict = {}            # attr -> ANN artifact (ft_build_ann)
         for f in self.fields:
             self._by_attr[f.attr] = f
 
@@ -489,7 +490,7 @@ class Catalog:
                 # live ANN artifact state (ft_build_ann): the mutation
                 # generation and layout mirror the reference's per-index
                 # observables (its HNSW reports node/level counts)
-                ann = getattr(s, "_ann", {}).get(f.attr)
+                ann = s._ann.get(f.attr)
                 if ann is not None and hasattr(ann, "n_lists"):
                     a["index"]["ann"] = {
                         "n_lists": ann.n_lists,

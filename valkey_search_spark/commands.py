@@ -222,7 +222,7 @@ def _parse_schema_fields(a: _Args, on_json: str | None,
                     "EF_CONSTRUCTION", attrs.pop("EF_CONSTRUCTION"))
             # accepted-but-inert build knobs (capacity pre-allocation
             # has no parquet analogue; EF_RUNTIME is a query-time dial
-            # passed per-search as ann_ef)
+            # given in the KNN clause)
             attrs.pop("INITIAL_CAP", None)
             attrs.pop("EF_RUNTIME", None)
             if attrs:
@@ -444,6 +444,7 @@ class CommandDispatcher:
         query = a.next("query")
         kw: dict = {}
         params: dict = {}
+        timeout_ms = None
         stage_toks: list[str] = []
         stage_kws = {"LOAD", "APPLY", "FILTER", "GROUPBY", "REDUCE",
                      "SORTBY", "LIMIT", "ADDSCORES"}
@@ -462,8 +463,9 @@ class CommandDispatcher:
                 a.next("DIALECT")
                 kw["dialect"] = a.next_int("DIALECT")
             elif opt == "TIMEOUT":
+                # the frame is lazy: TIMEOUT bounds the reply executing it
                 a.next("TIMEOUT")
-                kw["timeout_ms"] = a.next_int("TIMEOUT")
+                timeout_ms = a.next_int("TIMEOUT")
             elif opt == "VERBATIM":
                 a.next("VERBATIM")
                 kw["verbatim"] = True
@@ -486,7 +488,8 @@ class CommandDispatcher:
         if reply:
             from .operators.reply import aggregate_reply
 
-            return aggregate_reply(out)
+            return self.engine._run_with_timeout(
+                lambda: aggregate_reply(out), timeout_ms)
         return out
 
     # -- the rest -----------------------------------------------------------
@@ -519,6 +522,7 @@ class CommandDispatcher:
         index = a.next("index name")
         query = a.next("query")
         params: dict = {}
+        dialect = 2
         while not a.done():
             opt = a.next("option").upper()
             if opt == "PARAMS":
@@ -530,9 +534,9 @@ class CommandDispatcher:
                     k = a.next("param name")
                     params[k] = a.next("param value", raw=True)
             elif opt == "DIALECT":
-                a.next_int("DIALECT")
+                dialect = a.next_int("DIALECT")
             else:
                 raise QuerySyntaxError(
                     f"unknown FT.EXPLAIN argument {opt!r}")
         return self.engine.ft_explain(index, query,
-                                      params=params or None)
+                                      params=params or None, dialect=dialect)

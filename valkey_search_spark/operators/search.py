@@ -3,16 +3,21 @@ declarative DataFrame plan.
 
 The reference's multi-stage lifecycle (parse on main thread, predicate
 -> index-fetcher planning, reader-pool execution, content resolution —
-SURVEY.md §3.1) collapses here to: parse -> build plan -> Catalyst. Its
-planner heuristics (min-cardinality AND child, pre-filter-vs-inline KNN,
-/root/reference/src/query/planner.cc:21-46) are mostly Catalyst's job;
+SURVEY.md §3.1) collapses here to: parse -> build plan -> Catalyst.
+FT.SEARCH, FT.AGGREGATE and FT.EXPLAIN share one search phase
+(``SearchEngine._prepare``, the reference's one ``SearchParameters``
+record), whose result each call passes on by argument. Its planner
+heuristics (min-cardinality AND child, pre-filter-vs-inline KNN,
+the reference's src/query/planner.cc:21-46) are mostly Catalyst's job;
 the one surviving custom decision — pre-filter exact vs inline-filtered
-ANN — lives in plans/planner.py and the chooser below.
+ANN — lives in plans/planner.py and ``_ft_search``.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -24,7 +29,9 @@ from ..parser.ast import (
     query_operation_flags,
 )
 from ..parser.filter_parser import parse_query
-from ..plans.predicate_translator import PredicateTranslator, QueryLimits
+from ..plans.predicate_translator import (
+    PredicateTranslator, QueryLimits, predicate_depth_and_count,
+)
 
 # cap applied when an explicitly-unbounded reply call (limit n = None)
 # still needs a physical limit for plan-shape reasons (see _finish).
@@ -42,6 +49,18 @@ class ReturnField:
 
     name: str
     alias: str | None = None
+
+
+class SearchRequest(NamedTuple):
+    """One request after the shared search phase (``_prepare``): the
+    index, the parsed query, its final predicate (after stopwords and
+    the SLOP/INORDER upgrade) and the translator that compiles it. Each
+    call holds its own and passes it on by argument."""
+
+    schema: IndexSchema
+    parsed: ParsedQuery
+    pred: object
+    translator: PredicateTranslator
 
 
 def _apply_predicate(df: DataFrame, translator: PredicateTranslator,
@@ -72,13 +91,9 @@ class SearchEngine:
         # (docs/topics/search-observables.md `query` + `latency` sections)
         from collections import Counter
 
-        self._metrics: "Counter[str]" = Counter()
-        # per-request parse state for the metrics classification —
-        # THREAD-LOCAL: concurrent ft_search calls (multi-client
-        # serving) must not classify each other's queries
         import threading
 
-        self._req = threading.local()
+        self._metrics: "Counter[str]" = Counter()
         self._metrics_lock = threading.Lock()
 
     def _count(self, key: str, n: int = 1) -> None:
@@ -153,15 +168,16 @@ class SearchEngine:
         (/root/reference/src/indexes/vector_hnsw.cc).
 
         ``algorithm="ivf"`` (default): parquet partitioned by centroid
-        list; ft_search probes it when ``ann_nprobe`` is given (or via
-        the EF_RUNTIME mapping). ``algorithm="hnsw"``: segment-local
+        list; ft_search probes ⌈ef/k⌉ lists of it for a query's
+        EF_RUNTIME. ``algorithm="hnsw"``: segment-local
         navigable-small-world graphs (operators/hnsw.py) — the
         reference's actual index shape — honoring the field's
         M / EF_CONSTRUCTION declaration; ft_search beams through it
-        when ``ann_ef`` or the query's EF_RUNTIME is given. Every
-        indexed column is persisted alongside the graph so hybrid
-        predicates evaluate inline, in-traversal, exactly like the
-        reference's filtered HNSW search.
+        with the query's EF_RUNTIME as the beam width. Either way, a
+        hybrid query without EF_RUNTIME on an HNSW field lets the
+        planner choose. Every indexed column is persisted alongside the
+        graph so hybrid predicates evaluate inline, in-traversal,
+        exactly like the reference's filtered HNSW search.
 
         The index key column rides along as the artifact's mutation key,
         so both artifact kinds support append/delete by document key
@@ -209,8 +225,6 @@ class SearchEngine:
         else:
             raise QuerySyntaxError(
                 f"unknown ANN algorithm `{algorithm}` (ivf | hnsw)")
-        if not hasattr(schema, "_ann"):
-            schema._ann = {}
         schema._ann[fdef.attr] = art
         return art
 
@@ -231,17 +245,11 @@ class SearchEngine:
             raise ValueError(
                 "ft_explain inspects a plan without executing; "
                 "count_only/_observe_total would run the query")
-        # _ft_search (not ft_search): an explain must not count as a
-        # served request — and the explaining flag suppresses the two
-        # strategy counters _ft_search itself bumps. The ANN-mode
-        # record rides the THREAD-LOCAL request state, so concurrent
-        # searches cannot misclassify this query (metric deltas would).
-        self._req.explaining = True
-        try:
-            df = self._ft_search(index, query, params=params, **kwargs)
-        finally:
-            self._req.explaining = False
-        parsed = self._req.parsed
+        # _ft_search (not ft_search): an explain is not a served
+        # request, so no INFO SEARCH counter moves
+        df, req, ann_mode = self._ft_search(index, query, params=params,
+                                            **kwargs)
+        parsed = req.parsed
         plan = df._jdf.queryExecution().executedPlan().toString()
         # plan toString truncates long scan lines: capture to the
         # closing bracket OR line end, and DROP a trailing fragment
@@ -255,10 +263,10 @@ class SearchEngine:
         knn = None
         if parsed.knn is not None:
             knn = {"attr": parsed.knn.attr, "k": parsed.knn.k,
-                   "mode": self._req.ann_mode}
+                   "mode": ann_mode}
         return {
             "predicate": repr(parsed.predicate),
-            "operations": sorted(query_operation_flags(self._req.pred)),
+            "operations": sorted(query_operation_flags(req.pred)),
             "knn": knn,
             "pushed_filters": pushed,
             "python_stages": len(_re.findall(
@@ -331,7 +339,7 @@ class SearchEngine:
     def info_search(self, compute_stats: bool = False) -> dict:
         """INFO SEARCH analogue (docs/topics/search-observables.md): the
         sections that exist in a batch engine. `query` counters classify
-        every ft_search call (nonvector / vector / hybrid, inline vs
+        successful ft_search calls (nonvector / vector / hybrid, inline vs
         pre-filtering); `latency` accumulates wall-time for EXECUTING
         calls only (count_only — lazy DataFrame returns are plans, not
         searches; their execution happens outside the engine and is not
@@ -348,8 +356,7 @@ class SearchEngine:
                 "successful_requests_count", "failure_requests_count",
                 "vector_requests_count", "nonvector_requests_count",
                 "hybrid_requests_count", "inline_filtering_requests_count",
-                "prefiltering_requests_count",
-                "routed_requests_count")},
+                "prefiltering_requests_count")},
             "latency": {k: int(m[k]) for k in (
                 "flat_vector_index_search_latency_usec",
                 "hnsw_vector_index_search_latency_usec")},
@@ -391,9 +398,6 @@ class SearchEngine:
         slop: int | None = None,
         inorder: bool = False,
         count_only: bool = False,
-        ann_nprobe: int | None = None,
-        ann_ef: int | None = None,
-        ann_route: int | None = None,
         dialect: int = 2,
         timeout_ms: int | None = None,
         withsortkeys: bool = False,
@@ -416,13 +420,11 @@ class SearchEngine:
         partial-results-on-timeout fanout modes have no single-engine
         analogue."""
         try:
-            out = self._ft_search(
+            out, req, ann_mode = self._ft_search(
                 index, query, params=params, limit=limit, sortby=sortby,
                 sortby_desc=sortby_desc, return_fields=return_fields,
                 nocontent=nocontent, verbatim=verbatim, slop=slop,
-                inorder=inorder, count_only=count_only,
-                ann_nprobe=ann_nprobe, ann_ef=ann_ef,
-                ann_route=ann_route, dialect=dialect,
+                inorder=inorder, count_only=count_only, dialect=dialect,
                 timeout_ms=timeout_ms, withsortkeys=withsortkeys,
                 _observe_total=_observe_total)
         except Exception:
@@ -434,20 +436,26 @@ class SearchEngine:
         self._count("successful_requests_count")
         # classify SUCCESSFUL requests (search-observables.md: nonvector =
         # exclusively non-vector; vector = any vector component; hybrid =
-        # vector + filter, a subset of vector) from the query _ft_search
-        # already parsed — no second parse; the predicate reflects
+        # vector + filter, a subset of vector) from the request _ft_search
+        # prepared — no second parse; the predicate reflects
         # preprocessing, so a pure-stopword filter classifies as nonhybrid
-        parsed = self._req.parsed
+        parsed = req.parsed
         if parsed.knn is None:
             self._count("nonvector_requests_count")
         else:
             self._count("vector_requests_count")
             if not isinstance(parsed.predicate, MatchAll):
                 self._count("hybrid_requests_count")
+        # filtering strategy: the predicate ran IN the index (probed IVF
+        # lists, or in-traversal on the graph) or before an exact scan
+        if ann_mode == "inline":
+            self._count("inline_filtering_requests_count")
+        elif ann_mode == "prefilter":
+            self._count("prefiltering_requests_count")
         # per-operation query_stats counters (search.cc:907-935
         # IncrementQueryOperationMetrics) — classified from the final
         # predicate, after the SLOP/INORDER proximity upgrade
-        ops = query_operation_flags(self._req.pred)
+        ops = query_operation_flags(req.pred)
         if "text" in ops:
             self._count("query_text_requests_cnt")
         for op, counter in (("numeric", "query_numeric_count"),
@@ -460,6 +468,64 @@ class SearchEngine:
             if op in ops:
                 self._count(counter)
         return out
+
+    def _prepare(self, index: str, query: str, params: dict | None,
+                 verbatim: bool, slop: int | None, inorder: bool,
+                 dialect: int, check_unused_params: bool = True,
+                 ) -> SearchRequest:
+        """The search phase FT.SEARCH, FT.AGGREGATE and FT.EXPLAIN share:
+        the DIALECT check, the query guards, KNN validation, the
+        stopword pass and the SLOP/INORDER upgrade."""
+        lim = self.limits
+        if dialect not in (1, 2, 3, 4):
+            raise QuerySyntaxError(f"invalid DIALECT {dialect}")
+        # pre-parse guard (search.cc:1071): query length in bytes
+        if len(query.encode("utf-8")) > lim.query_string_bytes:
+            raise QuerySyntaxError(
+                f"Query string exceeds maximum allowed size of "
+                f"{lim.query_string_bytes} bytes (query-string-bytes)")
+        schema = self.catalog.get(index)
+        parsed = parse_query(query, params,
+                             check_unused_params=check_unused_params)
+        # post-parse guards (filter_parser.cc:933 depth, :1046 node count;
+        # ft_search_parser.cc:36 max-vector-knn)
+        depth, nodes = predicate_depth_and_count(parsed.predicate)
+        if depth > lim.query_string_depth:
+            raise QuerySyntaxError(
+                f"Query nesting depth {depth} exceeds query-string-depth "
+                f"{lim.query_string_depth}")
+        if nodes > lim.query_string_terms_count:
+            raise QuerySyntaxError(
+                f"Query has {nodes} terms, exceeds query-string-terms-count "
+                f"{lim.query_string_terms_count}")
+        knn = parsed.knn
+        if knn is not None:
+            if knn.k > lim.max_vector_knn:
+                raise QuerySyntaxError(
+                    f"KNN k {knn.k} exceeds max-vector-knn "
+                    f"{lim.max_vector_knn}")
+            # the field must be VECTOR and the query vector must match
+            # its DIM — the reference rejects a query blob whose byte
+            # length isn't DIM*4 (vector_base.cc record validation).
+            # Without this, a wrong-dim vector silently nulls every
+            # distance and returns an EMPTY result instead of an error.
+            vf = schema.field(knn.attr)
+            if not isinstance(vf, VectorField):
+                raise QuerySyntaxError(f"KNN field `{knn.attr}` is not VECTOR")
+            if vf.dim and len(knn.vector) != vf.dim:
+                raise QuerySyntaxError(
+                    f"query vector has {len(knn.vector)} dimensions; field "
+                    f"`{knn.attr}` is DIM {vf.dim} (FLOAT32 blob must be "
+                    f"{4 * vf.dim} bytes)")
+        translator = PredicateTranslator(schema, verbatim=verbatim,
+                                         limits=lim)
+        # stopword pass BEFORE the SLOP/INORDER upgrade: a dropped term must
+        # not become a proximity slot (the reference drops it at parse, so
+        # proximity spans only the surviving terms)
+        parsed.predicate = translator.preprocess(parsed.predicate)
+        return SearchRequest(schema, parsed,
+                             self._maybe_proximity(parsed, slop, inorder),
+                             translator)
 
     def _ft_search(
         self,
@@ -475,262 +541,112 @@ class SearchEngine:
         slop: int | None = None,
         inorder: bool = False,
         count_only: bool = False,
-        ann_nprobe: int | None = None,
-        ann_ef: int | None = None,
-        ann_route: int | None = None,
         dialect: int = 2,
         timeout_ms: int | None = None,
         withsortkeys: bool = False,
         _observe_total=None,
     ):
+        """FT.SEARCH without the request counters. Returns (DataFrame or
+        count, the SearchRequest, the ANN mode): ``exact`` / ``prefilter``
+        for the exact scan without / with a filter, ``ann`` / ``inline``
+        for the ANN artifact without / with one, None for no KNN."""
         import time as _time
 
         _t0 = _time.perf_counter()
-        if dialect not in (1, 2, 3, 4):
-            raise QuerySyntaxError(f"invalid DIALECT {dialect}")
-        # pre-parse guard (search.cc:1071): query length in bytes
-        if len(query.encode("utf-8")) > self.limits.query_string_bytes:
-            raise QuerySyntaxError(
-                f"Query string exceeds maximum allowed size of "
-                f"{self.limits.query_string_bytes} bytes (query-string-bytes)")
-        schema = self.catalog.get(index)
-        parsed = parse_query(query, params)
-        self._req.parsed = parsed       # ft_search classifies from this
-        # post-parse guards (filter_parser.cc:933 depth, :1046 node count;
-        # ft_search_parser.cc:36 max-vector-knn)
-        from ..plans.predicate_translator import predicate_depth_and_count
-
-        depth, nodes = predicate_depth_and_count(parsed.predicate)
-        if depth > self.limits.query_string_depth:
-            raise QuerySyntaxError(
-                f"Query nesting depth {depth} exceeds query-string-depth "
-                f"{self.limits.query_string_depth}")
-        if nodes > self.limits.query_string_terms_count:
-            raise QuerySyntaxError(
-                f"Query has {nodes} terms, exceeds query-string-terms-count "
-                f"{self.limits.query_string_terms_count}")
-        if parsed.knn is not None and parsed.knn.k > self.limits.max_vector_knn:
-            raise QuerySyntaxError(
-                f"KNN k {parsed.knn.k} exceeds max-vector-knn "
-                f"{self.limits.max_vector_knn}")
-        if parsed.knn is not None:
-            # validated BEFORE any physical branch (the ANN-artifact
-            # paths below bypass _knn); ft_aggregate gets the same
-            # check through _knn itself
-            self._validate_knn(schema, parsed.knn)
-        translator = PredicateTranslator(schema, verbatim=verbatim,
-                                         limits=self.limits)
-        # stopword pass BEFORE the SLOP/INORDER upgrade: a dropped term must
-        # not become a proximity slot (the reference drops it at parse, so
-        # proximity spans only the surviving terms)
-        parsed.predicate = translator.preprocess(parsed.predicate)
-        pred = self._maybe_proximity(parsed, slop, inorder)
-        self._req.pred = pred       # post-SLOP/INORDER, for op counters
-        # thread-local ANN-strategy record for ft_explain (None = no
-        # vector clause); set at each physical-choice branch below
-        self._req.ann_mode = None
-        explaining = getattr(self._req, "explaining", False)
+        req = self._prepare(index, query, params, verbatim, slop, inorder,
+                            dialect)
+        schema, parsed, pred, translator = req
+        knn = parsed.knn
         match_all = isinstance(pred, MatchAll)
-
         # the field's ANN artifact (ft_build_ann), if any: an IVFIndex or
-        # a segment-graph HNSWIndex — the physical branches below differ
-        artifact = None
-        graph_art = False
-        if parsed.knn is not None:
-            artifact = getattr(schema, "_ann", {}).get(
-                schema.field(parsed.knn.attr).attr)
-            if artifact is not None:
-                from .hnsw import HNSWIndex as _HNSWIndex
+        # a segment-graph HNSWIndex
+        artifact = (None if knn is None
+                    else schema._ann.get(schema.field(knn.attr).attr))
+        # the filter as ONE Column: the planner's probe and the inline
+        # filter share it
+        where = None
+        budget = None           # the graph beam, or the IVF lists probed
+        if artifact is not None:
+            from .hnsw import HNSWIndex
 
-                graph_art = isinstance(artifact, _HNSWIndex)
-            # a dial of the WRONG KIND for the built artifact must not
-            # silently fall through to the exact full scan (a latency
-            # cliff at scale); a dial with NO artifact still means
-            # exact, like the reference before backfill completes
-            if ann_nprobe is not None and graph_art:
-                raise QuerySyntaxError(
-                    "ann_nprobe applies to IVF artifacts; this field's "
-                    "artifact is an HNSW graph — use ann_ef (or query "
-                    "EF_RUNTIME)")
-            if (ann_ef is not None and artifact is not None
-                    and not graph_art):
-                raise QuerySyntaxError(
-                    "ann_ef applies to HNSW graph artifacts; this "
-                    "field's artifact is IVF — use ann_nprobe (or "
-                    "query EF_RUNTIME)")
-            if ann_route is not None and (artifact is None
-                                          or not graph_art):
-                raise QuerySyntaxError(
-                    "ann_route prunes segments of a kmeans-partitioned "
-                    "HNSW artifact; this field has "
-                    + ("no ANN artifact" if artifact is None
-                       else "an IVF artifact — its probe dial is "
-                            "ann_nprobe"))
-
-        # ANN planner (the reference's pre-filter vs inline-filter choice,
-        # planner.cc:21-46). Explicit dials (ann_nprobe / ann_ef /
-        # EF_RUNTIME) win; otherwise, for a HYBRID query on an algo=hnsw
-        # field with an artifact, estimate the filter's selectivity from a
-        # bounded prefix probe — selective filters pre-filter exactly,
-        # loose filters run the predicate INSIDE the index (probed IVF
-        # lists, or in-traversal on the graph — the inline-filtering
-        # branch, search.cc:102-133 InlineVectorFilter).
-        if (parsed.knn is not None and artifact is not None
-                and ann_nprobe is None and ann_ef is None
-                and not parsed.knn.ef_runtime and not match_all):
-            fdef_v = schema.field(parsed.knn.attr)
-            if getattr(fdef_v, "algo", "flat") == "hnsw":
+            graph = isinstance(artifact, HNSWIndex)
+            if knn.ef_runtime:
+                # EF_RUNTIME is natively the graph beam width
+                # (vector_hnsw.cc ef_runtime). On IVF it maps to lists:
+                # the HNSW candidate queue holds ~ef/k times more
+                # candidates than results, so probe proportionally many
+                # lists (the reference's src/query/search.cc)
+                ef = knn.ef_runtime
+                budget = ef if graph else max(1, min(
+                    artifact.n_lists, math.ceil(ef / max(knn.k, 1))))
+            elif not match_all and schema.field(knn.attr).algo == "hnsw":
+                # ANN planner (the reference's pre-filter vs inline-filter
+                # choice, planner.cc:21-46): estimate the filter's
+                # selectivity from a bounded prefix probe — selective
+                # filters pre-filter exactly, loose filters run the
+                # predicate INSIDE the index (probed IVF lists, or
+                # in-traversal on the graph — the inline-filtering branch,
+                # search.cc:102-133 InlineVectorFilter)
                 from ..plans.planner import (
                     estimate_match_fraction, use_prefiltering,
                 )
 
-                frac = estimate_match_fraction(
-                    schema.indexed_df(), translator.translate(pred))
+                where = translator.translate(pred)
+                frac = estimate_match_fraction(schema.indexed_df(), where)
                 if not use_prefiltering(frac, "hnsw"):
-                    if graph_art:
-                        # default beam for the inline path (EF_RUNTIME
-                        # overrides): wide enough that a loose filter
-                        # keeps recall, 4x the reference's default dial
-                        ann_ef = max(4 * parsed.knn.k, 40)
-                    else:
-                        # default probe budget for the inline path: an
-                        # eighth of the lists (EF_RUNTIME overrides)
-                        ann_nprobe = max(1, artifact.n_lists // 8)
+                    # inline defaults: a beam 4x the reference's default
+                    # dial, wide enough that a loose filter keeps recall;
+                    # an eighth of the IVF lists
+                    budget = (max(4 * knn.k, 40) if graph
+                              else max(1, artifact.n_lists // 8))
 
-        if (parsed.knn is not None and artifact is not None
-                and parsed.knn.ef_runtime):
-            if graph_art:
-                # EF_RUNTIME is natively the graph beam width — no
-                # mapping needed (vector_hnsw.cc ef_runtime)
-                if ann_ef is None:
-                    ann_ef = parsed.knn.ef_runtime
-            elif ann_nprobe is None:
-                # map the reference's recall dial onto IVF: EF_RUNTIME is
-                # the HNSW candidate-queue size (~ef/k times more
-                # candidates than results); probe proportionally many
-                # lists (/root/reference/src/query/search.cc)
-                import math as _math
+        if budget is None:
+            df = self._exact(req)
+            ann_mode = (None if knn is None
+                        else "exact" if match_all else "prefilter")
+        else:
+            if where is None and not match_all:
+                where = translator.translate(pred)
+            ann_mode = "ann" if where is None else "inline"
+            score = knn.score_alias()
+            if graph:
+                # beam each segment, merge top-k, then fetch the winners'
+                # records with a broadcast join (the reference's post-HNSW
+                # hash fetch, SURVEY §2.1 row 3)
+                hits = artifact.search(knn.vector, k=knn.k, ef=budget,
+                                       where=where)
+                hits = hits.withColumnRenamed("__score", score)
+                df = schema.indexed_df().join(F.broadcast(hits), "__key")
+            else:
+                df = artifact.search(knn.vector, k=knn.k, nprobe=budget,
+                                     prefilter=where, score_name=score,
+                                     tiebreak_col="__key")
 
-                ann_nprobe = max(1, min(
-                    artifact.n_lists,
-                    _math.ceil(parsed.knn.ef_runtime / max(parsed.knn.k, 1))))
-
-        if ann_route is not None:
-            # ann_route is only meaningful inside the graph beam branch
-            # below — anywhere else it would silently fall through to a
-            # full scan (the exact anti-goal of the dial guards above),
-            # and a hash-partitioned artifact has nothing to route over
-            if parsed.knn is None:
-                raise QuerySyntaxError(
-                    "ann_route applies to KNN queries — this query has "
-                    "no KNN clause")
-            if graph_art and getattr(artifact, "centroids", None) is None:
-                raise QuerySyntaxError(
-                    "ann_route needs a kmeans-partitioned HNSW artifact "
-                    "(ft_build_ann(..., partitioner='kmeans')); this "
-                    "artifact is hash-partitioned — its segments cannot "
-                    "be routed")
-            if ann_ef is None:
-                raise QuerySyntaxError(
-                    "ann_route rides the graph beam — also pass ann_ef "
-                    "(or query EF_RUNTIME) so the HNSW branch engages; "
-                    "without it the query would silently fall back to "
-                    "the exact full scan")
-
-        if parsed.knn is not None and graph_art and ann_ef is not None:
-            # segment-graph HNSW branch: beam each segment, merge top-k,
-            # then fetch the winners' records with a broadcast join (the
-            # reference's post-HNSW hash fetch, SURVEY §2.1 row 3)
-            score = parsed.knn.score_alias()
-            prefilter = None if match_all else translator.translate(pred)
-            self._req.ann_mode = ("inline" if prefilter is not None
-                                  else "ann")
-            if prefilter is not None and not explaining:
-                # predicate evaluated IN-traversal on the graph
-                self._count("inline_filtering_requests_count")
-            if ann_route is not None and not explaining:
-                # segment routing engaged (extension metric — the
-                # reference has no segment concept to route over)
-                self._count("routed_requests_count")
-            hits = artifact.search(parsed.knn.vector, k=parsed.knn.k,
-                                   ef=ann_ef, where=prefilter,
-                                   route_segments=ann_route)
-            hits = hits.withColumnRenamed("__score", score)
-            df = schema.indexed_df().join(F.broadcast(hits), "__key")
-            if count_only:
-                n = self._run_with_timeout(df.count, timeout_ms)
-                self._count("hnsw_vector_index_search_latency_usec",
-                            int((_time.perf_counter() - _t0) * 1e6))
-                return n
-            if _observe_total is not None:
-                # ANN replies report the (<=k) probed result count
-                df = df.observe(_observe_total,
-                                F.count(F.lit(1)).alias("n"))
-            return self._finish(schema, df, parsed, sortby, sortby_desc,
-                                limit, return_fields, nocontent,
-                                observed=_observe_total is not None,
-                                withsortkeys=withsortkeys)
-
-        if parsed.knn is not None and ann_nprobe is not None:
-            ann = artifact if not graph_art else None
-            if ann is not None:
-                score = parsed.knn.score_alias()
-                prefilter = None if match_all else translator.translate(pred)
-                self._req.ann_mode = ("inline" if prefilter is not None
-                                      else "ann")
-                if prefilter is not None and not explaining:
-                    # predicate evaluated INSIDE the probed lists
-                    self._count("inline_filtering_requests_count")
-                df = ann.search(parsed.knn.vector, k=parsed.knn.k,
-                                nprobe=ann_nprobe, prefilter=prefilter,
-                                score_name=score, tiebreak_col="__key")
-                if count_only:
-                    n = self._run_with_timeout(df.count, timeout_ms)
-                    self._count("hnsw_vector_index_search_latency_usec",
-                                int((_time.perf_counter() - _t0) * 1e6))
-                    return n
-                if _observe_total is not None:
-                    # ANN replies report the (<=k) probed result count
-                    df = df.observe(_observe_total,
-                                    F.count(F.lit(1)).alias("n"))
-                return self._finish(schema, df, parsed, sortby, sortby_desc,
-                                    limit, return_fields, nocontent,
-                                    observed=_observe_total is not None,
-                                    withsortkeys=withsortkeys)
-
-        df = schema.indexed_df()
-        if not match_all:
-            df = _apply_predicate(df, translator, pred)
-        if parsed.knn is not None:
-            self._req.ann_mode = "prefilter" if not match_all else "exact"
-            if not match_all and not explaining:
-                # exact hybrid: filter first, then distance — pre-filtering
-                self._count("prefiltering_requests_count")
-            df = self._knn(schema, df, parsed)
         if count_only:
-            # count AFTER the top-k cut so the exact path agrees with the
-            # ANN branch above (both report the <=k result-set size)
+            # the exact path counts AFTER the top-k cut, so every path
+            # reports the <=k result-set size
             n = self._run_with_timeout(df.count, timeout_ms)
-            if parsed.knn is not None:
-                self._count("flat_vector_index_search_latency_usec",
+            if knn is not None:
+                tier = "flat" if budget is None else "hnsw"
+                self._count(f"{tier}_vector_index_search_latency_usec",
                             int((_time.perf_counter() - _t0) * 1e6))
-            return n
+            return n, req, ann_mode
         if _observe_total is not None:
             # pre-LIMIT total in the SAME job (search.cc:779-842 computes
             # both in one pass): a CollectMetrics node below the sort+limit.
-            # _finish forces an ordering so the plan is TakeOrderedAndProject
+            # _finish orders the rows so the plan is TakeOrderedAndProject
             # (per-partition top-k, no full shuffle) whose input — and hence
-            # the metrics node — sees every matching row.
+            # the metrics node — sees every matching row. ANN replies
+            # report the (<=k) probed result count.
             df = df.observe(_observe_total, F.count(F.lit(1)).alias("n"))
-        return self._finish(schema, df, parsed, sortby, sortby_desc, limit,
-                            return_fields, nocontent,
-                            force_order=_observe_total is not None,
-                            observed=_observe_total is not None,
-                            withsortkeys=withsortkeys)
+        return (self._finish(schema, df, parsed, sortby, sortby_desc, limit,
+                             return_fields, nocontent,
+                             observed=_observe_total is not None,
+                             withsortkeys=withsortkeys),
+                req, ann_mode)
 
     def _finish(self, schema, df, parsed, sortby, sortby_desc, limit,
-                return_fields, nocontent, force_order=False,
-                observed=False, withsortkeys=False):
+                return_fields, nocontent, observed=False, withsortkeys=False):
         """Shared tail: SORTBY -> LIMIT -> RETURN projection.
         ``withsortkeys`` augments the output with the sort-key value as
         ``__sortkey`` (docs/commands/ft.search.md WITHSORTKEYS)."""
@@ -757,7 +673,7 @@ class SearchEngine:
         elif parsed.knn is not None:
             df = df.orderBy(F.col(parsed.knn.score_alias()).asc(),
                             F.col("__key").asc())
-        elif force_order:
+        elif observed:
             # deterministic reply order + guarantees the limit cannot
             # short-circuit the scan under a CollectMetrics observation
             df = df.orderBy(F.col("__key").asc())
@@ -770,9 +686,7 @@ class SearchEngine:
             # physical limit even when the caller asked for everything: an
             # orderBy WITHOUT a limit becomes a range-partitioned Sort
             # whose boundary-sampling pass re-executes the child,
-            # double-counting the CollectMetrics observation beneath.
-            # Keyed off the observation itself, not force_order — the ANN
-            # reply branch orders by the KNN score without force_order
+            # double-counting the CollectMetrics observation beneath
             n = _OBSERVED_LIMIT_CAP
         if n is not None:
             df = df.limit(n)
@@ -820,32 +734,23 @@ class SearchEngine:
         slop: int | None = None,
         inorder: bool = False,
         dialect: int = 2,
-        timeout_ms: int | None = None,
     ) -> DataFrame:
-        """FT.AGGREGATE: search phase identical to FT.SEARCH — including
-        command-level SLOP/INORDER/VERBATIM/DIALECT (ft.aggregate.md) —
-        then the stage pipeline folds the result frame
-        (/root/reference/src/commands/ft_aggregate.cc:95-129, :348-364)."""
+        """FT.AGGREGATE: the search phase of FT.SEARCH (``_prepare``:
+        command-level SLOP/INORDER/VERBATIM/DIALECT, ft.aggregate.md, and
+        the query guards), then the stage pipeline folds the exact result
+        frame (the reference's src/commands/ft_aggregate.cc:95-129,
+        :348-364). The frame is lazy: a TIMEOUT applies where the reply
+        executes it (CommandDispatcher)."""
         from .aggregate import AggregateExecutor, parse_stages
 
-        if dialect not in (1, 2, 3, 4):
-            raise QuerySyntaxError(f"invalid DIALECT {dialect}")
-        schema = self.catalog.get(index)
         # stage expressions may consume params too, so the parser's
         # unused-params validation is deferred (see filter_parser.parse)
-        parsed = parse_query(query, params, check_unused_params=False)
-        translator = PredicateTranslator(schema, verbatim=verbatim,
-                                         limits=self.limits)
-        parsed.predicate = translator.preprocess(parsed.predicate)
-        pred = self._maybe_proximity(parsed, slop, inorder)
-        df = schema.indexed_df()
-        if not isinstance(pred, MatchAll):
-            df = _apply_predicate(df, translator, pred)
-        score_col = None
-        if parsed.knn is not None:
-            df = self._knn(schema, df, parsed)
-            score_col = parsed.knn.score_alias()
-        execu = AggregateExecutor(schema, df, score_column=score_col)
+        req = self._prepare(index, query, params, verbatim, slop, inorder,
+                            dialect, check_unused_params=False)
+        knn = req.parsed.knn
+        execu = AggregateExecutor(req.schema, self._exact(req),
+                                  score_column=knn.score_alias() if knn
+                                  else None)
         return execu.run(parse_stages(stages, params))
 
     def _maybe_proximity(self, parsed: ParsedQuery, slop: int | None, inorder: bool):
@@ -885,30 +790,18 @@ class SearchEngine:
                     )
         return pred
 
-    def _validate_knn(self, schema: IndexSchema, knn) -> VectorField:
-        """Shared FT.SEARCH / FT.AGGREGATE KNN validation: the field
-        must be VECTOR and the query vector must match its DIM — the
-        reference rejects a query blob whose byte length isn't DIM*4
-        (vector_base.cc record validation). Without this, a wrong-dim
-        vector silently nulls every zip_with distance and returns an
-        EMPTY result instead of an error."""
-        vf = schema.field(knn.attr)
-        if not isinstance(vf, VectorField):
-            raise QuerySyntaxError(f"KNN field `{knn.attr}` is not VECTOR")
-        if vf.dim and len(knn.vector) != vf.dim:
-            raise QuerySyntaxError(
-                f"query vector has {len(knn.vector)} dimensions; field "
-                f"`{knn.attr}` is DIM {vf.dim} (FLOAT32 blob must be "
-                f"{4 * vf.dim} bytes)")
-        return vf
-
-    def _knn(self, schema: IndexSchema, df: DataFrame,
-             parsed: ParsedQuery) -> DataFrame:
-        """Exact KNN over the (possibly pre-filtered) frame; the ANN path
-        is chosen earlier in ft_search. Validation lives here too so
-        ft_aggregate's direct call gets the same dim/type errors."""
+    def _exact(self, req: SearchRequest) -> DataFrame:
+        """The exact path FT.SEARCH and FT.AGGREGATE share: the predicate
+        filters the index frame, then a KNN clause scores the survivors
+        and cuts the top k (the ANN paths are chosen in _ft_search)."""
+        schema, parsed, pred, translator = req
+        df = schema.indexed_df()
+        if not isinstance(pred, MatchAll):
+            df = _apply_predicate(df, translator, pred)
         knn = parsed.knn
-        fdef = self._validate_knn(schema, knn)
+        if knn is None:
+            return df
+        fdef = schema.field(knn.attr)
         score = knn.score_alias()
         dist = distance_column(vec_col(fdef.attr), knn.vector, fdef.metric)
         # top-k: Catalyst compiles orderBy+limit to TakeOrderedAndProject —
