@@ -688,16 +688,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # inline (in-traversal) predicate filtering the same way
         # vector_hnsw.cc's filtered search does
         idx = hnsw_index(spark, sf_dir)
-        full = idx.search(QVEC, k=10, ef=10 ** 6).select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            _r(F.col("__score")).alias("dist"),
-            F.lit("full").alias("form"))
-        filt = idx.search(QVEC, k=10, ef=10 ** 6,
-                          where="label BETWEEN 3 AND 5").select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            _r(F.col("__score")).alias("dist"),
-            F.lit("filtered").alias("form"))
-        return full.unionByName(filt)
+
+        def hits(form, where=None):
+            rows = idx.search(QVEC, k=10, ef=10 ** 6, where=where)
+            return spark.createDataFrame(
+                [tuple(r) for r in rows], "vec_id long, __score double").select(
+                "vec_id", _r(F.col("__score")).alias("dist"),
+                F.lit(form).alias("form"))
+
+        return hits("full").unionByName(
+            hits("filtered", where="label BETWEEN 3 AND 5"))
 
     q["knn_hnsw"] = q_knn_hnsw
 

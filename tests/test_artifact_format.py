@@ -27,7 +27,7 @@ def test_legacy_artifacts_load_and_search(spark):
     out = ivf.search([0.0] * 4, k=3, nprobe=ivf.n_lists).collect()
     assert len(out) == 3
     hnsw = HNSWIndex.load(spark, os.path.join(_V1, "hnsw"))
-    rows = hnsw.search([0.0] * 4, k=3, ef=16).collect()
+    rows = hnsw.search([0.0] * 4, k=3, ef=16)
     assert len(rows) == 3
 
 

@@ -146,8 +146,7 @@ def test_full_explore_matches_brute_force(hindex):
     rows = emb.collect()
     qvec = [float(x) for x in rows[3]["embedding"]]
     got = [(round(r["__score"], 9), r["vec_id"])
-           for r in idx.search(qvec, k=7, ef=10 ** 6)
-           .orderBy("__score", "vec_id").collect()]
+           for r in idx.search(qvec, k=7, ef=10 ** 6)]
     want = [(round(d, 9), v) for d, v in _brute(rows, qvec, 7)]
     assert got == want
 
@@ -158,8 +157,7 @@ def test_inline_filter_full_explore_exact(hindex):
     qvec = [float(x) for x in rows[5]["embedding"]]
     got = [(round(r["__score"], 9), r["vec_id"])
            for r in idx.search(qvec, k=5, ef=10 ** 6,
-                               where="label between 3 and 5")
-           .orderBy("__score", "vec_id").collect()]
+                               where="label between 3 and 5")]
     want = [(round(d, 9), v) for d, v in
             _brute(rows, qvec, 5, lambda r: 3 <= r["label"] <= 5)]
     assert got == want
@@ -199,8 +197,8 @@ def test_load_round_trip(hindex, spark):
         (idx.metric, idx.m, idx.n_segments, idx.key_col,
          idx.payload_cols)
     qvec = [float(x) for x in emb.first()["embedding"]]
-    a = idx.search(qvec, k=4, ef=10 ** 6).collect()
-    b = re.search(qvec, k=4, ef=10 ** 6).collect()
+    a = idx.search(qvec, k=4, ef=10 ** 6)
+    b = re.search(qvec, k=4, ef=10 ** 6)
     assert sorted((r["vec_id"], round(r["__score"], 9)) for r in a) == \
         sorted((r["vec_id"], round(r["__score"], 9)) for r in b)
 
@@ -215,8 +213,7 @@ def test_cosine_ip_metrics(spark, sf_dir, tmp_path):
                               metric=metric, m=8, ef_construction=60,
                               max_segment_rows=120)
         got = [(r["vec_id"], round(r["__score"], 6))
-               for r in idx.search(qvec, k=5, ef=10 ** 6)
-               .orderBy("__score", "vec_id").collect()]
+               for r in idx.search(qvec, k=5, ef=10 ** 6)]
         scored = []
         for r in rows:
             v = np.asarray(r["embedding"], dtype=np.float64)
@@ -251,8 +248,7 @@ def test_append_delete_compact(spark, tmp_path):
     qvec = [0.0] * 8
 
     def top(k=100):
-        return {r["vec_id"] for r in idx.search(qvec, k=k, ef=10 ** 6)
-                .collect()}
+        return {r["vec_id"] for r in idx.search(qvec, k=k, ef=10 ** 6)}
 
     assert top() == set(range(100))
     idx.delete([3, 4, 5])
@@ -269,7 +265,7 @@ def test_append_delete_compact(spark, tmp_path):
     # exactness after the full mutation cycle
     reload = HNSWIndex.load(spark, idx.path)
     assert {r["vec_id"] for r in
-            reload.search(qvec, k=200, ef=10 ** 6).collect()} == \
+            reload.search(qvec, k=200, ef=10 ** 6)} == \
         (set(range(120)) - {3, 5})
 
 
@@ -321,7 +317,7 @@ def test_append_writes_rows_in_stored_key_type(spark, tmp_path):
              for p in glob.glob(f"{idx.path}/__seg=*/*.parquet")}
     assert len(types) == 1
     assert idx.scan_raw().count() == 101
-    top = idx.search(extra, k=1, ef=200).first()
+    top = idx.search(extra, k=1, ef=200)[0]
     assert top["vec_id"] == 1000 and top["__score"] < 1e-6
 
 
@@ -361,9 +357,9 @@ def test_quantized_tier_recall_and_round_trip(spark, sf_dir, tmp_path):
 
     qvec = [float(x) for x in emb.first()["embedding"]]
     exact = [r["vec_id"] for r in
-             fidx.search(qvec, k=10, ef=10 ** 6).collect()]
+             fidx.search(qvec, k=10, ef=10 ** 6)]
     quant = [r["vec_id"] for r in
-             qidx.search(qvec, k=10, ef=10 ** 6).collect()]
+             qidx.search(qvec, k=10, ef=10 ** 6)]
     assert len(set(exact) & set(quant)) >= 9   # int8 error can swap a tail
     # scan_raw dequantizes to float arrays
     row = qidx.scan_raw().first()
@@ -372,7 +368,7 @@ def test_quantized_tier_recall_and_round_trip(spark, sf_dir, tmp_path):
     re = HNSWIndex.load(spark, qidx.path)
     assert re.quantized
     re.delete([quant[0]])
-    after = [r["vec_id"] for r in re.search(qvec, k=10, ef=10 ** 6).collect()]
+    after = [r["vec_id"] for r in re.search(qvec, k=10, ef=10 ** 6)]
     assert quant[0] not in after
 
 
@@ -386,8 +382,7 @@ def test_result_heap_ties_keep_smallest_keys(spark, tmp_path):
     df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
     idx = HNSWIndex.build(df, str(tmp_path / "ties"), m=4,
                           ef_construction=20, max_segment_rows=100)
-    got = [r["vec_id"] for r in idx.search([0.0, 0.0], k=3, ef=10 ** 6)
-           .orderBy("__score", "vec_id").collect()]
+    got = [r["vec_id"] for r in idx.search([0.0, 0.0], k=3, ef=10 ** 6)]
     assert got == [0, 1, 2]
 
 

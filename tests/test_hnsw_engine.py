@@ -103,14 +103,33 @@ def test_count_only_and_return_projection(eng):
     assert len(rows) == 3 and set(df.columns) >= {"label", "dist"}
 
 
-def test_ft_info_reports_graph_artifact(eng):
-    e, _ = eng
-    info = e.catalog.info("hemb")
-    vec = next(a for a in info["attributes"] if a["attribute"] == "embedding")
-    assert vec["index"]["algorithm"] == {
+def test_ft_info_reports_graph_artifact(eng, spark):
+    from valkey_search_spark.operators.hnsw import HNSWIndex
+
+    e, emb = eng
+    schema = e.catalog.get("hemb")
+    # a fresh load of the same artifact holds nothing in driver memory yet
+    art = schema._ann["embedding"] = HNSWIndex.load(
+        spark, schema._ann["embedding"].path)
+
+    def ann():
+        info = e.catalog.info("hemb")
+        vec = next(a for a in info["attributes"]
+                   if a["attribute"] == "embedding")
+        return vec["index"]
+
+    vec = ann()
+    assert vec["algorithm"] == {
         "name": "HNSW", "m": 8, "ef_construction": 60}
-    assert vec["index"]["ann"]["storage"] == "float32_graph"
-    assert vec["index"]["ann"]["segments"] >= 1
+    assert vec["ann"]["storage"] == "float32_graph"
+    assert vec["ann"]["segments"] >= 1
+    assert vec["ann"]["resident_bytes"] == 0
+    e.ft_search("hemb", "*=>[KNN 3 @embedding $v EF_RUNTIME 40]",
+                params={"v": QVEC}).collect()
+    held = ann()["ann"]["resident_bytes"]
+    assert held == art.resident_bytes()
+    # at least the float64 vectors of every row
+    assert held >= emb.count() * 64 * 8
 
 
 def test_delete_by_document_key_masks_engine_results(spark, sf_dir,
@@ -169,3 +188,49 @@ def test_ft_info_reports_partitioner_and_routability(spark, tmp_path):
     ann = vec["index"]["ann"]
     assert ann["partitioner"] == "kmeans"
     assert ann["routable_segments"] == ann["segments"]
+
+
+def test_ef_runtime_search_runs_one_spark_job(eng, spark):
+    from valkey_search_spark import CommandDispatcher
+
+    e, _ = eng
+    disp = CommandDispatcher(e, source=None)
+    argv = ["FT.SEARCH", "hemb", "*=>[KNN 10 @embedding $v EF_RUNTIME 40]",
+            "PARAMS", "2", "v", np.asarray(QVEC, np.float32).tobytes(),
+            "RETURN", "1", "__embedding_score"]
+    warm = disp.execute_reply(argv)          # loads the resident graphs
+    sc = spark.sparkContext
+    sc.setJobGroup("hnsw-ef-one-job", "one HNSW FT.SEARCH")
+    try:
+        reply = disp.execute_reply(argv)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("hnsw-ef-one-job")
+    assert reply == warm and reply[0] == 10
+    assert len(jobs) == 1
+
+
+def test_graph_hit_keys_need_no_escaping(spark, tmp_path):
+    # document keys holding a quote, a backslash and non-ASCII text come
+    # back from the graph path with their own score
+    keys = ["o'brien", "back\\slash", "naïve-ключ", "plain", "x'\\'y"]
+    vecs = [[float(i), float(i % 2), 1.0, 0.5 * i] for i in range(len(keys))]
+    df = spark.createDataFrame(list(zip(keys, vecs)),
+                               "doc string, embedding array<float>")
+    e = SearchEngine(spark)
+    e.ft_create("hkeys", df, [VectorField("embedding", dim=4, metric="l2",
+                                          algo="hnsw", m=4,
+                                          ef_construction=16)],
+                key_column="doc")
+    e.ft_build_ann("hkeys", "embedding", str(tmp_path / "idx"),
+                   algorithm="hnsw")
+    q = [0.9, 1.1, 1.0, 0.4]
+    rows = e.ft_search("hkeys", "*=>[KNN 5 @embedding $v EF_RUNTIME 40 "
+                       "AS dist]", params={"v": q}).collect()
+    got = {r["__key"]: r["dist"] for r in rows}
+    assert set(got) == set(keys)
+    for key, v in zip(keys, vecs):
+        want = float(np.sqrt(((np.asarray(v) - np.asarray(
+            q, np.float32).astype(np.float64)) ** 2).sum()))
+        assert got[key] == pytest.approx(want, rel=1e-9)

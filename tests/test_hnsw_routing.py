@@ -216,14 +216,6 @@ def test_cosine_routing(spark, tmp_path):
     assert got[0] == 100 and all(v >= 100 for v in got)
 
 
-def test_single_query_search_routes(spark, kidx):
-    df, idx = kidx
-    qv = df.where(F.col("vec_id") == 0).first()["embedding"]
-    hits = idx.search([float(x) for x in qv], k=3, ef=10**6,
-                      route_segments=1).collect()
-    assert hits[0][idx.key_col] == 0
-
-
 def test_realdata_routed_recall(spark, sf_dir, tmp_path):
     # real embeddings (not synthetic blobs): routed recall@10 vs the
     # unrouted full-explore join must clear 0.9 at r=half the clusters

@@ -54,7 +54,7 @@ def test_stream_appends_and_deletes_apply_in_order(spark, tmp_path, base):
     q.awaitTermination(120)
 
     got = {r["vec_id"] for r in
-           idx.search([0.0] * 8, k=200, ef=10 ** 6).collect()}
+           idx.search([0.0] * 8, k=200, ef=10 ** 6)}
     assert got == set(range(80)) - {2, 3, 61}
 
     # a second micro-batch re-inserting a deleted key must win (newer gen)
@@ -66,13 +66,13 @@ def test_stream_appends_and_deletes_apply_in_order(spark, tmp_path, base):
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
-    res = idx.search([0.0] * 8, k=1, ef=10 ** 6).collect()
+    res = idx.search([0.0] * 8, k=1, ef=10 ** 6)
     assert res[0]["vec_id"] == 2 and res[0]["__score"] == 0.0
 
     # reload from disk sees the same state (all mutations are durable)
     re = HNSWIndex.load(spark, idx.path)
     got = {r["vec_id"] for r in
-           re.search([0.0] * 8, k=200, ef=10 ** 6).collect()}
+           re.search([0.0] * 8, k=200, ef=10 ** 6)}
     assert got == set(range(80)) - {3, 61}
 
 
@@ -92,7 +92,7 @@ def test_compact_after_stream_restores_segment_sizing(spark, tmp_path,
     assert idx.n_segments == 3              # ceil(88 / 30)
     assert idx.gen == 0
     got = {r["vec_id"] for r in
-           idx.search([0.0] * 8, k=200, ef=10 ** 6).collect()}
+           idx.search([0.0] * 8, k=200, ef=10 ** 6)}
     assert got == (set(range(2, 60)) | set(range(100, 130)))
 
 
@@ -124,11 +124,11 @@ def test_document_store_mirrors_into_hnsw_artifact(spark, tmp_path):
     ])
     store.apply_mutations(muts, ann_indexes=[idx])
 
-    res = idx.search([0.0] * 8, k=100, ef=10 ** 6).collect()
+    res = idx.search([0.0] * 8, k=100, ef=10 ** 6)
     got = {r["__key"] for r in res}
     assert got == {str(i) for i in range(50) if i not in (7, 9)} | {"60"}
     # the replaced row moved to the new vector: rank 1 at distance 0
-    best = idx.search(moved, k=1, ef=10 ** 6).collect()[0]
+    best = idx.search(moved, k=1, ef=10 ** 6)[0]
     assert best["__key"] == "3" and best["__score"] == 0.0
     # store and index agree on membership
     assert store.read().where("__key = '9'").count() == 0

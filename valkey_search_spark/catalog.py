@@ -515,6 +515,8 @@ class Catalog:
                         "partitioner": ann.partitioner,
                         "routable_segments":
                             len(ann.routable_segments()),
+                        # driver memory held for single-query search
+                        "resident_bytes": ann.resident_bytes(),
                     }
             attributes.append(a)
         first_text = text_fields[0] if text_fields else None

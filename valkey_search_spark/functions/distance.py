@@ -31,7 +31,7 @@ def normalize_query(vec: list[float]) -> list[float]:
     return [x / n for x in vec] if n > 0 else vec
 
 
-def _double_literal(x: float) -> str:
+def double_literal(x: float) -> str:
     x = float(x)
     if math.isnan(x):
         return "CAST('NaN' AS DOUBLE)"
@@ -42,7 +42,7 @@ def _double_literal(x: float) -> str:
 
 def _sum_zip(col: str, vec: list[float], term: str) -> str:
     """``sum_i term(x_i, y_i)`` over the column and the query vector."""
-    arr = "array(" + ", ".join(_double_literal(x) for x in vec) + ")"
+    arr = "array(" + ", ".join(double_literal(x) for x in vec) + ")"
     ident = "`" + col.replace("`", "``") + "`"
     return (f"aggregate(zip_with({ident}, {arr}, (x, y) -> {term}), "
             "0.0D, (acc, t) -> acc + t)")

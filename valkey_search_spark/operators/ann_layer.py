@@ -195,6 +195,9 @@ class ANNArtifact:
     _FORMAT: str
     _TOMBS: str
     _TOMB_GEN: str
+    # replaced after every mutation, so a copy derived from the files can
+    # tell it is stale (``gen`` cannot: compact resets it to 0)
+    _version = None
 
     @classmethod
     def _load_meta(cls, path: str) -> tuple[str, dict]:
@@ -219,6 +222,7 @@ class ANNArtifact:
         artifact (sources/swap.py's crash-safe swap) and adopt its state."""
         sibling_swap(self.path, fresh.path)
         vars(self).update({k: v for k, v in vars(fresh).items() if k != "path"})
+        self._version = object()
 
     # -- storage tier ------------------------------------------------------
     @property
@@ -299,6 +303,7 @@ class ANNArtifact:
         gen = self.gen + 1
         yield gen
         self.gen = gen
+        self._version = object()
         self._save_meta()
 
     def _append_rows(self, rows: DataFrame, cell_col: str) -> None:

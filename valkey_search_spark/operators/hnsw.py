@@ -14,16 +14,21 @@ Spark-native restatement of that design:
   per-segment-graph shape: build parallelism == segments, graph memory
   per task is capped by the segment cap, and at 100 TB the build is a
   single pass with no shuffle beyond the hash partition.
-- Search fans each query out to every segment (queries are the small
-  side: a broadcast cross join against the tiny segment-id range, then
-  ONE cogroup with the graph parquet), beam-searches each segment
-  locally, and merges per-segment top-k with a window — shuffle volume
-  is |Q|·segments in and |Q|·segments·k candidate rows out, never the
-  corpus.
+- A single query (``HNSWIndex.search``, FT.SEARCH's graph path) runs on
+  the driver, like the reference's in-process walk: the live segment
+  graphs are decoded into numpy once per artifact generation (one Spark
+  job, on the first search after a mutation), every segment is
+  beam-searched, and the per-segment top-k merge on (distance, key).
+- A batch of queries (``knn_join_hnsw``) fans each query out to every
+  segment (a broadcast cross join against the tiny segment-id range,
+  then ONE cogroup with the graph parquet), beam-searches each segment
+  in an executor task, and merges per-segment top-k with a window —
+  shuffle volume is |Q|·segments in and |Q|·segments·k candidate rows
+  out, never the corpus. Both forms return the same hits.
 - Inline filtering == the reference's in-traversal predicate
   (vector_hnsw.cc's filtered search): an arbitrary SQL predicate over
-  payload columns is evaluated JVM-side in the segment scan into an
-  ``__allowed`` mask; the beam TRAVERSES the full graph (termination
+  payload columns is evaluated JVM-side over the segment rows into an
+  allowed mask; the beam TRAVERSES the full graph (termination
   is driven by an unfiltered working heap, so a sparse filter widens
   the explored region exactly like hnswlib's filtered search) but only
   allowed nodes are collected as results.
@@ -52,11 +57,13 @@ from __future__ import annotations
 import heapq
 import math
 import os
+import threading
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F, types as T
 
 from ..sources.swap import require_local_path
 from .ann_layer import (
@@ -65,6 +72,7 @@ from .ann_layer import (
 )
 
 _CENTROIDS = "_hnsw_centroids.npy"
+_LOAD_LOCK = threading.Lock()       # one resident-graph load at a time
 
 
 # ---------------------------------------------------------------------------
@@ -704,20 +712,109 @@ class HNSWIndex(ANNArtifact):
             sample_fraction=self.sample_fraction))
 
     # -- search -------------------------------------------------------------
+    _resident: "_Resident | None" = None
+
+    def _snapshot(self) -> "_Resident":
+        """The live segment graphs in driver memory: loaded by one Spark
+        job on the first search after a mutation, then shared read-only.
+        A load that races a mutation stores its copy under the token it
+        started with, so the next search loads again."""
+        snap = self._resident
+        if snap is None or snap.version is not self._version:
+            with _LOAD_LOCK:
+                snap = self._resident
+                if snap is None or snap.version is not self._version:
+                    version, rows = self._version, self._read()
+                    snap = self._resident = _Resident(
+                        version, rows, self._load_segments(rows))
+        return snap
+
+    def _load_segments(self, rows: DataFrame) -> list["_Segment"]:
+        pdf = self._decode(self._with_alive(rows)).select(
+            "__seg", "__node", self.key_col, self.vec_col, "__level",
+            "__nbrs", "__alive").toPandas()
+        segs = []
+        for seg, part in pdf.groupby("__seg", sort=True):
+            part = part.sort_values("__node").reset_index(drop=True)
+            vecs, levels, nbrs, entry, top = _graph_arrays(part, self.vec_col)
+            segs.append(_Segment(
+                int(seg), vecs, levels, nbrs, entry, top,
+                _sqnorms(vecs) if self.metric == "l2" else None,
+                part[self.key_col].to_numpy(),
+                part["__alive"].to_numpy().astype(bool)))
+        return segs
+
+    def resident_bytes(self) -> int:
+        """Bytes of the numpy arrays the driver holds for search (vectors,
+        norms, levels, keys, alive masks); 0 before the first search. The
+        neighbour lists are Python lists and are not counted."""
+        snap = self._resident
+        if snap is None:
+            return 0
+        return sum(a.nbytes for s in snap.segments
+                   for a in (s.vecs, s.sq, s.levels, s.keys, s.alive)
+                   if a is not None)
+
     def search(self, qvec: list[float], k: int = 10, ef: int = 64,
-               where=None, route_segments: int | None = None) -> DataFrame:
-        """Single-query convenience over ``knn_join_hnsw``: returns
-        (key_col, __score) — scores in the reference convention.
-        ``where``: SQL string or Column over the payload columns."""
-        q = self.spark.createDataFrame(
-            [(0, [float(x) for x in qvec])],
-            T.StructType([
-                T.StructField("__qid", T.LongType()),
-                T.StructField(self.vec_col, T.ArrayType(T.FloatType()))]))
-        out = knn_join_hnsw(q, self, k=k, ef=ef, where=where,
-                            query_key="__qid",
-                            route_segments=route_segments)
-        return out.select(self.key_col, F.col("distance").alias("__score"))
+               where=None) -> list[Row]:
+        """One query against the resident segment graphs: the same hits as
+        ``knn_join_hnsw`` for a one-row query frame, as
+        ``Row(key_col, __score)`` in (score, key) order — scores in the
+        reference convention. ``where``: SQL string or Column over the
+        payload columns, evaluated in one Spark job over the artifact's
+        rows. The query is rounded to float32 like a stored vector."""
+        _, rows, segs = self._snapshot()
+        q = np.asarray(qvec, dtype=np.float32).astype(np.float64)
+        if self.metric == "cosine":
+            n = np.linalg.norm(q)
+            if n > 0:
+                q = q / n
+        allowed = None
+        if where is not None:
+            pred = F.expr(where) if isinstance(where, str) else where
+            ok = rows.where(pred).select("__seg", "__node").toPandas()
+            allowed = {s.seg: np.zeros_like(s.alive) for s in segs}
+            for seg, nodes in ok.groupby("__seg")["__node"]:
+                allowed[seg][nodes.to_numpy()] = True
+        kk, eff = int(k), max(int(ef), int(k))
+        dists, keys = [], []
+        for s in segs:
+            mask = s.alive if allowed is None else s.alive & allowed[s.seg]
+            hits = _search_graph(s.vecs, s.levels, s.nbrs, s.entry, s.top,
+                                 q, kk, eff, self.metric,
+                                 allowed=None if mask.all() else mask,
+                                 sq=s.sq)
+            dists += [d for d, _ in hits]
+            keys += s.keys[[node for _, node in hits]].tolist()
+        scores = _emit(np.asarray(dists, dtype=np.float64), self.metric)
+        hit = Row(self.key_col, "__score")
+        return [hit(key, score) for score, key in
+                sorted(zip(scores.tolist(), keys))[:kk]]
+
+
+class _Resident(NamedTuple):
+    """What ``HNSWIndex.search`` reads: the artifact frame (for inline
+    filters) and its segment graphs, under the mutation token they were
+    loaded at."""
+
+    version: object
+    rows: DataFrame
+    segments: list["_Segment"]
+
+
+class _Segment(NamedTuple):
+    """One segment graph as ``_search_graph`` reads it, plus its keys
+    and alive mask."""
+
+    seg: int
+    vecs: np.ndarray
+    levels: np.ndarray
+    nbrs: list
+    entry: int
+    top: int
+    sq: np.ndarray | None
+    keys: np.ndarray
+    alive: np.ndarray
 
 
 def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import Catalog, FieldDef, IndexSchema, NumericField, TagField, TextField, num_col, vec_col, VectorField
 from ..errors import QuerySyntaxError, UnknownFieldError
-from ..functions.distance import distance_column
+from ..functions.distance import distance_column, double_literal
 from ..parser.ast import (
     And, MatchAll, ParsedQuery, Proximity, TextPred, TERM,
     query_operation_flags,
@@ -41,6 +41,24 @@ from ..plans.predicate_translator import (
 # the sort double-execution this cap exists to prevent — verified by the
 # observed-count test; 2e9 keeps the TakeOrderedAndProject shape
 _OBSERVED_LIMIT_CAP = 2_000_000_000
+
+
+def _fetch_hits(indexed: DataFrame, hits: list, score: str) -> DataFrame:
+    """The indexed rows of ``hits`` (``(key, score)`` pairs) with the score
+    as column ``score``, as ONE filter and ONE projection: ``__key IN
+    (...)`` and a literal ``map(key, score)[__key]``. Keys are written as
+    UTF-8 hex literals, so no key text needs escaping."""
+    if not hits:
+        return indexed.where(F.lit(False)).withColumn(
+            score, F.lit(None).cast("double"))
+    best: dict = {}
+    for key, d in hits:                  # a key live twice keeps its best
+        best.setdefault(str(key), d)
+    lits = {k: f"CAST(X'{k.encode('utf-8').hex()}' AS STRING)" for k in best}
+    pairs = ", ".join(f"{lits[k]}, {double_literal(d)}"
+                      for k, d in best.items())
+    return (indexed.where(F.expr(f"__key IN ({', '.join(lits.values())})"))
+            .withColumn(score, F.expr(f"map({pairs})[__key]")))
 
 
 @dataclass
@@ -238,7 +256,8 @@ class SearchEngine:
         Python (Arrow) stages and exchanges. Builds the same lazy plan
         as ``ft_search`` (same kwargs) without executing it; the only
         work is Catalyst analysis plus any planner selectivity probe
-        the query itself would run."""
+        the query itself would run, and on an HNSW artifact the graph
+        search, whose hits the plan carries as literals."""
         import re as _re
 
         if kwargs.get("count_only") or kwargs.get("_observe_total"):
@@ -610,13 +629,13 @@ class SearchEngine:
             ann_mode = "ann" if where is None else "inline"
             score = knn.score_alias()
             if graph:
-                # beam each segment, merge top-k, then fetch the winners'
-                # records with a broadcast join (the reference's post-HNSW
-                # hash fetch, SURVEY §2.1 row 3)
+                # beam the resident segment graphs on the driver, then
+                # fetch the winners' records from the cached index frame
+                # by key (the reference's post-HNSW hash fetch, SURVEY
+                # §2.1 row 3)
                 hits = artifact.search(knn.vector, k=knn.k, ef=budget,
                                        where=where)
-                hits = hits.withColumnRenamed("__score", score)
-                df = schema.indexed_df().join(F.broadcast(hits), "__key")
+                df = _fetch_hits(schema.indexed_df(), hits, score)
             else:
                 df = artifact.search(knn.vector, k=knn.k, nprobe=budget,
                                      prefilter=where, score_name=score,
