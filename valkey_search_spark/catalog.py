@@ -26,9 +26,12 @@ scan serves tokenized/normalized columns directly with pushdown.
 
 from __future__ import annotations
 
+import itertools
 import re
+import threading
 from dataclasses import dataclass, field as dc_field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .errors import UnknownFieldError
@@ -39,6 +42,7 @@ from .functions.analysis import (
     stem_positions_udf,
     text_tokens_column,
 )
+from .functions.sqltext import sql_ident, sql_str
 
 
 def tag_col(f: str) -> str:
@@ -64,6 +68,9 @@ def stem_pos_col(f: str) -> str:
 def vec_col(f: str) -> str:
     return f"_v_{f}"
 
+
+# generated names of the session temp views over index frames
+_view_ids = itertools.count()
 
 # index-level union ("field-mask") columns for wide uniform text schemas
 MASK_TOK_COL = "__fm_tok"
@@ -95,6 +102,13 @@ class FieldDef:
             return F.get_json_object(
                 F.col(self.json_source).cast("string"), self.name)
         return F.col(self.name)
+
+    def source_sql(self) -> str:
+        """``source`` as SQL text."""
+        if self.json_source:
+            return (f"get_json_object(CAST({sql_ident(self.json_source)} "
+                    f"AS STRING), {sql_str(self.name)})")
+        return sql_ident(self.name)
 
     def derived(self, df: DataFrame) -> dict[str, Column]:
         raise NotImplementedError
@@ -246,6 +260,8 @@ class IndexSchema:
         self._cached: DataFrame | None = None
         self.ingest_store = None        # live-ingest link (attach_store)
         self._ann: dict = {}            # attr -> ANN artifact (ft_build_ann)
+        self._view: tuple[str, list[str], list[str]] | None = None
+        self._view_lock = threading.Lock()
         for f in self.fields:
             self._by_attr[f.attr] = f
 
@@ -285,6 +301,44 @@ class IndexSchema:
         if self.prederived and MASK_TOK_COL not in self.doc_df.columns:
             return None
         return tfs
+
+    def _registered(self) -> tuple[str, list[str], list[str]]:
+        """(view name, its columns, the document frame's columns). The
+        index frame is registered as a session temp view under a generated
+        name (index names may hold any text) on its first statement, so
+        each FT.SEARCH op is one statement over the view and an uncached
+        index builds its derived columns once, not per op; FT.CREATE stays
+        lazy. ``Catalog`` drops the view with the index."""
+        with self._view_lock:
+            if self._view is None:
+                try:
+                    df = self.indexed_df()
+                except AnalysisException as e:
+                    raise UnknownFieldError(
+                        f"index `{self.name}`: a field does not fit the "
+                        f"source frame: {str(e).splitlines()[0]}") from None
+                name = f"vss_index_{next(_view_ids)}"
+                df.createOrReplaceTempView(name)
+                self._view = (name, df.columns, self.doc_df.columns)
+            return self._view
+
+    @property
+    def view(self) -> str:
+        """The session temp view FT.SEARCH / FT.AGGREGATE statements
+        read."""
+        return self._registered()[0]
+
+    @property
+    def columns(self) -> list[str]:
+        return self._registered()[1]
+
+    @property
+    def doc_columns(self) -> list[str]:
+        return self._registered()[2]
+
+    def sql(self, statement: str) -> DataFrame:
+        """Run one statement in the session that holds ``self.view``."""
+        return self.doc_df.sparkSession.sql(statement)
 
     @property
     def text_fields(self) -> list[TextField]:
@@ -420,20 +474,37 @@ class IndexSchema:
 
 class Catalog:
     """Index registry: FT.CREATE / FT.DROPINDEX / FT._LIST / FT.INFO
-    (/root/reference/src/schema_manager.* via SURVEY.md §3.1)."""
+    (the reference's src/schema_manager.* via SURVEY.md §3.1).
+    Re-creating a name replaces the old index; dropping or replacing an
+    index drops its view (``IndexSchema.view``)."""
 
     def __init__(self) -> None:
         self._indexes: dict[str, IndexSchema] = {}
 
     def create(self, schema: IndexSchema) -> IndexSchema:
+        old = self._indexes.pop(schema.name, None)
+        if old is not None:
+            # released before the new frame is cached: indexes over the
+            # same plan share one cache entry
+            self._release(old)
         self._indexes[schema.name] = schema
         return schema
 
     def drop(self, name: str) -> None:
         s = self._indexes.pop(name, None)
-        if s is not None and s._cached is not None:
-            # free the ingest-time index cache — a long-lived session that
-            # creates/drops indexes must not accumulate persisted RDDs
+        if s is not None:
+            self._release(s)
+
+    @staticmethod
+    def _release(s: IndexSchema) -> None:
+        """Drop the index's view and free its ingest-time cache — a
+        long-lived session that creates/drops indexes must not accumulate
+        views or persisted RDDs."""
+        with s._view_lock:
+            if s._view is not None:
+                s.doc_df.sparkSession.catalog.dropTempView(s._view[0])
+                s._view = None
+        if s._cached is not None:
             s._cached.unpersist()
             s._cached = None
 

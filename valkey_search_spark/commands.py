@@ -125,6 +125,16 @@ class _Args:
         return None
 
 
+def _timeout(a: _Args) -> int:
+    """A TIMEOUT value in ms; a negative one would cancel the query at
+    once, so it is a syntax error."""
+    t = a.next_int("TIMEOUT")
+    if t < 0:
+        raise QuerySyntaxError(
+            f"{a.command}: TIMEOUT must not be negative, got {t}")
+    return t
+
+
 def split_command_line(line: str) -> list[str]:
     """CLI convenience: one command line -> argv, shell quoting rules
     (the same convention as ``parse_stages``; RESP clients pass argv
@@ -409,6 +419,10 @@ class CommandDispatcher:
             elif opt == "LIMIT":
                 off = a.next_int("LIMIT offset")
                 num = a.next_int("LIMIT num")
+                if off < 0 or num < 0:
+                    raise QuerySyntaxError(
+                        "FT.SEARCH: LIMIT offset and num must not be "
+                        f"negative, got {off} {num}")
                 if (off, num) == (0, 0):
                     kw["count_only"] = True
                 else:
@@ -424,7 +438,7 @@ class CommandDispatcher:
             elif opt == "DIALECT":
                 kw["dialect"] = a.next_int("DIALECT")
             elif opt == "TIMEOUT":
-                kw["timeout_ms"] = a.next_int("TIMEOUT")
+                kw["timeout_ms"] = _timeout(a)
             else:
                 raise QuerySyntaxError(
                     f"unknown FT.SEARCH argument {opt!r}")
@@ -465,7 +479,7 @@ class CommandDispatcher:
             elif opt == "TIMEOUT":
                 # the frame is lazy: TIMEOUT bounds the reply executing it
                 a.next("TIMEOUT")
-                timeout_ms = a.next_int("TIMEOUT")
+                timeout_ms = _timeout(a)
             elif opt == "VERBATIM":
                 a.next("VERBATIM")
                 kw["verbatim"] = True

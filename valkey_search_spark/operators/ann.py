@@ -315,8 +315,9 @@ class IVFIndex(ANNArtifact):
         """Top-k by declared metric over the probed lists. The `__list IN
         (...)` predicate prunes partitions at plan time; the per-list scan is
         an exact distance + TakeOrderedAndProject (no shuffle beyond the
-        final k-row merge). ``tiebreak_col`` (a key column) makes the cut
-        deterministic under distance ties."""
+        final k-row merge). ``prefilter``: a SQL predicate (FT.SEARCH
+        passes the translator's text) or a Column. ``tiebreak_col`` (a key
+        column) makes the cut deterministic under distance ties."""
         lists = self._probe_lists(qvec, nprobe)
         q = normalize_query(list(qvec)) if self.metric == "cosine" else list(qvec)
         if self.pq is not None:

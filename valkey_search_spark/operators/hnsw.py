@@ -760,9 +760,10 @@ class HNSWIndex(ANNArtifact):
         """One query against the resident segment graphs: the same hits as
         ``knn_join_hnsw`` for a one-row query frame, as
         ``Row(key_col, __score)`` in (score, key) order — scores in the
-        reference convention. ``where``: SQL string or Column over the
-        payload columns, evaluated in one Spark job over the artifact's
-        rows. The query is rounded to float32 like a stored vector."""
+        reference convention. ``where``: a SQL predicate over the payload
+        columns (FT.SEARCH passes the translator's text), evaluated in one
+        Spark job over the artifact's rows. The query is rounded to float32
+        like a stored vector."""
         _, rows, segs = self._snapshot()
         q = np.asarray(qvec, dtype=np.float32).astype(np.float64)
         if self.metric == "cosine":
@@ -771,8 +772,7 @@ class HNSWIndex(ANNArtifact):
                 q = q / n
         allowed = None
         if where is not None:
-            pred = F.expr(where) if isinstance(where, str) else where
-            ok = rows.where(pred).select("__seg", "__node").toPandas()
+            ok = rows.where(where).select("__seg", "__node").toPandas()
             allowed = {s.seg: np.zeros_like(s.alive) for s in segs}
             for seg, nodes in ok.groupby("__seg")["__node"]:
                 allowed[seg][nodes.to_numpy()] = True

@@ -38,19 +38,28 @@ def _fmt(v) -> str:
 
 
 def search_reply(df: DataFrame, total: int | None = None,
-                 nocontent: bool = False, observation=None) -> list:
+                 nocontent: bool = False, observation=None,
+                 offset: int = 0) -> list:
     """``[total, key, [field, value, ...], ...]``. ``total`` is the
     pre-LIMIT match count when supplied (the reference reports it even when
-    LIMIT trims, src/query/search.cc:779-842); ``observation`` reads it
-    from the CollectMetrics node of the SAME collect job (one-pass path,
+    LIMIT trims, src/query/search.cc:779-842); a KNN reply frame carries it
+    in its ``__total`` column, with ``offset`` rows before its page, and
+    ``observation`` reads it from the CollectMetrics node of the SAME
+    collect job for any other (one-pass path,
     SearchEngine.ft_search_reply); defaults to returned rows."""
     rows = df.collect()
-    if observation is not None:
+    windowed = "__total" in (rows[0].__fields__ if rows else df.columns)
+    if windowed:
+        total = rows[0]["__total"] if rows else 0
+        rows = rows[offset:]
+    elif observation is not None:
         total = int(observation.get["n"])
     out: list = [total if total is not None else len(rows)]
     for r in rows:
         d = r.asDict()
         key = d.pop("__key", None)
+        if windowed:
+            del d["__total"]
         out.append(_fmt(key))
         if not nocontent:
             fv: list[str] = []

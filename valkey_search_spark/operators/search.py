@@ -1,10 +1,16 @@
-"""FT.SEARCH execution: filter -> (KNN) -> sort -> limit, as one
-declarative DataFrame plan.
+"""FT.SEARCH execution: filter -> (KNN) -> sort -> limit -> RETURN, as
+one SQL statement over the index's view.
 
 The reference's multi-stage lifecycle (parse on main thread, predicate
 -> index-fetcher planning, reader-pool execution, content resolution —
-SURVEY.md §3.1) collapses here to: parse -> build plan -> Catalyst.
-FT.SEARCH, FT.AGGREGATE and FT.EXPLAIN share one search phase
+SURVEY.md §3.1) collapses here to: parse -> write one statement ->
+Catalyst. The index frame is a session temp view, registered on its
+first statement (``IndexSchema.view``); each op writes its filter (the
+translator's SQL text), the distance, ORDER BY, OFFSET/LIMIT and the
+RETURN projection into one ``spark.sql`` statement over that view, so
+planning an op is a handful of py4j round-trips whatever the
+predicate's size. FT.SEARCH,
+FT.AGGREGATE and FT.EXPLAIN share one search phase
 (``SearchEngine._prepare``, the reference's one ``SearchParameters``
 record), whose result each call passes on by argument. Its planner
 heuristics (min-cardinality AND child, pre-filter-vs-inline KNN,
@@ -15,6 +21,7 @@ ANN — lives in plans/planner.py and ``_ft_search``.
 
 from __future__ import annotations
 
+import itertools
 import math
 from dataclasses import dataclass
 from typing import NamedTuple
@@ -23,7 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import Catalog, FieldDef, IndexSchema, NumericField, TagField, TextField, num_col, vec_col, VectorField
 from ..errors import QuerySyntaxError, UnknownFieldError
-from ..functions.distance import distance_column, double_literal
+from ..functions.distance import distance_sql
+from ..functions.sqltext import double_literal, sql_ident, sql_str
 from ..parser.ast import (
     And, MatchAll, ParsedQuery, Proximity, TextPred, TERM,
     query_operation_flags,
@@ -42,23 +50,66 @@ from ..plans.predicate_translator import (
 # observed-count test; 2e9 keeps the TakeOrderedAndProject shape
 _OBSERVED_LIMIT_CAP = 2_000_000_000
 
+# temp views through which a statement reads an IVF artifact's answer
+_ann_view_ids = itertools.count()
 
-def _fetch_hits(indexed: DataFrame, hits: list, score: str) -> DataFrame:
-    """The indexed rows of ``hits`` (``(key, score)`` pairs) with the score
-    as column ``score``, as ONE filter and ONE projection: ``__key IN
-    (...)`` and a literal ``map(key, score)[__key]``. Keys are written as
-    UTF-8 hex literals, so no key text needs escaping."""
+
+def _fetch_hits(view: str, hits: list, score: str) -> str:
+    """The statement selecting the indexed rows of ``hits`` (``(key,
+    score)`` pairs) with the score as column ``score``: ``__key IN
+    (...)`` and a literal ``map(key, score)[__key]``."""
     if not hits:
-        return indexed.where(F.lit(False)).withColumn(
-            score, F.lit(None).cast("double"))
+        return (f"SELECT *, CAST(NULL AS DOUBLE) AS {sql_ident(score)} "
+                f"FROM {view} WHERE false")
     best: dict = {}
     for key, d in hits:                  # a key live twice keeps its best
         best.setdefault(str(key), d)
-    lits = {k: f"CAST(X'{k.encode('utf-8').hex()}' AS STRING)" for k in best}
-    pairs = ", ".join(f"{lits[k]}, {double_literal(d)}"
-                      for k, d in best.items())
-    return (indexed.where(F.expr(f"__key IN ({', '.join(lits.values())})"))
-            .withColumn(score, F.expr(f"map({pairs})[__key]")))
+    keys = [sql_str(k) for k in best]
+    pairs = ", ".join(f"{k}, {double_literal(d)}"
+                      for k, d in zip(keys, best.values()))
+    return (f"SELECT *, map({pairs})[`__key`] AS {sql_ident(score)} "
+            f"FROM {view} WHERE `__key` IN ({', '.join(keys)})")
+
+
+def _top_k(rows: str, score: str, k: int, off: int = 0,
+           n: int | None = None) -> str:
+    """Ranks ``off`` to ``off + n`` (to k by default) of the top k of the
+    statement ``rows`` by (``score``, key).
+
+    Catalyst compiles ORDER BY + LIMIT to TakeOrderedAndProject —
+    per-partition heap + driver merge, the same shape as the reference's
+    per-shard top-k fan-in (the reference's src/query/fanout.cc:69) — and
+    its single output partition lets a reply's window count the hits with
+    no exchange. The __key tiebreak resolves ties at the k-th distance
+    deterministically (a distributed scan has no stable iteration order
+    to fall back on). Untracked (null-score) rows are dropped AFTER the
+    cut: a filter below the projection would evaluate the distance twice.
+    Nulls sort last, so a null inside the top k means every non-null row
+    is already in it."""
+    take = max(0, k - off if n is None else min(n, k - off))
+    s = sql_ident(score)
+    return (f"SELECT * FROM ({rows} ORDER BY {s} ASC NULLS LAST, "
+            f"`__key` ASC LIMIT {take} OFFSET {off}) WHERE {s} IS NOT NULL")
+
+
+def _filtered(req: "SearchRequest") -> str:
+    """The statement selecting the index rows the predicate keeps. A
+    predicate with fuzzy/proximity kernel leaves filters in two steps,
+    (JVM candidate filter) -> barrier -> (kernel filter), so the Arrow
+    transfer and the Python kernels see candidates, not the corpus. The
+    rand() column of the inner query is a deterministic-optimization
+    barrier: Catalyst neither combines the two filters nor pushes the
+    kernel filter below it."""
+    view = sql_ident(req.schema.view)
+    if isinstance(req.pred, MatchAll):
+        return f"SELECT * FROM {view}"
+    jvm, udf = req.translator.translate_staged(req.pred)
+    if udf is None:
+        return f"SELECT * FROM {view} WHERE {jvm}"
+    inner = f"SELECT *, rand(0) AS `__barrier` FROM {view}"
+    if jvm is not None:
+        inner += f" WHERE {jvm}"
+    return f"SELECT * EXCEPT (`__barrier`) FROM ({inner}) WHERE {udf}"
 
 
 @dataclass
@@ -79,22 +130,6 @@ class SearchRequest(NamedTuple):
     parsed: ParsedQuery
     pred: object
     translator: PredicateTranslator
-
-
-def _apply_predicate(df: DataFrame, translator: PredicateTranslator,
-                     pred) -> DataFrame:
-    """Apply a predicate as (JVM candidate filter) -> barrier -> (Python
-    kernel filter) when it contains fuzzy/proximity leaves, so the Arrow
-    transfer and the Python kernels see candidates, not the corpus. The
-    rand() projection is a deterministic-optimization barrier: Catalyst
-    neither combines the two Filters nor pushes the UDF filter below it."""
-    jvm, udf = translator.translate_staged(pred)
-    if udf is None:
-        return df.filter(jvm)
-    if jvm is not None:
-        df = df.filter(jvm)
-    return (df.withColumn("__barrier", F.rand(seed=0))
-              .filter(udf).drop("__barrier"))
 
 
 class SearchEngine:
@@ -572,6 +607,13 @@ class SearchEngine:
         import time as _time
 
         _t0 = _time.perf_counter()
+        off, n = limit
+        if off < 0 or (n is not None and n < 0):
+            raise QuerySyntaxError(
+                f"LIMIT offset and num must not be negative, got {off} {n}")
+        if timeout_ms is not None and timeout_ms < 0:
+            raise QuerySyntaxError(
+                f"TIMEOUT must not be negative, got {timeout_ms}")
         req = self._prepare(index, query, params, verbatim, slop, inorder,
                             dialect)
         schema, parsed, pred, translator = req
@@ -581,8 +623,8 @@ class SearchEngine:
         # a segment-graph HNSWIndex
         artifact = (None if knn is None
                     else schema._ann.get(schema.field(knn.attr).attr))
-        # the filter as ONE Column: the planner's probe and the inline
-        # filter share it
+        # the filter as ONE SQL expression: the planner's probe and the
+        # inline filter share it
         where = None
         budget = None           # the graph beam, or the IVF lists probed
         if artifact is not None:
@@ -611,7 +653,9 @@ class SearchEngine:
                 )
 
                 where = translator.translate(pred)
-                frac = estimate_match_fraction(schema.indexed_df(), where)
+                frac = estimate_match_fraction(
+                    schema.sql(f"SELECT * FROM {sql_ident(schema.view)}"),
+                    where)
                 if not use_prefiltering(frac, "hnsw"):
                     # inline defaults: a beam 4x the reference's default
                     # dial, wide enough that a loose filter keeps recall;
@@ -619,116 +663,157 @@ class SearchEngine:
                     budget = (max(4 * knn.k, 40) if graph
                               else max(1, artifact.n_lists // 8))
 
-        if budget is None:
-            df = self._exact(req)
-            ann_mode = (None if knn is None
-                        else "exact" if match_all else "prefilter")
-        else:
-            if where is None and not match_all:
-                where = translator.translate(pred)
-            ann_mode = "ann" if where is None else "inline"
-            score = knn.score_alias()
-            if graph:
-                # beam the resident segment graphs on the driver, then
-                # fetch the winners' records from the cached index frame
-                # by key (the reference's post-HNSW hash fetch, SURVEY
-                # §2.1 row 3)
-                hits = artifact.search(knn.vector, k=knn.k, ef=budget,
-                                       where=where)
-                df = _fetch_hits(schema.indexed_df(), hits, score)
+        # a KNN lazy frame without SORTBY takes its LIMIT page straight
+        # from the top-k cut: one ORDER BY/LIMIT
+        paged = (knn is not None and sortby is None and not count_only
+                 and _observe_total is None)
+        page = limit if paged else (0, None)
+        ann_view = None         # the IVF answer's temp view, while planning
+        try:
+            if budget is None:
+                ann_mode = (None if knn is None
+                            else "exact" if match_all else "prefilter")
+                cands = self._exact(req, *page)
             else:
-                df = artifact.search(knn.vector, k=knn.k, nprobe=budget,
-                                     prefilter=where, score_name=score,
-                                     tiebreak_col="__key")
+                if where is None and not match_all:
+                    where = translator.translate(pred)
+                ann_mode = "ann" if where is None else "inline"
+                score = knn.score_alias()
+                if graph:
+                    # beam the resident segment graphs on the driver, then
+                    # fetch the winners' records from the index view by
+                    # key (the reference's post-HNSW hash fetch, SURVEY
+                    # §2.1 row 3)
+                    hits = artifact.search(knn.vector, k=knn.k, ef=budget,
+                                           where=where)
+                    hit_rows = _fetch_hits(sql_ident(schema.view), hits,
+                                           score)
+                else:
+                    ann_view = f"vss_ann_{next(_ann_view_ids)}"
+                    artifact.search(
+                        knn.vector, k=knn.k, nprobe=budget, prefilter=where,
+                        score_name=score, tiebreak_col="__key",
+                    ).createOrReplaceTempView(ann_view)
+                    hit_rows = f"SELECT * FROM {sql_ident(ann_view)}"
+                cands = _top_k(hit_rows, score, knn.k, *page)
 
-        if count_only:
-            # the exact path counts AFTER the top-k cut, so every path
-            # reports the <=k result-set size
-            n = self._run_with_timeout(df.count, timeout_ms)
-            if knn is not None:
-                tier = "flat" if budget is None else "hnsw"
-                self._count(f"{tier}_vector_index_search_latency_usec",
-                            int((_time.perf_counter() - _t0) * 1e6))
-            return n, req, ann_mode
-        if _observe_total is not None:
-            # pre-LIMIT total in the SAME job (search.cc:779-842 computes
-            # both in one pass): a CollectMetrics node below the sort+limit.
-            # _finish orders the rows so the plan is TakeOrderedAndProject
-            # (per-partition top-k, no full shuffle) whose input — and hence
-            # the metrics node — sees every matching row. ANN replies
-            # report the (<=k) probed result count.
-            df = df.observe(_observe_total, F.count(F.lit(1)).alias("n"))
-        return (self._finish(schema, df, parsed, sortby, sortby_desc, limit,
-                             return_fields, nocontent,
-                             observed=_observe_total is not None,
-                             withsortkeys=withsortkeys),
-                req, ann_mode)
+            if count_only:
+                # the KNN candidates are the top-k cut, so every path
+                # reports the <=k result-set size
+                total = self._run_with_timeout(schema.sql(cands).count,
+                                               timeout_ms)
+                if knn is not None:
+                    tier = "flat" if budget is None else "hnsw"
+                    self._count(f"{tier}_vector_index_search_latency_usec",
+                                int((_time.perf_counter() - _t0) * 1e6))
+                return total, req, ann_mode
+            return (self._finish(req, cands, None if paged else limit,
+                                 sortby, sortby_desc, return_fields,
+                                 nocontent, withsortkeys, _observe_total),
+                    req, ann_mode)
+        finally:
+            if ann_view is not None:
+                # every statement over the view is analyzed by now
+                schema.doc_df.sparkSession.catalog.dropTempView(ann_view)
 
-    def _finish(self, schema, df, parsed, sortby, sortby_desc, limit,
-                return_fields, nocontent, observed=False, withsortkeys=False):
-        """Shared tail: SORTBY -> LIMIT -> RETURN projection.
-        ``withsortkeys`` augments the output with the sort-key value as
-        ``__sortkey`` (docs/commands/ft.search.md WITHSORTKEYS)."""
-        sortkey_col = None
+    def _finish(self, req: SearchRequest, cands: str, limit, sortby,
+                sortby_desc, return_fields, nocontent, withsortkeys,
+                observation) -> DataFrame:
+        """Shared tail over the candidate statement: SORTBY -> LIMIT ->
+        RETURN. ``limit`` None: the candidates are already the page, in
+        order. ``withsortkeys`` augments the output with the sort-key
+        value as ``__sortkey`` (docs/commands/ft.search.md WITHSORTKEYS).
+
+        With ``observation`` (a reply), the pre-LIMIT total comes from
+        the same job as the rows (search.cc:779-842 computes both in one
+        pass). A KNN reply counts its <= k candidates with a window over
+        them (column ``__total``) and ships its first OFFSET+num rows in
+        order: ``search_reply`` drops the OFFSET rows, so a page past the
+        last hit still carries the total. Any other reply observes the
+        count with a CollectMetrics node below the ORDER BY/LIMIT, whose
+        TakeOrderedAndProject input — and hence the metrics node — sees
+        every matching row."""
+        schema, parsed = req.schema, req.parsed
+        knn = parsed.knn
+        score = knn.score_alias() if knn else None
+        sortkey = None
         if sortby is not None:
-            fdef = schema.field(sortby)
-            if isinstance(fdef, NumericField):
-                col = F.col(num_col(fdef.attr))
-            elif isinstance(fdef, TagField) and not fdef.casesensitive:
-                # sort by the INDEXED (case-folded) tag value, not the raw
-                # source string (the reference sorts indexed values)
-                col = F.lower(fdef.source(df).cast("string"))
-            else:
-                # fdef.source resolves ON-JSON identifiers (JSONPath like
-                # `$.title` is not a column name) the same way projection
-                # does; for ON-HASH it is the plain column
-                col = fdef.source(df).cast("string")
-            if withsortkeys:
-                df = df.withColumn("__sortkey", col)
-                sortkey_col = "__sortkey"
-                col = F.col("__sortkey")
-            # missing values placed last (docs/commands/ft.search.md SORTBY)
-            df = df.orderBy(col.desc_nulls_last() if sortby_desc else col.asc_nulls_last())
-        elif parsed.knn is not None:
-            df = df.orderBy(F.col(parsed.knn.score_alias()).asc(),
-                            F.col("__key").asc())
-        elif observed:
-            # deterministic reply order + guarantees the limit cannot
-            # short-circuit the scan under a CollectMetrics observation
-            df = df.orderBy(F.col("__key").asc())
-
+            sortkey = self._sort_key(schema, sortby)
+            order = (f"{sortkey} {'DESC' if sortby_desc else 'ASC'} "
+                     "NULLS LAST")
+        elif knn is not None:
+            order = f"{sql_ident(score)} ASC NULLS LAST, `__key` ASC"
+        else:
+            order = None
+        cols = self._project(schema, return_fields, nocontent, score,
+                             sortkey if withsortkeys else None)
+        if limit is None:
+            return schema.sql(f"SELECT {cols} FROM ({cands})")
         off, n = limit
-        if off:
-            df = df.offset(off)
-        if n is None and observed:
-            # an observed plan (ft_search_reply's pre-LIMIT total) needs a
-            # physical limit even when the caller asked for everything: an
-            # orderBy WITHOUT a limit becomes a range-partitioned Sort
+        if observation is not None and knn is not None:
+            cut = "" if n is None else f" LIMIT {off + n}"
+            return schema.sql(
+                f"SELECT {cols}, `__total` FROM (SELECT *, count(*) OVER () "
+                f"AS `__total` FROM ({cands}) ORDER BY {order}{cut})")
+        if observation is not None:
+            extra = (f", {sortkey} AS `__sortkey`"
+                     if sortkey is not None and not withsortkeys else "")
+            df = schema.sql(f"SELECT {cols}{extra} FROM ({cands})").observe(
+                observation, F.expr("count(1) AS n"))
+            # deterministic reply order + guarantees the limit cannot
+            # short-circuit the scan under the observation
+            if sortkey is None:
+                df = df.orderBy("__key")          # keys are never null
+            else:
+                key = F.col("__sortkey")
+                df = df.orderBy(key.desc_nulls_last() if sortby_desc
+                                else key.asc_nulls_last())
+            if off:
+                df = df.offset(off)
+            # an orderBy WITHOUT a limit becomes a range-partitioned Sort
             # whose boundary-sampling pass re-executes the child,
             # double-counting the CollectMetrics observation beneath
-            n = _OBSERVED_LIMIT_CAP
-        if n is not None:
-            df = df.limit(n)
+            df = df.limit(_OBSERVED_LIMIT_CAP if n is None else n)
+            return df.drop("__sortkey") if extra else df
+        inner = f"SELECT * FROM ({cands})"
+        if order is not None:
+            inner += f" ORDER BY {order}"
         # n=None (explicit "no limit"): skipping the physical limit keeps
         # the result parallel — a numeric limit compiles to GlobalLimit
         # over an Exchange SinglePartition, a serialization point that is
         # pure overhead on a fetch-everything call
-        return self._project(schema, df, return_fields, nocontent,
-                             parsed.knn.score_alias() if parsed.knn else None,
-                             sortkey_col=sortkey_col)
+        if n is not None:
+            inner += f" LIMIT {n}"
+        if off:
+            inner += f" OFFSET {off}"
+        return schema.sql(f"SELECT {cols} FROM ({inner})")
+
+    @staticmethod
+    def _sort_key(schema: IndexSchema, sortby: str) -> str:
+        fdef = schema.field(sortby)
+        if isinstance(fdef, NumericField):
+            return sql_ident(num_col(fdef.attr))
+        if isinstance(fdef, TagField) and not fdef.casesensitive:
+            # sort by the INDEXED (case-folded) tag value, not the raw
+            # source string (the reference sorts indexed values)
+            return f"lower(CAST({fdef.source_sql()} AS STRING))"
+        # source_sql resolves ON-JSON identifiers (JSONPath like `$.title`
+        # is not a column name) the same way projection does; for ON-HASH
+        # it is the plain column
+        return f"CAST({fdef.source_sql()} AS STRING)"
 
     def ft_search_reply(self, index: str, query: str, params: dict | None = None,
                         limit: tuple[int, int | None] = (0, 10), **kw) -> list:
         """RESP-shaped FT.SEARCH reply ``[total, key, [f, v, ...], ...]``
         where ``total`` is the PRE-limit match count, computed in the SAME
-        Spark job as the rows via a CollectMetrics observation — the
-        reference reports both from one pass (src/query/search.cc:779-842).
+        Spark job as the rows (see ``_finish``) — the reference reports
+        both from one pass (src/query/search.cc:779-842).
         ``LIMIT 0 0`` degenerates to the count-only shape ``[total]``."""
         from pyspark.sql import Observation
 
         nocontent = kw.get("nocontent", False)
         if limit[1] == 0:
-            return [self.ft_search(index, query, params=params,
+            return [self.ft_search(index, query, params=params, limit=limit,
                                    count_only=True,
                                    **{k: v for k, v in kw.items()
                                       if k != "nocontent"})]
@@ -739,7 +824,8 @@ class SearchEngine:
         from .reply import search_reply
 
         return self._run_with_timeout(
-            lambda: search_reply(df, observation=obs, nocontent=nocontent),
+            lambda: search_reply(df, observation=obs, nocontent=nocontent,
+                                 offset=limit[0]),
             timeout_ms)
 
     # -- FT.AGGREGATE ------------------------------------------------------
@@ -756,10 +842,11 @@ class SearchEngine:
     ) -> DataFrame:
         """FT.AGGREGATE: the search phase of FT.SEARCH (``_prepare``:
         command-level SLOP/INORDER/VERBATIM/DIALECT, ft.aggregate.md, and
-        the query guards), then the stage pipeline folds the exact result
-        frame (the reference's src/commands/ft_aggregate.cc:95-129,
-        :348-364). The frame is lazy: a TIMEOUT applies where the reply
-        executes it (CommandDispatcher)."""
+        the query guards) as the exact-path statement, then the stage
+        pipeline folds its frame (the reference's
+        src/commands/ft_aggregate.cc:95-129, :348-364). The frame is
+        lazy: a TIMEOUT applies where the reply executes it
+        (CommandDispatcher)."""
         from .aggregate import AggregateExecutor, parse_stages
 
         # stage expressions may consume params too, so the parser's
@@ -767,7 +854,7 @@ class SearchEngine:
         req = self._prepare(index, query, params, verbatim, slop, inorder,
                             dialect, check_unused_params=False)
         knn = req.parsed.knn
-        execu = AggregateExecutor(req.schema, self._exact(req),
+        execu = AggregateExecutor(req.schema, req.schema.sql(self._exact(req)),
                                   score_column=knn.score_alias() if knn
                                   else None)
         return execu.run(parse_stages(stages, params))
@@ -809,62 +896,47 @@ class SearchEngine:
                     )
         return pred
 
-    def _exact(self, req: SearchRequest) -> DataFrame:
-        """The exact path FT.SEARCH and FT.AGGREGATE share: the predicate
-        filters the index frame, then a KNN clause scores the survivors
-        and cuts the top k (the ANN paths are chosen in _ft_search)."""
-        schema, parsed, pred, translator = req
-        df = schema.indexed_df()
-        if not isinstance(pred, MatchAll):
-            df = _apply_predicate(df, translator, pred)
-        knn = parsed.knn
+    def _exact(self, req: SearchRequest, off: int = 0,
+               n: int | None = None) -> str:
+        """The exact-path statement FT.SEARCH and FT.AGGREGATE share: the
+        predicate filters the index view, then a KNN clause scores the
+        survivors and keeps ranks ``off`` to ``off + n`` of the top k
+        (all k by default; the ANN paths are chosen in _ft_search)."""
+        knn = req.parsed.knn
         if knn is None:
-            return df
-        fdef = schema.field(knn.attr)
+            return _filtered(req)
+        fdef = req.schema.field(knn.attr)
         score = knn.score_alias()
-        dist = distance_column(vec_col(fdef.attr), knn.vector, fdef.metric)
-        # top-k: Catalyst compiles orderBy+limit to TakeOrderedAndProject —
-        # per-partition heap + driver merge, the same shape as the reference's
-        # per-shard top-k fan-in (/root/reference/src/query/fanout.cc:69).
-        # __key tiebreak: ties at the k-th distance resolve deterministically
-        # (a distributed scan has no stable iteration order to fall back on).
-        # Untracked (null-distance) rows are dropped AFTER the cut: a filter
-        # above the Project would be pushed below it and evaluate the
-        # distance twice. Nulls sort last, so a null inside the top-k means
-        # every non-null row is already in it.
-        return (df.withColumn(score, dist)
-                .orderBy(F.col(score).asc_nulls_last(), F.col("__key").asc())
-                .limit(knn.k)
-                .where(F.col(score).isNotNull()))
+        dist = distance_sql(vec_col(fdef.attr), knn.vector, fdef.metric)
+        return _top_k(f"SELECT *, {dist} AS {sql_ident(score)} "
+                      f"FROM ({_filtered(req)})", score, knn.k, off, n)
 
-    def _project(self, schema: IndexSchema, df: DataFrame,
-                 return_fields, nocontent: bool, score_col: str | None,
-                 sortkey_col: str | None = None) -> DataFrame:
+    @staticmethod
+    def _project(schema: IndexSchema, return_fields, nocontent: bool,
+                 score_col: str | None, sortkey: str | None = None) -> str:
+        """The RETURN projection as a SELECT list; a ``sortkey``
+        expression is returned as ``__sortkey`` (WITHSORTKEYS)."""
         if nocontent:
-            return df.select("__key")
-        extra = [sortkey_col] if sortkey_col else []
+            return "`__key`"
+        extra = [f"{sortkey} AS `__sortkey`"] if sortkey is not None else []
+        score = [sql_ident(score_col)] if score_col else []
         if return_fields is None:
             json_sources = [f.json_source for f in schema.fields
                             if f.json_source]
             if json_sources:
                 # ON-JSON default reply: one pair named `$` holding the
                 # whole JSON document (docs/commands/ft.search.md response)
-                cols = [F.col("__key"),
-                        F.col(json_sources[0]).cast("string").alias("$")]
-                cols += [F.col(c) for c in extra]
-                if score_col:
-                    cols.append(F.col(score_col))
-                return df.select(*cols)
-            cols = ["__key"] + [c for c in schema.doc_df.columns] + extra
-            if score_col:
-                cols.append(score_col)
-            return df.select(*cols)
-        out = [F.col("__key")] + [F.col(c) for c in extra]
+                doc = [f"CAST({sql_ident(json_sources[0])} AS STRING) AS `$`"]
+            else:
+                doc = [sql_ident(c) for c in schema.doc_columns]
+            return ", ".join(["`__key`"] + doc + extra + score)
+        out = ["`__key`"] + extra
         for rf in return_fields:
             if isinstance(rf, str):
                 rf = ReturnField(rf)
+            alias = sql_ident(rf.alias or rf.name)
             if rf.name == score_col:
-                out.append(F.col(rf.name).alias(rf.alias or rf.name))
+                out.append(f"{sql_ident(rf.name)} AS {alias}")
                 continue
             fdef = schema.field(rf.name) if rf.name in schema._by_attr else None
             # a RETURN identifier must name an indexed attribute or a
@@ -873,16 +945,16 @@ class SearchEngine:
             # fixed-schema frame cannot, so an unknown name is reported
             # as the field error it almost certainly is instead of
             # leaking Spark's AnalysisException
-            if fdef is None and rf.name not in df.columns:
+            if fdef is None and rf.name not in schema.columns:
                 raise UnknownFieldError(
                     f"RETURN field `{rf.name}` is neither an indexed "
                     "attribute nor a record field")
-            # fdef.source handles ON-JSON attributes: the returned value is
+            # source_sql handles ON-JSON attributes: the returned value is
             # the JSONPath extraction, not a frame column
-            src = fdef.source(df) if fdef else F.col(rf.name)
-            out.append(src.alias(rf.alias or rf.name))
+            src = fdef.source_sql() if fdef else sql_ident(rf.name)
+            out.append(f"{src} AS {alias}")
         if score_col and all(
             (rf.name if isinstance(rf, ReturnField) else rf) != score_col for rf in return_fields
         ):
-            out.append(F.col(score_col))
-        return df.select(*out)
+            out += score
+        return ", ".join(out)

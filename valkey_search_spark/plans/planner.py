@@ -19,16 +19,17 @@ with the corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 DEFAULT_PREFILTER_RATIO = 0.001   # valkey_search_options.cc:357
 DEFAULT_SAMPLE_ROWS = 50_000
 
 
-def estimate_match_fraction(df: DataFrame, pred: Column,
+def estimate_match_fraction(df: DataFrame, pred: str,
                             sample_rows: int = DEFAULT_SAMPLE_ROWS) -> float:
-    """Fraction of documents matching ``pred``, from a bounded prefix
-    probe (two CollectLimit-sized jobs, O(1) in table size)."""
+    """Fraction of documents matching the SQL predicate ``pred``, from a
+    bounded prefix probe (two CollectLimit-sized jobs, O(1) in table
+    size)."""
     probe = df.limit(sample_rows)
     n = probe.count()
     if n == 0:

@@ -1,10 +1,22 @@
-"""Predicate AST -> Spark Column translation.
+"""Predicate AST -> Spark SQL boolean expression text.
 
 This replaces the reference's entire physical index layer: what
 valkey-search answers with B+-trees / rax tries / postings
 (/root/reference/src/indexes/), we express as Catalyst boolean
 expressions over the derived columns — predicate pushdown, min/max
 skipping, and whole-stage codegen then do the work of the tries.
+
+The translator writes SQL text, which the engine splices into the one
+statement each FT.SEARCH op runs (operators/search.py), so a predicate
+of any size reaches the JVM in that statement's single parse instead of
+one py4j round-trip per Column node. One literal rule holds throughout:
+numbers are typed DOUBLE literals (``double_literal``), every user
+string is ``CAST(X'<utf-8 hex>' AS STRING)`` (no text ever needs
+escaping), and identifiers are backquoted with inner backquotes doubled
+(``functions/sqltext.py``). The Python kernels (fuzzy match, phrase
+specifiers, overlapping-slot proximity) are registered once per session
+as named SQL functions that take their word, distance and slots as
+literal arguments.
 
 Null discipline (the subtle part, SURVEY.md §4.1 "Negation"): leaves
 stay NULL-propagating so simple tag/numeric comparisons remain
@@ -18,11 +30,13 @@ coalesces once for safety.
 from __future__ import annotations
 
 import math
+import threading
+import weakref
 from dataclasses import dataclass
 
 import pandas as pd
 
-from pyspark.sql import Column, functions as F, types as T
+from pyspark.sql import functions as F, types as T
 
 from ..catalog import (
     MASK_STEM_COL, MASK_TOK_COL, IndexSchema, NumericField, TagField,
@@ -30,6 +44,7 @@ from ..catalog import (
 )
 from ..errors import QuerySyntaxError
 from ..functions.analysis import lex_query_text, stem_query_term
+from ..functions.sqltext import double_literal, sql_ident, sql_str
 from ..parser.ast import (
     FUZZY, INFIX, PHRASE, PREFIX, SUFFIX, TERM,
     And, MatchAll, Not, NumericPred, Or, Predicate, Proximity, TagPred,
@@ -39,6 +54,22 @@ from ..parser.ast import (
 
 # sentinel: fieldless-uniform translation declined, use the per-field OR
 _PER_FIELD = object()
+
+
+def _str_array(words) -> str:
+    return "array(" + ", ".join(sql_str(w) for w in words) + ")"
+
+
+def _all(parts: list[str]) -> str:
+    return parts[0] if len(parts) == 1 else "(" + " AND ".join(parts) + ")"
+
+
+def _any(parts: list[str]) -> str:
+    return parts[0] if len(parts) == 1 else "(" + " OR ".join(parts) + ")"
+
+
+def _false_if_null(x: str) -> str:
+    return f"coalesce({x}, false)"
 
 
 def damerau_levenshtein(a: str, b: str) -> int:
@@ -62,25 +93,38 @@ def damerau_levenshtein(a: str, b: str) -> int:
     return prev[lb]
 
 
-def _fuzzy_match_udf(word: str, dist: int):
-    @F.pandas_udf(T.BooleanType())
-    def _match(tokens: pd.Series) -> pd.Series:
-        def go(lst):
-            if lst is None:
-                return False
-            return any(damerau_levenshtein(t, word) <= dist for t in lst)
+# -- Python kernels, registered per session as named SQL functions ---------
+# Each argument after the first is a literal, so every row of a batch
+# carries the same value: the kernel reads it from the first row.
 
-        return tokens.apply(go)
+def _fuzzy_kernel(tokens: pd.Series, word: pd.Series,
+                  dist: pd.Series) -> pd.Series:
+    """vss_fuzzy_match(array<string>, word, distance): some token within
+    the Damerau-Levenshtein distance of the word."""
+    if tokens.empty:
+        return pd.Series([], dtype=bool)
+    w, d = word.iloc[0], int(dist.iloc[0])
 
-    return _match
+    def go(lst):
+        if lst is None:
+            return False
+        return any(damerau_levenshtein(t, w) <= d for t in lst)
+
+    return tokens.apply(go)
 
 
-def _phrase_specs_udf(members: list[tuple[str, str, int]]):
-    """Phrase chain with wildcard/fuzzy members (docs/full-text/phrase.md):
+def _phrase_specs_kernel(tok_lists: pd.Series, words: pd.Series,
+                         kinds: pd.Series, dists: pd.Series) -> pd.Series:
+    """vss_phrase_specs(array<struct<t,p>>, words, kinds, distances):
+    phrase chain with wildcard/fuzzy members (docs/full-text/phrase.md):
     member i must match at position anchor+i. Resolves each member's
     position set per row, then walks anchors of member 0 — O(tokens x
     members) with the fuzzy edit-distance kernel only on length-plausible
     tokens."""
+    if tok_lists.empty:
+        return pd.Series([], dtype=bool)
+    members = list(zip(words.iloc[0], kinds.iloc[0],
+                       (int(d) for d in dists.iloc[0])))
 
     def matches(token: str, word: str, kind: str, dist: int) -> bool:
         if kind == PREFIX:
@@ -96,25 +140,21 @@ def _phrase_specs_udf(members: list[tuple[str, str, int]]):
 
     k = len(members)
 
-    @F.pandas_udf(T.BooleanType())
-    def _match(tok_lists: pd.Series) -> pd.Series:
-        def go(lst):
-            if lst is None:
-                return False
-            pos_sets: list[set[int]] = [set() for _ in range(k)]
-            for s in lst:
-                t, p = s["t"], s["p"]
-                for i, (word, kind, dist) in enumerate(members):
-                    if matches(t, word, kind, dist):
-                        pos_sets[i].add(p)
-            if any(not ps for ps in pos_sets):
-                return False
-            return any(all(p + i in pos_sets[i] for i in range(1, k))
-                       for p in pos_sets[0])
+    def go(lst):
+        if lst is None:
+            return False
+        pos_sets: list[set[int]] = [set() for _ in range(k)]
+        for s in lst:
+            t, p = s["t"], s["p"]
+            for i, (word, kind, dist) in enumerate(members):
+                if matches(t, word, kind, dist):
+                    pos_sets[i].add(p)
+        if any(not ps for ps in pos_sets):
+            return False
+        return any(all(p + i in pos_sets[i] for i in range(1, k))
+                   for p in pos_sets[0])
 
-        return tok_lists.apply(go)
-
-    return _match
+    return tok_lists.apply(go)
 
 
 def _slots_overlap(slots: list[list[str]]) -> bool:
@@ -129,21 +169,18 @@ def _slots_overlap(slots: list[list[str]]) -> bool:
     return False
 
 
-def _proximity_udf(slots: list[list[str]], slop: int | None, inorder: bool,
-                   aligned: bool = False, inorder_compat: bool = False):
-    """Positional multi-slot match: exists an assignment of one token
-    position per SLOT (a slot is a set of alternative words — single terms
-    or an OR group, the reference's orproximity iterator,
-    src/indexes/text/orproximity.cc), positions distinct, with total
-    intervening-token count (max-min+1-k) <= slop, in query order if
-    ``inorder`` (/root/reference/src/indexes/text/proximity.h:47).
+def _proximity_matcher(slots: list[list[str]], slop: int | None,
+                       inorder: bool, inorder_compat: bool = False):
+    """Positional multi-slot match over one row's (t, p) token structs:
+    exists an assignment of one token position per SLOT (a slot is a set
+    of alternative words — single terms or an OR group, the reference's
+    orproximity iterator, src/indexes/text/orproximity.cc), positions
+    distinct, with total intervening-token count (max-min+1-k) <= slop, in
+    query order if ``inorder`` (the reference's
+    src/indexes/text/proximity.h:47).
     ``slop=None`` (INORDER without SLOP) checks ordering only — the
     reference applies the span bound only when slop is set
     (proximity.h slop_.has_value()).
-
-    ``aligned=True`` matches over a position-aligned array<string> (element
-    i = term at position i) instead of (t, p) structs — the stem-expanded
-    path feeds the aligned stem column.
 
     Linear-time algorithms (the reference's iterator is a sorted merge, and
     a naive cross-product blows up on 5-term queries over frequent words):
@@ -217,31 +254,52 @@ def _proximity_udf(slots: list[list[str]], slop: int | None, inorder: bool,
                 return True
         return False
 
-    @F.pandas_udf(T.BooleanType())
-    def _match(tok_lists: pd.Series) -> pd.Series:
-        def go(lst):
-            if lst is None:
-                return False
-            pos_by_slot: list[list[int]] = [[] for _ in range(k)]
-            if aligned:
-                for pos, t in enumerate(lst):
-                    for si in word_map.get(t, ()):
-                        pos_by_slot[si].append(pos)
-            else:
-                for s in lst:
-                    for si in word_map.get(s["t"], ()):
-                        pos_by_slot[si].append(s["p"])
-            if any(not ps for ps in pos_by_slot):
-                return False
-            if inorder:
-                return _inorder(pos_by_slot)
-            if overlapping:
-                return _unordered_overlap(pos_by_slot)
-            return _unordered(pos_by_slot)
+    def go(lst):
+        if lst is None:
+            return False
+        pos_by_slot: list[list[int]] = [[] for _ in range(k)]
+        for s in lst:
+            for si in word_map.get(s["t"], ()):
+                pos_by_slot[si].append(s["p"])
+        if any(not ps for ps in pos_by_slot):
+            return False
+        if inorder:
+            return _inorder(pos_by_slot)
+        if overlapping:
+            return _unordered_overlap(pos_by_slot)
+        return _unordered(pos_by_slot)
 
-        return tok_lists.apply(go)
+    return go
 
-    return _match
+
+def _proximity_kernel(tok_lists: pd.Series, slots: pd.Series,
+                      slop: pd.Series, inorder: pd.Series,
+                      compat: pd.Series) -> pd.Series:
+    """vss_proximity(array<struct<t,p>>, slots, slop | NULL, inorder,
+    compat): ``_proximity_matcher`` per row."""
+    if tok_lists.empty:
+        return pd.Series([], dtype=bool)
+    s0 = slop.iloc[0]
+    go = _proximity_matcher([list(ws) for ws in slots.iloc[0]],
+                            None if pd.isna(s0) else int(s0),
+                            bool(inorder.iloc[0]), bool(compat.iloc[0]))
+    return tok_lists.apply(go)
+
+
+_KERNELS = {"vss_fuzzy_match": _fuzzy_kernel,
+            "vss_phrase_specs": _phrase_specs_kernel,
+            "vss_proximity": _proximity_kernel}
+_kernel_lock = threading.Lock()
+_kernel_sessions: "weakref.WeakSet" = weakref.WeakSet()
+
+
+def _register_kernels(spark) -> None:
+    """Register the Python kernels as SQL functions, once per session."""
+    with _kernel_lock:
+        if spark not in _kernel_sessions:
+            for name, fn in _KERNELS.items():
+                spark.udf.register(name, F.pandas_udf(fn, T.BooleanType()))
+            _kernel_sessions.add(spark)
 
 
 @dataclass
@@ -295,8 +353,8 @@ def predicate_depth_and_count(pred) -> tuple[int, int]:
 
 
 class PredicateTranslator:
-    """Compiles a Predicate tree to one Spark boolean Column over the
-    index's derived frame (exec-strategy counterpart of
+    """Compiles a Predicate tree to one SQL boolean expression over the
+    index's derived columns (exec-strategy counterpart of
     /root/reference/src/query/search.cc:300-454)."""
 
     def __init__(self, schema: IndexSchema, verbatim: bool = False,
@@ -305,12 +363,12 @@ class PredicateTranslator:
         self.verbatim = verbatim
         self.limits = limits or QueryLimits()
 
-    def translate(self, p: Predicate) -> Column:
-        """Top-level filter column. Leaves stay NULL-propagating (a missing
-        field yields NULL -> dropped by Filter, same as false) so simple
-        comparisons remain parquet-pushable; the one place NULL must read
-        as a definite boolean is under NOT — a doc missing the field DOES
-        match the negation (/root/reference/src/query/predicate.h:113,
+    def translate(self, p: Predicate) -> str:
+        """Top-level filter expression. Leaves stay NULL-propagating (a
+        missing field yields NULL -> dropped by Filter, same as false) so
+        simple comparisons remain parquet-pushable; the one place NULL must
+        read as a definite boolean is under NOT — a doc missing the field
+        DOES match the negation (the reference's src/query/predicate.h:113,
         untracked-key complement numeric.h:128) — so only NOT coalesces.
         No top-level coalesce: Filter already treats NULL as false, and
         wrapping would block parquet pushdown of the whole conjunction.
@@ -448,7 +506,7 @@ class PredicateTranslator:
         return out[0] if len(out) == 1 else And(out)
 
     def translate_staged(self, p: Predicate):
-        """(jvm_col | None, udf_col | None): split the predicate so
+        """(jvm_sql | None, udf_sql | None): split the predicate so
         Python-backed leaves (fuzzy, proximity) evaluate AFTER a separate
         JVM candidate filter. Catalyst evaluates a Python UDF for every
         input row of its ArrowEvalPython node and keeps cheap conjuncts of
@@ -456,19 +514,18 @@ class PredicateTranslator:
         corpus' token arrays through Arrow; the engine applies the two
         parts as separate filters with a barrier in between. Split only
         happens for top-level AND conjuncts (and bare leaves); any
-        Python-backed leaf under OR/NOT falls back to the combined column."""
+        Python-backed leaf under OR/NOT falls back to the combined
+        expression."""
         p = self.preprocess(p)
         conjuncts = p.children if isinstance(p, And) else [p]
         if isinstance(p, (Or, Not)):
             return self._tr(p), None
-        jvm_parts: list[Column] = []
-        udf_parts: list[Column] = []
+        jvm_parts: list[str] = []
+        udf_parts: list[str] = []
         dropped_all = True
         for c in conjuncts:
             if isinstance(c, Proximity):
-                guard = self._proximity_guard(c)
-                if guard is not None:
-                    jvm_parts.append(guard)
+                jvm_parts.append(self._proximity_guard(c))
                 udf_parts.append(self._proximity(c))
                 dropped_all = False
             elif isinstance(c, TextPred) and c.kind == FUZZY:
@@ -476,19 +533,20 @@ class PredicateTranslator:
                 udf_parts.append(self._text(c))
                 dropped_all = False
             else:
-                col = self._tr_opt(c)
-                if col is not None:
-                    jvm_parts.append(col)
+                sql = self._tr_opt(c)
+                if sql is not None:
+                    jvm_parts.append(sql)
                     dropped_all = False
         if dropped_all:
             raise QuerySyntaxError("Invalid Query Syntax")
-        jvm = None
-        for part in jvm_parts:
-            jvm = part if jvm is None else jvm & part
-        udf = None
-        for part in udf_parts:
-            udf = part if udf is None else udf & part
-        return jvm, udf
+        return (_all(jvm_parts) if jvm_parts else None,
+                _all(udf_parts) if udf_parts else None)
+
+    def _kernel(self, name: str) -> str:
+        """The SQL name of a Python kernel, registered in the index's
+        session on first use."""
+        _register_kernels(self.schema.doc_df.sparkSession)
+        return name
 
     def _proximity_stemmed(self, fdef: TextField) -> bool:
         return not (fdef.nostem or self.verbatim)
@@ -504,7 +562,26 @@ class PredicateTranslator:
                      for ws in slots]
         return [list(dict.fromkeys(ws)) for ws in slots]
 
-    def _proximity_guard(self, p: Proximity) -> Column | None:
+    def _slot_presence(self, fdef: TextField, p: Proximity):
+        """(column, aligned, slots, condition) for one target field: the
+        positional column (the position-aligned stems unless NOSTEM /
+        VERBATIM) and the JVM-only condition that it holds at least one
+        alternative word of every slot."""
+        slots = self._proximity_slots(fdef, p)
+        aligned = self._proximity_stemmed(fdef)
+        col = sql_ident(stem_pos_col(fdef.attr) if aligned
+                        else text_col(fdef.attr))
+
+        def has(w):
+            if aligned:
+                return f"array_contains({col}, {sql_str(w)})"
+            return f"exists({col}, s -> s.t = {sql_str(w)})"
+
+        cond = _all([f"({col} IS NOT NULL)"]
+                    + [_any([has(w) for w in ws]) for ws in slots])
+        return col, aligned, slots, cond
+
+    def _proximity_guard(self, p: Proximity) -> str:
         """JVM-only candidate condition: every slot has at least one of its
         alternative words present in a target text field."""
         conds = []
@@ -513,85 +590,44 @@ class PredicateTranslator:
                 # positional matching needs offsets, same gate as phrases
                 # (filter_parser.cc:876)
                 raise QuerySyntaxError("Index does not support offsets")
-            slots = self._proximity_slots(fdef, p)
-            if self._proximity_stemmed(fdef):
-                col = F.col(stem_pos_col(fdef.attr))
+            conds.append(self._slot_presence(fdef, p)[3])
+        return _false_if_null(_any(conds))
 
-                def has(word):
-                    return F.array_contains(col, word)
-            else:
-                col = F.col(text_col(fdef.attr))
-
-                def has(word):
-                    return F.exists(
-                        col, (lambda w: lambda s: s["t"] == w)(word))
-
-            c = col.isNotNull()
-            for ws in slots:
-                alt = has(ws[0])
-                for w in ws[1:]:
-                    alt = alt | has(w)
-                c = c & alt
-            conds.append(c)
-        out = conds[0]
-        for c in conds[1:]:
-            out = out | c
-        return F.coalesce(out, F.lit(False))
-
-    def _fuzzy_guard(self, p: TextPred) -> Column:
+    def _fuzzy_guard(self, p: TextPred) -> str:
         """JVM-only: some token within the edit-distance length window."""
-        w = p.value
-        conds = []
-        for fdef in self._text_attrs(p.attr):
-            toks = F.col(text_col(fdef.attr))
-            conds.append(F.exists(
-                toks,
-                lambda s: F.abs(F.length(s["t"]) - F.lit(len(w))) <= p.distance))
-        out = conds[0]
-        for c in conds[1:]:
-            out = out | c
-        return F.coalesce(out, F.lit(False))
+        return _false_if_null(_any([
+            f"exists({sql_ident(text_col(fdef.attr))}, "
+            f"s -> abs(length(s.t) - {len(p.value)}) <= {int(p.distance)})"
+            for fdef in self._text_attrs(p.attr)]))
 
-    def _tr(self, p: Predicate) -> Column:
-        col = self._tr_opt(p)
-        if col is None:
+    def _tr(self, p: Predicate) -> str:
+        sql = self._tr_opt(p)
+        if sql is None:
             # every leaf was a dropped stopword/empty term: the reference
             # rejects a query with no effective operations
             # (filter_parser.cc:891-893)
             raise QuerySyntaxError("Invalid Query Syntax")
-        return col
+        return sql
 
-    def _tr_opt(self, p: Predicate) -> Column | None:
+    def _tr_opt(self, p: Predicate) -> str | None:
         """Translate, or return None when the node is DROPPED (stopword-only
         text, matching the reference's null-predicate skip). And/Or simply
         lose the dropped child; a Not over a dropped child is itself
         dropped."""
         if isinstance(p, MatchAll):
-            return F.lit(True)
-        if isinstance(p, And):
-            cols = [c for c in (self._tr_opt(ch) for ch in p.children)
-                    if c is not None]
-            if not cols:
+            return "true"
+        if isinstance(p, (And, Or)):
+            parts = [s for s in (self._tr_opt(ch) for ch in p.children)
+                     if s is not None]
+            if not parts:
                 return None
-            col = cols[0]
-            for c in cols[1:]:
-                col = col & c
-            return col
-        if isinstance(p, Or):
-            cols = [c for c in (self._tr_opt(ch) for ch in p.children)
-                    if c is not None]
-            if not cols:
-                return None
-            col = cols[0]
-            for c in cols[1:]:
-                col = col | c
-            return col
+            return _all(parts) if isinstance(p, And) else _any(parts)
         if isinstance(p, Not):
             child = self._tr_opt(p.child)
             if child is None:
                 return None
             # missing-field-matches: NULL child -> false -> negation true
-            return ~F.coalesce(child, F.lit(False))
+            return f"(NOT {_false_if_null(child)})"
         if isinstance(p, TagPred):
             return self._tag(p)
         if isinstance(p, NumericPred):
@@ -603,17 +639,17 @@ class PredicateTranslator:
         raise QuerySyntaxError(f"untranslatable predicate {p!r}")
 
     # -- leaves (all coalesced: missing field never matches) ---------------
-    def _tag(self, p: TagPred) -> Column:
+    def _tag(self, p: TagPred) -> str:
         fdef = self.schema.field(p.attr)
         if not isinstance(fdef, TagField):
             raise QuerySyntaxError(f"field `{p.attr}` is not TAG")
-        col = F.col(tag_col(fdef.attr))
+        col = sql_ident(tag_col(fdef.attr))
         exact = [fdef.fold_query_tag(t) for t, pre, _ in p.tags if not pre]
         prefixes = [(fdef.fold_query_tag(t), rl)
                     for t, pre, rl in p.tags if pre]
-        conds: list[Column] = []
+        conds: list[str] = []
         if exact:
-            conds.append(F.arrays_overlap(col, F.array(*[F.lit(t) for t in exact])))
+            conds.append(f"arrays_overlap({col}, {_str_array(exact)})")
         for pre, raw_len in prefixes:
             # the reference guards on the RAW query-text length including
             # backslashes (tag.cc:160-166 `tag.length() <= min`), so an
@@ -623,28 +659,24 @@ class PredicateTranslator:
                     f"tag prefix `{pre}*` too short for prefix wildcard"
                     f" (tag-min-prefix-length"
                     f" {self.limits.tag_min_prefix_length})")
-            conds.append(F.exists(col, lambda t: t.startswith(pre)))
-        out = conds[0]
-        for c in conds[1:]:
-            out = out | c
-        return out
+            conds.append(f"exists({col}, t -> startswith(t, {sql_str(pre)}))")
+        return _any(conds)
 
-    def _numeric(self, p: NumericPred) -> Column:
+    def _numeric(self, p: NumericPred) -> str:
         fdef = self.schema.field(p.attr)
         if not isinstance(fdef, NumericField):
             raise QuerySyntaxError(f"field `{p.attr}` is not NUMERIC")
-        col = F.col(num_col(fdef.attr))
-        conds: list[Column] = []
+        col = sql_ident(num_col(fdef.attr))
+        conds: list[str] = []
         if not (p.lo == -math.inf and not p.lo_excl):
-            conds.append(col > p.lo if p.lo_excl else col >= p.lo)
+            conds.append(f"{col} {'>' if p.lo_excl else '>='} "
+                         f"{double_literal(p.lo)}")
         if not (p.hi == math.inf and not p.hi_excl):
-            conds.append(col < p.hi if p.hi_excl else col <= p.hi)
+            conds.append(f"{col} {'<' if p.hi_excl else '<='} "
+                         f"{double_literal(p.hi)}")
         if not conds:
-            return col.isNotNull()  # [-inf +inf] == tracked-for-field
-        out = conds[0]
-        for c in conds[1:]:
-            out = out & c
-        return out
+            return f"({col} IS NOT NULL)"  # [-inf +inf] == tracked-for-field
+        return _all(conds)
 
     # -- text ---------------------------------------------------------------
     def _text_attrs(self, attr: str | None) -> list[TextField]:
@@ -658,7 +690,7 @@ class PredicateTranslator:
             raise QuerySyntaxError("fieldless text query but index has no TEXT fields")
         return fields
 
-    def _text(self, p: TextPred) -> Column | None:
+    def _text(self, p: TextPred) -> str | None:
         fields = self._text_attrs(p.attr)
         if p.attr is None and len(fields) > 1:
             out = self._text_fieldless_uniform(fields, p)
@@ -668,10 +700,7 @@ class PredicateTranslator:
                  if c is not None]
         if not conds:
             return None  # stopword-only term on every target field: dropped
-        out = conds[0]
-        for c in conds[1:]:
-            out = out | c
-        return F.coalesce(out, F.lit(False))
+        return _false_if_null(_any(conds))
 
     def _text_fieldless_uniform(self, fields: list[TextField],
                                 p: TextPred):
@@ -702,63 +731,52 @@ class PredicateTranslator:
         if len(sig) != 1:
             return _PER_FIELD
         mask = self.schema.fieldmask_fields() or None
-        mt = F.col(MASK_TOK_COL) if mask else None
+        mt = sql_ident(MASK_TOK_COL) if mask else None
 
-        def any_field_has_token(qt: str) -> Column:
+        def any_field_has_token(qt: str) -> str:
             if mask:
                 if f0.nostem or self.verbatim or p.verbatim:
-                    return F.array_contains(mt, qt)
-                return F.array_contains(
-                    F.col(MASK_STEM_COL),
-                    stem_query_term(qt, f0.min_stem_size))
-            per = [self._term_cond(f, qt, p) for f in fields]
-            c = per[0]
-            for x in per[1:]:
-                c = c | x
-            return c
+                    return f"array_contains({mt}, {sql_str(qt)})"
+                stem = stem_query_term(qt, f0.min_stem_size)
+                return (f"array_contains({sql_ident(MASK_STEM_COL)}, "
+                        f"{sql_str(stem)})")
+            return _any([self._term_cond(f, qt, p) for f in fields])
 
         if p.kind == TERM:
             qtoks = [t for t in lex_query_text(p.value, f0.punctuation)
                      if t not in f0.stopwords]
             if not qtoks:
                 return None
-            out = F.coalesce(any_field_has_token(qtoks[0]), F.lit(False))
-            for qt in qtoks[1:]:
-                out = out & F.coalesce(any_field_has_token(qt), F.lit(False))
-            return out
+            return _all([_false_if_null(any_field_has_token(qt))
+                         for qt in qtoks])
 
         if mask is None:
             return _PER_FIELD        # single-token kinds: same semantics
-        w = p.value                  # either way; mask is purely physical
+        w = sql_str(p.value)         # either way; mask is purely physical
         if p.kind == PREFIX:
-            return F.coalesce(F.exists(mt, lambda t: t.startswith(w)),
-                              F.lit(False))
+            return _false_if_null(f"exists({mt}, t -> startswith(t, {w}))")
         if p.kind in (SUFFIX, INFIX):
             if not f0.with_suffixtrie:
                 raise QuerySyntaxError(
                     "suffix/infix queries need WITHSUFFIXTRIE on the "
                     "target fields")
-            if p.kind == SUFFIX:
-                return F.coalesce(F.exists(mt, lambda t: t.endswith(w)),
-                                  F.lit(False))
-            return F.coalesce(F.exists(mt, lambda t: t.contains(w)),
-                              F.lit(False))
+            fn = "endswith" if p.kind == SUFFIX else "contains"
+            return _false_if_null(f"exists({mt}, t -> {fn}(t, {w}))")
         if p.kind == FUZZY:
             if p.distance > self.limits.fuzzy_max_distance:
                 raise QuerySyntaxError(
                     f"fuzzy distance {p.distance} exceeds fuzzy-max-distance"
                     f" ({self.limits.fuzzy_max_distance})")
-            plausible = F.exists(
-                mt, lambda t: F.abs(F.length(t) - F.lit(len(w)))
-                <= p.distance)
-            return F.coalesce(
-                plausible & _fuzzy_match_udf(w, p.distance)(mt),
-                F.lit(False))
+            d = int(p.distance)
+            plausible = (f"exists({mt}, t -> abs(length(t) - "
+                         f"{len(p.value)}) <= {d})")
+            return _false_if_null(
+                f"({plausible} AND "
+                f"{self._kernel('vss_fuzzy_match')}({mt}, {w}, {d}))")
         return _PER_FIELD
 
-    def _text_one(self, fdef: TextField, p: TextPred) -> Column | None:
-        toks = F.col(text_col(fdef.attr))
-        w = p.value
+    def _text_one(self, fdef: TextField, p: TextPred) -> str | None:
+        toks = sql_ident(text_col(fdef.attr))
         if p.kind == TERM:
             # lex the term with the field's punctuation set, exactly like
             # ingest (filter_parser.cc:597-616 uses the schema lexer):
@@ -766,17 +784,14 @@ class PredicateTranslator:
             # Stopword and empty tokens are skipped, not matched
             # (filter_parser.cc:766-768): "the" alone never reaches the
             # index, so the term contributes nothing to the tree.
-            qtoks = [t for t in lex_query_text(w, fdef.punctuation)
+            qtoks = [t for t in lex_query_text(p.value, fdef.punctuation)
                      if t not in fdef.stopwords]
             if not qtoks:
                 return None
-            conds = [self._term_cond(fdef, qt, p) for qt in qtoks]
-            out = conds[0]
-            for c in conds[1:]:
-                out = out & c
-            return out
+            return _all([self._term_cond(fdef, qt, p) for qt in qtoks])
+        w = sql_str(p.value)
         if p.kind == PREFIX:
-            return F.exists(toks, lambda s: s["t"].startswith(w))
+            return f"exists({toks}, s -> startswith(s.t, {w}))"
         if p.kind in (SUFFIX, INFIX):
             # reference errors unless the field keeps a suffix trie
             # (default on); physical trie not needed here, only the gate
@@ -784,10 +799,8 @@ class PredicateTranslator:
                 raise QuerySyntaxError(
                     f"field `{fdef.attr}` was created without WITHSUFFIXTRIE;"
                     " suffix/infix queries are not supported on it")
-        if p.kind == SUFFIX:
-            return F.exists(toks, lambda s: s["t"].endswith(w))
-        if p.kind == INFIX:
-            return F.exists(toks, lambda s: s["t"].contains(w))
+            fn = "endswith" if p.kind == SUFFIX else "contains"
+            return f"exists({toks}, s -> {fn}(s.t, {w}))"
         if p.kind == FUZZY:
             if p.distance > self.limits.fuzzy_max_distance:
                 raise QuerySyntaxError(
@@ -797,24 +810,26 @@ class PredicateTranslator:
             # necessary for edit distance <= d): Catalyst keeps it below the
             # ArrowEvalPython node, so the O(len^2) DL kernel only runs on
             # rows with a length-plausible token
-            plausible = F.exists(
-                toks, lambda s: F.abs(F.length(s["t"]) - F.lit(len(w))) <= p.distance)
-            return plausible & _fuzzy_match_udf(w, p.distance)(
-                F.transform(toks, lambda s: s["t"]))
+            d = int(p.distance)
+            return (f"(exists({toks}, s -> abs(length(s.t) - "
+                    f"{len(p.value)}) <= {d}) AND "
+                    f"{self._kernel('vss_fuzzy_match')}("
+                    f"transform({toks}, s -> s.t), {w}, {d}))")
         if p.kind == PHRASE:
             return self._phrase(fdef, p.words, p.word_specs)
         raise QuerySyntaxError(f"unknown text kind {p.kind}")
 
-    def _term_cond(self, fdef: TextField, w: str, p: TextPred) -> Column:
-        toks = F.col(text_col(fdef.attr))
+    def _term_cond(self, fdef: TextField, w: str, p: TextPred) -> str:
         if fdef.nostem or self.verbatim or p.verbatim:
-            return F.exists(toks, lambda s: s["t"] == w)
+            return (f"exists({sql_ident(text_col(fdef.attr))}, "
+                    f"s -> s.t = {sql_str(w)})")
         qstem = stem_query_term(w, fdef.min_stem_size)
-        return F.array_contains(F.col(stem_col(fdef.attr)), qstem)
+        return (f"array_contains({sql_ident(stem_col(fdef.attr))}, "
+                f"{sql_str(qstem)})")
 
     def _phrase(self, fdef: TextField, words: list[str],
                 word_specs: list[tuple[str, int]] | None = None
-                ) -> Column | None:
+                ) -> str | None:
         """Exact phrase: the query's members at consecutive post-removal
         positions (positions skip removed stop words,
         docs/topics/search-data-formats.md; no stemming inside quotes,
@@ -832,16 +847,16 @@ class PredicateTranslator:
         documented design: plain phrases behave identically to the
         reference; specifier members are a superset it documents but does
         not yet ship. Word and wildcard members evaluate JVM-side (the
-        exists-chain below); any fuzzy member routes the phrase through an
-        Arrow kernel that resolves per-member positions and walks the
-        consecutive chain.
+        exists-chain below); any fuzzy member routes the phrase through
+        the ``vss_phrase_specs`` kernel, which resolves per-member
+        positions and walks the consecutive chain.
 
         Quoted tokens are NOT stopword-filtered — ParseQuotedTextToken
         (filter_parser.cc:594-625) has no IsStopWord check — but stopwords
         are never indexed (lexer.cc:148), so a phrase containing one is a
         VALID query that matches zero rows: '"the of"' and
         '"the large bolt"' both return 0 results in the reference."""
-        toks = F.col(text_col(fdef.attr))
+        toks = sql_ident(text_col(fdef.attr))
         if word_specs is None:
             word_specs = [(TERM, 0)] * len(words)
         lexed: list[tuple[str, str, int]] = []       # (token, kind, dist)
@@ -874,38 +889,30 @@ class PredicateTranslator:
             # multi-word phrase collapsing to one term does not.
             raise QuerySyntaxError("Index does not support offsets")
         if any(t in fdef.stopwords for t, k, _ in lexed if k == TERM):
-            return F.lit(False)
+            return "false"
 
         if any(k == FUZZY for _, k, _ in lexed):
-            return (toks.isNotNull()
-                    & _phrase_specs_udf([(t, k, d) for t, k, d in lexed])(toks))
+            ts, ks, ds = zip(*lexed)
+            dists = ", ".join(str(int(d)) for d in ds)
+            return (f"({toks} IS NOT NULL AND "
+                    f"{self._kernel('vss_phrase_specs')}({toks}, "
+                    f"{_str_array(ts)}, {_str_array(ks)}, array({dists})))")
 
-        def member_cond(tcol, word, kind):
-            if kind == PREFIX:
-                return tcol.startswith(word)
-            if kind == SUFFIX:
-                return tcol.endswith(word)
-            if kind == INFIX:
-                return tcol.contains(word)
-            return tcol == word
+        def member(tcol, word, kind):
+            fn = {PREFIX: "startswith", SUFFIX: "endswith",
+                  INFIX: "contains"}.get(kind)
+            if fn is None:
+                return f"{tcol} = {sql_str(word)}"
+            return f"{fn}({tcol}, {sql_str(word)})"
 
         w0, k0, _ = lexed[0]
+        chain = [member("s.t", w0, k0)] + [
+            f"exists({toks}, u -> {member('u.t', wd, kind)} "
+            f"AND u.p = s.p + {off})"
+            for off, (wd, kind, _) in enumerate(lexed[1:], 1)]
+        return f"exists({toks}, s -> {_all(chain)})"
 
-        def follower(word, kind, delta, anchor_pos):
-            def check(u):
-                return member_cond(u["t"], word, kind) & (u["p"] == anchor_pos + delta)
-
-            return check
-
-        def anchored(s):
-            cond = member_cond(s["t"], w0, k0)
-            for off, (wd, kind, _) in enumerate(lexed[1:], 1):
-                cond = cond & F.exists(toks, follower(wd, kind, off, s["p"]))
-            return cond
-
-        return F.exists(toks, anchored)
-
-    def _proximity(self, p: Proximity) -> Column:
+    def _proximity(self, p: Proximity) -> str:
         # Positions skip removed stop words, so SLOP counts intervening
         # NON-STOP tokens (reference position model). Terms are
         # stem-expanded like single TERMs (src/query/search.cc:226-298)
@@ -913,31 +920,11 @@ class PredicateTranslator:
         # position-aligned stem column.
         conds = []
         for fdef in self._text_attrs(p.attr):
-            slots = self._proximity_slots(fdef, p)
-            if self._proximity_stemmed(fdef):
-                col = F.col(stem_pos_col(fdef.attr))
-                aligned = True
-            else:
-                col = F.col(text_col(fdef.attr))
-                aligned = False
-
             # cheap JVM containment conjunct first: Catalyst pushes non-UDF
             # conjuncts below the ArrowEvalPython node, so the positional
             # UDF only runs on rows already containing a word of every slot
-            def _has(word):
-                return lambda s: s["t"] == word
-
-            contains_all = F.lit(True)
-            for ws in slots:
-                if aligned:
-                    alt = F.array_contains(col, ws[0])
-                    for w in ws[1:]:
-                        alt = alt | F.array_contains(col, w)
-                else:
-                    alt = F.exists(col, _has(ws[0]))
-                    for w in ws[1:]:
-                        alt = alt | F.exists(col, _has(w))
-                contains_all = contains_all & alt
+            col, aligned, slots, present = self._slot_presence(fdef, p)
+            compat = self.limits.proximity_inorder_compat
             if len(slots) == 2:
                 # two-slot fast path: the pair check is expressible as pure
                 # JVM array expressions (positions of slot words -> exists
@@ -946,16 +933,14 @@ class PredicateTranslator:
                 # as the kernel for k=2, including distinct positions under
                 # slot overlap.
                 positional = self._two_slot_jvm(
-                    col, aligned, slots, p.slop, p.inorder,
-                    compat=self.limits.proximity_inorder_compat)
+                    col, aligned, slots, p.slop, p.inorder, compat=compat)
             elif p.inorder:
                 # k-slot INORDER: the kernel's greedy chain is a left fold
                 # over the slot position arrays — expressible with
-                # F.aggregate, so the reference's 5-term proximity stress
+                # aggregate(), so the reference's 5-term proximity stress
                 # shape (proximity_5term_1combo_100k) stays JVM-side too.
                 positional = self._k_slot_inorder_jvm(
-                    col, aligned, slots, p.slop,
-                    compat=self.limits.proximity_inorder_compat)
+                    col, aligned, slots, p.slop, compat=compat)
             elif not _slots_overlap(slots):
                 positional = self._k_slot_unordered_jvm(
                     col, aligned, slots, p.slop)
@@ -963,53 +948,56 @@ class PredicateTranslator:
                 # unordered with duplicate words across slots: the combo
                 # needs cross-slot distinctness, which has no linear JVM
                 # form — keep the Arrow kernel for this rare shape
-                positional = _proximity_udf(
-                    slots, p.slop, p.inorder, aligned=aligned,
-                    inorder_compat=self.limits.proximity_inorder_compat)(col)
-            conds.append(col.isNotNull() & contains_all & positional)
-        out = conds[0]
-        for c in conds[1:]:
-            out = out | c
-        return F.coalesce(out, F.lit(False))
+                slot_arr = ", ".join(_str_array(ws) for ws in slots)
+                slop = ("CAST(NULL AS INT)" if p.slop is None
+                        else str(int(p.slop)))
+                positional = (
+                    f"{self._kernel('vss_proximity')}("
+                    f"{self._token_structs(col, aligned)}, "
+                    f"array({slot_arr}), {slop}, "
+                    f"{str(bool(p.inorder)).lower()}, "
+                    f"{str(bool(compat)).lower()})")
+            conds.append(_all([present, positional]))
+        return _false_if_null(_any(conds))
 
     @staticmethod
-    def _slot_positions(col, aligned: bool, ws: list[str]) -> Column:
-        """array<int> of token positions matching any word of one slot."""
+    def _token_structs(col: str, aligned: bool) -> str:
+        """The column as (t, p) token structs: the position-aligned stem
+        column takes each element's index as its position."""
         if aligned:
-            indexed = F.transform(
-                col, lambda x, i: F.struct(x.alias("t"), i.alias("p")))
-        else:
-            indexed = col
-        match = (lambda s: s["t"] == ws[0]) if len(ws) == 1 else (
-            lambda s: s["t"].isin(ws))
-        return F.transform(F.filter(indexed, match), lambda s: s["p"])
+            return f"transform({col}, (x, i) -> named_struct('t', x, 'p', i))"
+        return col
 
     @classmethod
-    def _two_slot_jvm(cls, col, aligned: bool, slots: list[list[str]],
+    def _slot_positions(cls, col: str, aligned: bool, ws: list[str]) -> str:
+        """array<int> of token positions matching any word of one slot."""
+        match = (f"s.t = {sql_str(ws[0])}" if len(ws) == 1 else
+                 f"s.t IN ({', '.join(sql_str(w) for w in ws)})")
+        return (f"transform(filter({cls._token_structs(col, aligned)}, "
+                f"s -> {match}), s -> s.p)")
+
+    @classmethod
+    def _two_slot_jvm(cls, col: str, aligned: bool, slots: list[list[str]],
                       slop: int | None, inorder: bool,
-                      compat: bool = False) -> Column:
+                      compat: bool = False) -> str:
         """k=2 positional check in JVM expressions. Semantics mirror
-        ``_proximity_udf``: positions distinct; intervening-token count
+        ``_proximity_matcher``: positions distinct; intervening-token count
         (|p2-p1|-1) <= slop when slop is set; p1 < p2 when inorder."""
         p1s = cls._slot_positions(col, aligned, slots[0])
         p2s = cls._slot_positions(col, aligned, slots[1])
-
-        def pair_ok(p1, p2):
-            if inorder:
-                # compat mode checks start order only, overlap permitted
-                c = (p2 >= p1) if compat else (p2 > p1)
-            else:
-                c = p2 != p1
-            if slop is not None:
-                c = c & (F.abs(p2 - p1) - 1 <= F.lit(slop))
-            return c
-
-        return F.exists(p1s, lambda p1: F.exists(p2s,
-                                                 lambda p2: pair_ok(p1, p2)))
+        if inorder:
+            # compat mode checks start order only, overlap permitted
+            ok = "b >= a" if compat else "b > a"
+        else:
+            ok = "b != a"
+        if slop is not None:
+            ok = f"({ok} AND abs(b - a) - 1 <= {int(slop)})"
+        return f"exists({p1s}, a -> exists({p2s}, b -> {ok}))"
 
     @classmethod
-    def _k_slot_inorder_jvm(cls, col, aligned: bool, slots: list[list[str]],
-                            slop: int | None, compat: bool = False) -> Column:
+    def _k_slot_inorder_jvm(cls, col: str, aligned: bool,
+                            slots: list[list[str]], slop: int | None,
+                            compat: bool = False) -> str:
         """k-slot INORDER proximity as pure JVM expressions. Mirrors the
         kernel's ``_inorder`` exactly: from every start position of slot 0,
         greedily chain to the MINIMAL qualifying position of each next slot
@@ -1018,31 +1006,24 @@ class PredicateTranslator:
         bound the span cost (last - first + 1 - k) by slop when set.
         Greedy-minimal is exact because the span check depends only on the
         first and last chain positions, and minimizing each step minimizes
-        the last. ``F.aggregate`` threads the chain cursor so every step
+        the last. ``aggregate`` threads the chain cursor so every step
         evaluates once — no exponential re-evaluation inside lambdas — and
         a dead end (empty filter -> array_min = null) null-propagates to a
         coalesced False."""
         k = len(slots)
         pos = [cls._slot_positions(col, aligned, ws) for ws in slots]
-        rest = F.array(*pos[1:])
-
-        def step(prev, ps):
-            nxt = (lambda q: q >= prev) if compat else (lambda q: q > prev)
-            return F.array_min(F.filter(ps, nxt))
-
-        def chain_ok(p1):
-            last = F.aggregate(rest, p1, step)
-            ok = last.isNotNull()
-            if slop is not None:
-                ok = ok & ((last - p1 + 1 - k) <= F.lit(slop))
-            return F.coalesce(ok, F.lit(False))
-
-        return F.exists(pos[0], chain_ok)
+        rest = "array(" + ", ".join(pos[1:]) + ")"
+        step = f"array_min(filter(ps, q -> q {'>=' if compat else '>'} prev))"
+        last = f"aggregate({rest}, p1, (prev, ps) -> {step})"
+        ok = f"({last} IS NOT NULL)"
+        if slop is not None:
+            ok = f"({ok} AND ({last} - p1 + 1 - {k}) <= {int(slop)})"
+        return f"exists({pos[0]}, p1 -> {_false_if_null(ok)})"
 
     @classmethod
-    def _k_slot_unordered_jvm(cls, col, aligned: bool,
+    def _k_slot_unordered_jvm(cls, col: str, aligned: bool,
                               slots: list[list[str]],
-                              slop: int | None) -> Column:
+                              slop: int | None) -> str:
         """k-slot unordered proximity for NON-overlapping slots (disjoint
         word sets: a position holds one token, which can fill only one
         slot, so the kernel's distinctness requirement is automatic). A
@@ -1051,18 +1032,11 @@ class PredicateTranslator:
         represented within [m, m + slop + k - 1]: pick those
         representatives and m itself. Without SLOP the span is unbounded
         (proximity.h slop_.has_value()), so slot presence — already
-        enforced by the contains_all conjunct — suffices."""
-        k = len(slots)
+        enforced by the containment conjunct — suffices."""
         if slop is None:
-            return F.lit(True)
+            return "true"
         pos = [cls._slot_positions(col, aligned, ws) for ws in slots]
-        hi = slop + k - 1
-
-        def window_ok(m):
-            ok = F.lit(True)
-            for ps in pos:
-                ok = ok & F.exists(
-                    ps, lambda q: (q >= m) & (q <= m + F.lit(hi)))
-            return ok
-
-        return F.exists(F.flatten(F.array(*pos)), window_ok)
+        hi = int(slop) + len(slots) - 1
+        window = _all([f"exists({ps}, q -> q >= m AND q <= m + {hi})"
+                       for ps in pos])
+        return f"exists(flatten(array({', '.join(pos)})), m -> {window})"
