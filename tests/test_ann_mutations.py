@@ -381,13 +381,11 @@ def test_compact_folds_tombstones_and_preserves_results(spark, emb, tmp_path):
     assert again.gen == idx.gen
 
 
-def test_needs_rebalance_flags_drift(spark, emb, tmp_path):
+def test_list_sizes_count_every_row(spark, emb, tmp_path):
     idx = IVFIndex.build(emb, str(tmp_path / "ix"), vec_col="embedding",
                          metric="l2", n_lists=4, seed=42, key_col="vec_id")
     sizes = idx.list_sizes()
     assert sum(sizes.values()) == emb.count()
-    assert not idx.needs_rebalance(max(sizes.values()))
-    assert idx.needs_rebalance(max(sizes.values()) - 1)
 
 
 def test_ft_info_reports_ann_state(spark, emb, tmp_path):

@@ -5,7 +5,7 @@ import math
 from pyspark.sql import functions as F
 
 from valkey_search_spark.functions.quantize import (
-    dequantize_vectors, quantize_vectors,
+    dequantize_vector_expr, quantize_vector_expr,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -14,7 +14,8 @@ QVEC = [round(math.sin(i + 1), 6) for i in range(64)]
 
 def test_roundtrip_error_bounded(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    rt = dequantize_vectors(quantize_vectors(emb, "embedding"), "qvec", "deq")
+    rt = emb.withColumn("deq", dequantize_vector_expr(
+        quantize_vector_expr(F.col("embedding"))))
     err = rt.select(F.max(F.aggregate(
         F.zip_with(F.col("embedding"), F.col("deq"),
                    lambda a, b: F.abs(a.cast("double") - b)),
@@ -30,8 +31,8 @@ def test_knn_over_quantized_matches_full_precision(spark):
     from valkey_search_spark import SearchEngine, VectorField
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    deq = dequantize_vectors(quantize_vectors(emb, "embedding"),
-                             "qvec", "emb_q")
+    deq = emb.withColumn("emb_q", dequantize_vector_expr(
+        quantize_vector_expr(F.col("embedding"))))
     e = SearchEngine(spark)
     e.ft_create("full", emb, [VectorField("embedding", dim=64)],
                 key_column="vec_id")

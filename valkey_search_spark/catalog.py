@@ -42,6 +42,7 @@ from .functions.analysis import (
     stem_positions_udf,
     text_tokens_column,
 )
+from .functions.distance import unit_vector_expr
 from .functions.sqltext import sql_ident, sql_str
 
 
@@ -232,8 +233,6 @@ class VectorField(FieldDef):
         # rejected -> untracked (search-data-formats.md:131-150)
         v = F.when(F.size(F.array_compact(v)) == self.dim, v)
         if self.metric == "cosine":
-            from .operators.ann_layer import unit_vector_expr
-
             v = unit_vector_expr(v)
         return {vec_col(self.attr): v}
 

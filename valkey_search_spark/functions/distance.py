@@ -1,34 +1,47 @@
-"""Vector distance as one Spark SQL expression — pure JVM-side
-(zip_with/aggregate), no Python in the hot path.
+"""Vector distance, defined once: a Spark SQL expression for FT.SEARCH's
+exact scan, and a numpy kernel for the batch KNN joins, the HNSW build
+and beam, and IVF / segment routing.
 
-``distance_sql`` renders the whole distance as SQL text: the vector
-column (backquoted), the query vector as one ``array(...)`` of typed
-DOUBLE literals, and the zip_with/aggregate lambdas. FT.SEARCH splices
-it into its statement; ``distance_column`` parses it with one ``F.expr``. Building it is therefore one py4j call whatever the DIM; a
-Column built from per-component ``F.lit`` calls costs a round-trip per
-component. Literals follow ``functions/sqltext.py``.
-
-Metrics follow the reference (src/indexes/vector_base.h:106-110,
-docs/commands/ft.create.md:103-109): L2 = euclidean; IP and COSINE are
-returned as ``1 - value``. COSINE assumes ingest-normalized vectors
-(VectorField normalizes; the query vector is normalized here), so
-cosine distance == 1 - dot (src/indexes/vector_base.h:46).
-A null vector, or one whose length differs from the query's, yields a
-null distance.
+Metrics follow the reference (src/indexes/vector_base.h:106-110): L2 =
+euclidean; IP and COSINE are ``1 - dot``, COSINE over unit vectors
+(``unit_vector_expr`` at ingest, ``unit_rows`` on queries); any other
+name raises ``ValueError``. ``distance_sql`` is the whole distance as
+SQL text with the query as one ``array(...)`` of DOUBLE literals, one
+py4j call whatever the DIM; a null or wrong-length vector scores null.
+The numpy kernel ranks on an internal form (squared L2) that ``emit``
+reports, re-scores a kept set pair by pair (``canonical``: a GEMM's
+rounding depends on the block a pair rides in, which could flip ties
+between equal vectors), and cuts with ``top_k``.
 """
 
 from __future__ import annotations
 
-import math
+import numpy as np
 
 from pyspark.sql import Column, functions as F
 
 from .sqltext import double_literal, sql_ident
 
 
-def normalize_query(vec: list[float]) -> list[float]:
-    n = math.sqrt(sum(x * x for x in vec))
-    return [x / n for x in vec] if n > 0 else vec
+def check_metric(metric: str) -> None:
+    """Raise ``ValueError`` for a metric other than l2, ip or cosine."""
+    if metric not in ("l2", "ip", "cosine"):
+        raise ValueError(f"unknown metric {metric!r}")
+
+
+def unit_rows(x: np.ndarray) -> np.ndarray:
+    """``x`` (a vector, or rows of vectors) at unit L2 norm per row; a
+    zero row is left as it is."""
+    n = np.linalg.norm(x, axis=-1, keepdims=True)
+    with np.errstate(invalid="ignore"):         # inf / inf is NaN, quietly
+        return x / np.where(n == 0, 1.0, n)
+
+
+def unit_vector_expr(vec: Column) -> Column:
+    """``vec / ||vec||`` as float, NULL for a zero vector."""
+    norm = F.sqrt(F.aggregate(vec, F.lit(0.0),
+                              lambda a, x: a + x.cast("double") * x))
+    return F.when(norm > 0, F.transform(vec, lambda x: (x / norm).cast("float")))
 
 
 def _sum_zip(col: str, vec: list[float], term: str) -> str:
@@ -38,23 +51,85 @@ def _sum_zip(col: str, vec: list[float], term: str) -> str:
             "0.0D, (acc, t) -> acc + t)")
 
 
-def _dot_sql(col: str, vec: list[float]) -> str:
-    return _sum_zip(col, vec, "CAST(x AS DOUBLE) * y")
-
-
 def distance_sql(col: str, vec: list[float], metric: str) -> str:
     """Distance between the array<float> column named ``col`` and a
     literal query vector, as SQL text."""
+    check_metric(metric)
     if metric == "l2":
         d = "CAST(x AS DOUBLE) - y"
         return f"sqrt({_sum_zip(col, vec, f'({d}) * ({d})')})"
     if metric == "cosine":
-        vec = normalize_query(vec)
-    elif metric != "ip":
-        raise ValueError(f"unknown metric {metric!r}")
-    return f"(1.0D - {_dot_sql(col, vec)})"
+        vec = unit_rows(np.asarray(vec, dtype=np.float64)).tolist()
+    return f"(1.0D - {_sum_zip(col, vec, 'CAST(x AS DOUBLE) * y')})"
 
 
 def distance_column(col: str, vec: list[float], metric: str) -> Column:
     """``distance_sql`` as a Column."""
     return F.expr(distance_sql(col, vec, metric))
+
+
+def sq_norms(mat: np.ndarray, metric: str) -> np.ndarray | None:
+    """Squared row norms for the l2 norm expansion; None for ip/cosine."""
+    return (mat * mat).sum(axis=1) if metric == "l2" else None
+
+
+def distances(q: np.ndarray, mat: np.ndarray, metric: str,
+              sqnorms: np.ndarray | None = None, qq=None) -> np.ndarray:
+    """Internal distances from ``q`` (a vector, or query rows) to the rows
+    of ``mat``. l2 is squared: given the rows' ``sqnorms``, the norm
+    expansion ||v||² - 2v·q + ||q||² (one GEMM; ``qq`` = ||q||²) clipped
+    at 0, else the sum of squared differences."""
+    if metric != "l2":
+        check_metric(metric)
+        return 1.0 - (mat @ q if q.ndim == 1 else q @ mat.T)
+    if sqnorms is None:
+        diff = mat - q if q.ndim == 1 else q[:, None, :] - mat
+        return (diff * diff).sum(axis=-1)
+    if qq is None:
+        qq = (q * q).sum(axis=-1)
+    if q.ndim == 1:
+        return np.maximum(sqnorms - 2.0 * (mat @ q) + qq, 0.0)
+    return np.maximum(sqnorms - 2.0 * (q @ mat.T) + qq[:, None], 0.0)
+
+
+def emit(d: np.ndarray, metric: str) -> np.ndarray:
+    """Reported scores from internal distances."""
+    return np.sqrt(np.maximum(d, 0.0)) if metric == "l2" else d
+
+
+def canonical(q: np.ndarray, rows: np.ndarray, metric: str) -> np.ndarray:
+    """Internal distances pair by pair: ``q`` (dim,) to ``rows`` (m, dim),
+    or each of ``q`` (nq, dim) to its ``rows`` (nq, m, dim)."""
+    check_metric(metric)
+    if metric == "l2":
+        diff = q[..., None, :] - rows
+        return (diff * diff).sum(axis=-1)
+    return 1.0 - (q[..., None, :] * rows).sum(axis=-1)
+
+
+def top_k(d: np.ndarray, keys: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the ``k`` smallest of ``d`` in (distance, key) order,
+    NaN last, so ties at the cut keep the lowest keys. A 2-D ``d`` is cut
+    row by row; ``keys`` is one per column, or one per cell."""
+    rows = np.atleast_2d(d)
+    keys = np.broadcast_to(keys, rows.shape)
+    n = rows.shape[1]
+    kk = min(k, n)
+    if kk == 0 or n <= 4 * kk:
+        idx = np.lexsort((keys, rows), axis=1)[:, :kk]
+    else:
+        # sort each row's argpartition k; a row with a tie at its k-th
+        # value, or a NaN k-th (fewer than k numbers), sorts every
+        # candidate <= the k-th (all of them on NaN)
+        part = np.argpartition(rows, kk - 1, axis=1)[:, :kk]
+        best = np.take_along_axis(rows, part, axis=1)
+        kth = best.max(axis=1)
+        order = np.lexsort((np.take_along_axis(keys, part, axis=1), best),
+                           axis=1)
+        idx = np.take_along_axis(part, order, axis=1)
+        for i in np.flatnonzero((rows <= kth[:, None]).sum(axis=1) != kk):
+            r = rows[i]
+            cand = (np.arange(n) if np.isnan(kth[i])
+                    else np.flatnonzero(r <= kth[i]))
+            idx[i] = cand[np.lexsort((keys[i][cand], r[cand]))][:kk]
+    return idx if np.ndim(d) == 2 else idx[0]

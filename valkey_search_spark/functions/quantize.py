@@ -13,7 +13,7 @@ a storage-tier choice its in-memory design never needed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 def quantize_vector_expr(vec: Column) -> Column:
@@ -33,13 +33,3 @@ def dequantize_vector_expr(qstruct: Column) -> Column:
     return F.transform(
         qstruct["q"],
         lambda x: (x.cast("double") * qstruct["scale"]).cast("float"))
-
-
-def quantize_vectors(df: DataFrame, vec_col: str,
-                     out_col: str = "qvec") -> DataFrame:
-    return df.withColumn(out_col, quantize_vector_expr(F.col(vec_col)))
-
-
-def dequantize_vectors(df: DataFrame, q_col: str,
-                       out_col: str = "vec") -> DataFrame:
-    return df.withColumn(out_col, dequantize_vector_expr(F.col(q_col)))

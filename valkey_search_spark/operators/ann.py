@@ -14,10 +14,8 @@ cluster engine. The Spark-native equivalent of "ANN index" is IVF:
   of the data. Inside the probed lists the distance is exact, so
   nprobe=n_lists degrades gracefully to exact brute force (recall 1.0).
 
-Distances mirror the reference metric map
-(/root/reference/src/indexes/vector_base.h:106-110): l2 -> Euclidean,
-ip/cosine -> 1 - product (cosine assumes ingest-normalized vectors,
-vector_base.h:46), so scores are directly comparable to FLAT search.
+Every distance, in SQL or numpy, and every numpy (distance, key) cut
+comes from functions/distance.py, so scores match FLAT search.
 """
 
 from __future__ import annotations
@@ -29,7 +27,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.distance import distance_column, normalize_query
+from ..functions.distance import (
+    canonical, check_metric, distance_column, distances, emit, sq_norms,
+    top_k, unit_rows,
+)
 from ..sources.swap import require_local_path, sibling_swap
 from .ann_layer import (
     ANNArtifact, check_tier, kmeans_cells, nearest_cells,
@@ -290,10 +291,6 @@ class IVFIndex(ANNArtifact):
                 (self.scan_raw().groupBy("__list")
                  .agg(F.count("*").alias("n")).collect())}
 
-    def needs_rebalance(self, max_list_rows: int) -> bool:
-        """True when any physical list exceeds the cap."""
-        return any(n > max_list_rows for n in self.list_sizes().values())
-
     def _read(self) -> DataFrame:
         """The persisted corpus with ``vec_col`` as float — dequantized
         JVM-side (whole-stage codegen) when the index stores int8 or PQ
@@ -319,7 +316,8 @@ class IVFIndex(ANNArtifact):
         passes the translator's text) or a Column. ``tiebreak_col`` (a key
         column) makes the cut deterministic under distance ties."""
         lists = self._probe_lists(qvec, nprobe)
-        q = normalize_query(list(qvec)) if self.metric == "cosine" else list(qvec)
+        q = np.asarray(qvec, dtype=np.float64)
+        q = (unit_rows(q) if self.metric == "cosine" else q).tolist()
         if self.pq is not None:
             # ADC fast path: score straight off the m-byte codes (exact
             # query vs per-subspace LUT, pure JVM element_at) — the
@@ -434,9 +432,6 @@ def _knn_join_flipped(queries: DataFrame, corpus: DataFrame, k: int,
     ``IVFIndex`` (``index_path=``) for huge-x-huge joins."""
     from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-
     from pyspark.sql import types as T
     from pyspark.sql.window import Window
 
@@ -463,9 +458,7 @@ def _knn_join_flipped(queries: DataFrame, corpus: DataFrame, k: int,
             " B). Build an IVFIndex (pass index_path=) so the corpus is "
             "list-partitioned once and probed per query batch.")
     if metric == "cosine":
-        qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-        qn[qn == 0] = 1.0
-        qmat = qmat / qn
+        qmat = unit_rows(qmat)
     bcq = spark.sparkContext.broadcast((qkeys, qmat))
 
     scan_schema = T.StructType([
@@ -479,35 +472,32 @@ def _knn_join_flipped(queries: DataFrame, corpus: DataFrame, k: int,
                     ) -> Iterator[pd.DataFrame]:
         qk, qm = bcq.value
         nq = len(qk)
-        qsq = (qm * qm).sum(1)
-        run_d = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        run_key = [np.empty(0, dtype=object) for _ in range(nq)]
+        # running (|Q|, <= k) top-k, merged with each chunk's distances
+        run_d = np.empty((nq, 0), dtype=np.float64)
+        run_key = np.empty((nq, 0), dtype=object)
         for arrow_batch in batches:
             arrow_batch = arrow_batch.dropna(subset=[vec_col])
             # re-chunk to batch_size: the distance matrix is |Q| x chunk
             for lo in range(0, len(arrow_batch), batch_size):
                 pdf = arrow_batch.iloc[lo:lo + batch_size]
                 cmat = np.array(list(pdf[vec_col]), dtype=np.float64)
-                keys = pdf[corpus_key].to_numpy().astype(object)
-                if metric == "l2":
-                    d = qsq[:, None] - 2.0 * (qm @ cmat.T) \
-                        + (cmat * cmat).sum(1)[None, :]
-                    d = np.sqrt(np.maximum(d, 0.0))
-                else:
-                    if metric == "cosine":
-                        cn = np.linalg.norm(cmat, axis=1, keepdims=True)
-                        cn[cn == 0] = 1.0
-                        cmat = cmat / cn
-                    d = 1.0 - qm @ cmat.T
-                for qi in range(nq):
-                    alld = np.concatenate([run_d[qi], d[qi]])
-                    allk = np.concatenate([run_key[qi], keys])
-                    idx = np.lexsort((allk, alld))[:k]
-                    run_d[qi], run_key[qi] = alld[idx], allk[idx]
-        rows = [(qi, qk[qi], run_key[qi][j], float(run_d[qi][j]))
-                for qi in range(nq) for j in range(len(run_key[qi]))]
-        yield pd.DataFrame(rows, columns=["__qidx", query_key, corpus_key,
-                                          "distance"])
+                if metric == "cosine":
+                    cmat = unit_rows(cmat)
+                d = emit(distances(qm, cmat, metric, sq_norms(cmat, metric)),
+                         metric)
+                keys = np.broadcast_to(pdf[corpus_key].to_numpy(), d.shape)
+                alld = np.concatenate([run_d, d], axis=1)
+                allk = np.concatenate([run_key, keys], axis=1)
+                idx = top_k(alld, allk, k)
+                run_d = np.take_along_axis(alld, idx, axis=1)
+                run_key = np.take_along_axis(allk, idx, axis=1)
+        kk = run_d.shape[1]
+        yield pd.DataFrame({
+            "__qidx": np.repeat(np.arange(nq, dtype=np.int32), kk),
+            query_key: np.repeat(qk, kk),
+            corpus_key: run_key.ravel(),
+            "distance": run_d.ravel(),
+        }, columns=["__qidx", query_key, corpus_key, "distance"])
 
     scanned = corpus.select(corpus_key, vec_col).dropna().mapInPandas(
         scan_corpus, scan_schema)
@@ -568,11 +558,9 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 10,
     """
     from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-
     from pyspark.sql import types as T
 
+    check_metric(metric)
     spark = queries.sparkSession
     if max_broadcast_bytes is not None:
         if corpus_size_hint is not None:
@@ -613,9 +601,7 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 10,
     ckeys, cmat = _collect_matrix(
         corpus.select(corpus_key, vec_col).dropna(), corpus_key, vec_col)
     if metric == "cosine":
-        norms = np.linalg.norm(cmat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        cmat = cmat / norms
+        cmat = unit_rows(cmat)
     order = np.argsort(ckeys)           # deterministic tiebreak by corpus key
     ckeys, cmat = ckeys[order], cmat[order]
     bc = spark.sparkContext.broadcast((ckeys, cmat))
@@ -630,6 +616,7 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 10,
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         keys, mat = bc.value
+        csq = sq_norms(mat, metric)
         for arrow_batch in batches:
             arrow_batch = arrow_batch.dropna(subset=[vec_col])
             # re-chunk Arrow's batches (10k rows by default) down to
@@ -639,44 +626,18 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 10,
             for lo in range(0, len(arrow_batch), batch_size):
                 pdf = arrow_batch.iloc[lo:lo + batch_size]
                 q = np.array(list(pdf[vec_col]), dtype=np.float64)
-                if metric == "l2":
-                    # ||q-c||^2 = ||q||^2 - 2qc + ||c||^2, sqrt at end
-                    d = (q * q).sum(1)[:, None] - 2.0 * (q @ mat.T) \
-                        + (mat * mat).sum(1)[None, :]
-                    d = np.sqrt(np.maximum(d, 0.0))
-                else:
-                    if metric == "cosine":
-                        qn = np.linalg.norm(q, axis=1, keepdims=True)
-                        qn[qn == 0] = 1.0
-                        q = q / qn
-                    d = 1.0 - q @ mat.T     # ip / cosine: 1 - product
-                kk = min(k, d.shape[1])
-                n_c = d.shape[1]
-                rows = []
-                for i, qid in enumerate(pdf[query_key].to_numpy()):
-                    # deterministic (distance, key) order without a
-                    # full n log n sort per query: argpartition to the
-                    # k-th distance, then include EVERY candidate tied
-                    # at that distance (so boundary ties still resolve
-                    # to the lowest keys, exactly as the full lexsort
-                    # did), and lexsort only that small set
-                    di = d[i]
-                    if n_c > 4 * kk:
-                        part = np.argpartition(di, kk - 1)[:kk]
-                        kth = di[part].max()
-                        # NaN distances (NaN query components) poison
-                        # the threshold — fall back to the full set,
-                        # where lexsort places NaN last like the old
-                        # full-sort path did
-                        cand = (np.arange(n_c) if np.isnan(kth)
-                                else np.flatnonzero(di <= kth))
-                    else:
-                        cand = np.arange(n_c)
-                    idx = cand[np.lexsort((keys[cand], di[cand]))][:kk]
-                    for rank, j in enumerate(idx, 1):
-                        rows.append((qid, keys[j], float(di[j]), rank))
-                yield pd.DataFrame(rows, columns=[query_key, corpus_key,
-                                                  "distance", "rank"])
+                if metric == "cosine":
+                    q = unit_rows(q)
+                d = emit(distances(q, mat, metric, csq), metric)
+                idx = top_k(d, keys, k)
+                kk = idx.shape[1]
+                yield pd.DataFrame({
+                    query_key: np.repeat(pdf[query_key].to_numpy(), kk),
+                    corpus_key: keys[idx].ravel(),
+                    "distance": np.take_along_axis(d, idx, axis=1).ravel(),
+                    "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32),
+                                    len(pdf)),
+                }, columns=[query_key, corpus_key, "distance", "rank"])
 
     return queries.select(query_key, vec_col).mapInPandas(score, out_schema)
 
@@ -773,9 +734,7 @@ def knn_join_bucketed(queries: DataFrame, index: IVFIndex, k: int = 10,
         q = np.stack(left[vec_col].to_numpy()).astype(np.float64)
         ckeys = right[corpus_key].to_numpy()
         if metric == "cosine":                  # corpus normalized at build
-            qn = np.linalg.norm(q, axis=1, keepdims=True)
-            qn[qn == 0] = 1.0
-            q = q / qn
+            q = unit_rows(q)
         if pq is not None:
             # batch ADC: (nq, m, 256) tables via the norm-expansion
             # einsum (a naive 4-D difference broadcast allocates a
@@ -799,36 +758,18 @@ def knn_join_bucketed(queries: DataFrame, index: IVFIndex, k: int = 10,
             d = np.sqrt(np.maximum(d, 0.0)) if metric == "l2" else 1.0 + d
         else:
             c = np.stack(right[cvec].to_numpy()).astype(np.float64)
-            if metric == "l2":
-                d = ((q * q).sum(1)[:, None] - 2.0 * (q @ c.T)
-                     + (c * c).sum(1)[None, :])
-                d = np.sqrt(np.maximum(d, 0.0))
-            else:
-                d = 1.0 - q @ c.T
-        kk = min(k, d.shape[1])
-        # (distance, key) lexsort: the global window tiebreaks on
-        # (distance, key), so the per-list cut must survive the same
-        # candidates — argpartition would drop distance-ties arbitrarily.
-        # One vectorized 2-D lexsort (axis=1) replaces the per-query
-        # Python loop: rows are assembled with numpy fancy indexing.
-        order = np.lexsort(
-            (np.broadcast_to(ckeys, d.shape), d), axis=1)[:, :kk]
+            d = emit(distances(q, c, metric, sq_norms(c, metric)), metric)
+        # the per-list cut keeps the same (distance, key) candidates the
+        # global window ranks by
+        order = top_k(d, ckeys, k)
+        kk = order.shape[1]
         if pq is None:
-            # re-emit the kept set with the CANONICAL per-pair distance
-            # (same fix as hnsw._search_layer): the gemm's per-cell
-            # rounding depends on the LIST's block shape, so the same
-            # (query, vector) pair scored in two differently-sized
-            # lists (split vs unsplit index, or exact duplicates
-            # landing in different lists) can differ by 1 ulp, which
-            # flips the global (distance, key) window's tie order. The
-            # elementwise row form depends only on the pair itself.
-            # O(nq*k*dim) — negligible next to the (nq, n_list) gemm.
-            sel = c[order]                          # (nq, kk, dim)
-            if metric == "l2":
-                diff = q[:, None, :] - sel
-                dsel = np.sqrt((diff * diff).sum(axis=2))
-            else:
-                dsel = 1.0 - (q[:, None, :] * sel).sum(axis=2)
+            # re-score the kept set pair by pair: the same (query,
+            # vector) pair scored in two differently-sized lists (split
+            # vs unsplit index, or exact duplicates landing in different
+            # lists) can differ by 1 ulp in the GEMM, which would flip
+            # the global window's tie order. O(nq*k*dim).
+            dsel = emit(canonical(q, c[order], metric), metric)
         else:
             dsel = np.take_along_axis(d, order, axis=1)
         return pd.DataFrame({
@@ -931,8 +872,7 @@ def knn_join_binary(queries: DataFrame, corpus: DataFrame, k: int = 10,
 
     from ..functions.binary_quant import (binary_codes, popcount_words)
 
-    if metric not in ("l2", "cosine", "ip"):
-        raise ValueError(f"unknown metric {metric!r}")
+    check_metric(metric)
     if k <= 0 or oversample <= 0:
         raise ValueError("k and oversample must be positive")
     spark = queries.sparkSession

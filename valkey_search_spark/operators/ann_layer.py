@@ -3,8 +3,8 @@
 (IVF list, HNSW segment) with a JSON meta file beside it. Each rule both
 follow is defined here once:
 
-- vector prep: null vectors dropped, cosine vectors normalized at ingest
-  (zero vectors dropped; the reference's src/indexes/vector_base.h:46);
+- vector prep: the metric checked before any Spark job, null vectors
+  dropped, cosine vectors normalized (zero vectors dropped);
 - cells: one KMeans fit, a hash split of oversized cells, and the
   Euclidean nearest-centroid rule queries and appends route by;
 - storage tier: its argument checks, codebook training, encode/decode;
@@ -28,24 +28,22 @@ from contextlib import contextmanager
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..artifact import check_format
+from ..functions.distance import (
+    check_metric, distances, sq_norms, top_k, unit_rows, unit_vector_expr,
+)
 from ..functions.pq import PQCodebook
 from ..functions.quantize import dequantize_vector_expr, quantize_vector_expr
 from ..sources.swap import require_local_path, sibling_swap
 
 
 # -- vector prep ---------------------------------------------------------------
-def unit_vector_expr(vec: Column) -> Column:
-    """``vec / ||vec||`` as float, NULL for a zero vector."""
-    norm = F.sqrt(F.aggregate(vec, F.lit(0.0),
-                              lambda a, x: a + x.cast("double") * x))
-    return F.when(norm > 0, F.transform(vec, lambda x: (x / norm).cast("float")))
-
-
 def prepare_vectors(df: DataFrame, vec_col: str, metric: str) -> DataFrame:
-    """Rows with a vector, cosine ones normalized (zero vectors dropped)."""
+    """Rows with a vector, cosine ones normalized (zero vectors dropped).
+    An unknown metric raises here, before any Spark job."""
+    check_metric(metric)
     work = df.where(F.col(vec_col).isNotNull())
     if metric == "cosine":
         work = (work.withColumn(vec_col, unit_vector_expr(F.col(vec_col)))
@@ -111,12 +109,9 @@ def nearest_cells(q: np.ndarray, centroids: np.ndarray, n: int, metric: str,
     centroids could miss a vector's own cell (centroid norms skew it)."""
     q = np.asarray(q, dtype=np.float64)
     if metric == "cosine":
-        norm = np.linalg.norm(q, axis=1, keepdims=True)
-        norm[norm == 0] = 1.0
-        q = q / norm
-    d = ((q * q).sum(1)[:, None] - 2.0 * (q @ centroids.T)
-         + (centroids * centroids).sum(1)[None, :])
-    idx = np.argsort(d, axis=1, kind="stable")[:, :n]
+        q = unit_rows(q)
+    d = distances(q, centroids, "l2", sq_norms(centroids, "l2"))
+    idx = top_k(d, np.arange(len(centroids)), n)
     if cell_map is None:
         cell_map = [[c] for c in range(len(centroids))]
     return [np.array([p for c in row for p in cell_map[c]] + list(always),

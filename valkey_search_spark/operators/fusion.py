@@ -121,6 +121,8 @@ def mmr_select(candidates: DataFrame, k: int = 10, lam: float = 0.5,
     import numpy as np
     import pandas as pd
 
+    from ..functions.distance import unit_rows
+
     q, d = query_col, doc_col
     score_ok = (F.col(score_col).isNotNull()
                 & ~F.isnan(F.col(score_col).cast("double")))
@@ -143,10 +145,8 @@ def mmr_select(candidates: DataFrame, k: int = 10, lam: float = 0.5,
 
     def greedy(pdf: pd.DataFrame) -> pd.DataFrame:
         # pool x dim matrix, L2-normalized once; greedy argmax loop
-        emb = np.array(pdf[embedding_col].tolist(), dtype=np.float64)
-        norms = np.linalg.norm(emb, axis=1)
-        norms[norms == 0.0] = 1.0
-        emb = emb / norms[:, None]
+        emb = unit_rows(np.array(pdf[embedding_col].tolist(),
+                                 dtype=np.float64))
         rel = pdf[score_col].to_numpy(dtype=np.float64)
         docs = pdf[d].to_numpy()
         # deterministic candidate order for tie-breaks

@@ -42,8 +42,8 @@ With ``ef >= segment rows`` the beam degenerates to an exhaustive
 walk of each (connected) graph, so full-explore search is EXACT and
 shares the brute-force oracle — the property the driver row pins.
 
-Metrics follow vector_base.h:106-110: l2 -> euclidean, ip/cosine ->
-1 - dot (cosine vectors are normalized at ingest, queries here).
+Every distance, from graph build to emitted score, comes from the numpy
+kernel of functions/distance.py; the beam ranks on squared L2.
 
 Artifact paths must be LOCAL (or shared-POSIX) filesystem paths: the
 graph data is written via Spark, but the meta file, tombstone listing
@@ -65,6 +65,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F, types as T
 
+from ..functions.distance import (
+    canonical, distances, emit, sq_norms, top_k, unit_rows,
+)
 from ..sources.swap import require_local_path
 from .ann_layer import (
     ANNArtifact, check_tier, kmeans_cells, nearest_cells_udf,
@@ -76,31 +79,15 @@ _LOAD_LOCK = threading.Lock()       # one resident-graph load at a time
 
 
 # ---------------------------------------------------------------------------
-# numpy kernel — internal distances are squared-L2 / (1 - dot); squared-L2 is
-# order-isomorphic to L2 so sqrt is applied only on emitted scores
+# graph kernel
 # ---------------------------------------------------------------------------
-
-def _sqnorms(vecs: np.ndarray) -> np.ndarray:
-    return (vecs * vecs).sum(axis=1)
-
 
 def _kdist(vecs: np.ndarray, idx, q: np.ndarray, metric: str,
            sq=None, qq=None) -> np.ndarray:
-    """Distances from q to vecs[idx]. For l2, the norm-expansion form
-    ||v||² - 2v·q + ||q||² (one GEMV instead of subtract+square+sum —
-    ~2x on the beam hot path; clipped at 0 against float cancellation)
-    when the precomputed row norms ``sq``/``qq`` are supplied."""
-    v = vecs[idx]
-    if metric == "l2":
-        if sq is None:
-            d = v - q
-            return (d * d).sum(axis=1)
-        return np.maximum(sq[idx] - 2.0 * (v @ q) + qq, 0.0)
-    return 1.0 - v @ q
-
-
-def _emit(d: np.ndarray, metric: str) -> np.ndarray:
-    return np.sqrt(np.maximum(d, 0.0)) if metric == "l2" else d
+    """``distances`` from q to ``vecs[idx]``; l2 row norms ``sq`` select
+    the norm expansion, ~2x the subtract-square-sum on the beam."""
+    return distances(q, vecs[idx], metric, None if sq is None else sq[idx],
+                     qq)
 
 
 def _select_heuristic(vecs, q, cand, cap, metric, sq=None):
@@ -180,7 +167,7 @@ def _build_graph(vecs: np.ndarray, m: int, ef_c: int, seed: int,
     nbrs = [[[] for _ in range(int(levels[i]) + 1)] for i in range(n)]
     if n == 0:
         return levels, nbrs, -1, -1
-    sq = _sqnorms(vecs) if metric == "l2" else None
+    sq = sq_norms(vecs, metric)
     entry, top = 0, int(levels[0])
     visited = bytearray(n)                     # reused stamped scratch
     stamp = 0
@@ -279,20 +266,11 @@ def _search_graph(vecs, levels, nbrs, entry, top, q, k, ef, metric,
         return []
     # ONE full gemv per (query, segment), then every traversal distance
     # is a plain list lookup. BLAS computes each row's dot independently
-    # of the batch it rides in, and the elementwise tail ops match
-    # _kdist exactly, so these are the SAME float64 values the old
-    # per-expansion _kdist batches produced — precomputing removes ~50
-    # small numpy round-trips per query (measured 36% of the beam
+    # of the batch it rides in, so these are the same float64 values
+    # per-expansion distance batches would give — precomputing removes
+    # ~50 small numpy round-trips per query (measured 36% of the beam
     # kernel at the bench's 500-query batch) without touching results.
-    if metric == "l2":
-        if sq is not None:
-            d_all = np.maximum(sq - 2.0 * (vecs @ q) + (q @ q), 0.0)
-        else:
-            diff = vecs - q
-            d_all = (diff * diff).sum(axis=1)
-    else:
-        d_all = 1.0 - vecs @ q
-    dl = d_all.tolist()                        # unboxed floats for the loop
+    dl = distances(q, vecs, metric, sq, q @ q).tolist()
     ep = entry
     epd = dl[ep]
     for lev in range(top, 0, -1):
@@ -345,28 +323,15 @@ def _search_graph(vecs, levels, nbrs, entry, top, q, k, ef, metric,
                     heapq.heappush(res, (-dd, -nn))
                     if len(res) > kres:
                         heapq.heappop(res)
-    out = sorted((-nd, -nn) for nd, nn in res)
-    if out and (sq is not None or metric != "l2"):
-        # re-emit the kept slack set with the CANONICAL per-row
-        # distance so the final k-cut happens on batch-independent
-        # values. Two reasons: (a) l2 traversal may use the
-        # norm-expansion form (cancellation error ~1e-8 near zero);
-        # (b) ip/cosine traversal computes 1 - v@q as a sub-matrix
-        # GEMV whose per-row summation order depends on BATCH
-        # COMPOSITION — the same node scored in two beam batches (or
-        # vs a full-matrix oracle) can differ by 1 ulp, which flips
-        # (distance, node) tie order between EXACT-DUPLICATE vectors.
-        # The elementwise (v*q).sum(axis=1) form is pairwise-summed
-        # per row, so identical rows always get identical distances
-        # and ties resolve by node id deterministically.
-        nodes = np.fromiter((nn for _, nn in out), dtype=np.int64)
-        if metric == "l2":
-            diff = vecs[nodes] - q
-            exact = (diff * diff).sum(axis=1)
-        else:
-            exact = 1.0 - (vecs[nodes] * q).sum(axis=1)
-        out = sorted(zip(exact.tolist(), nodes.tolist()))
-    return out[:k]
+    # re-score the kept slack set pair by pair so the final k-cut
+    # happens on batch-independent values: (a) the l2 norm expansion
+    # has cancellation error ~1e-8 near zero; (b) a GEMV row's rounding
+    # can depend on the matrix it rides in, so EXACT-DUPLICATE vectors
+    # could differ by 1 ulp and flip their (distance, node) tie order.
+    nodes = np.fromiter((-nn for _, nn in res), dtype=np.int64)
+    exact = canonical(q, vecs[nodes], metric)
+    keep = top_k(exact, nodes, k)
+    return list(zip(exact[keep].tolist(), nodes[keep].tolist()))
 
 
 def _graph_arrays(right: pd.DataFrame, vec_col: str):
@@ -739,7 +704,7 @@ class HNSWIndex(ANNArtifact):
             vecs, levels, nbrs, entry, top = _graph_arrays(part, self.vec_col)
             segs.append(_Segment(
                 int(seg), vecs, levels, nbrs, entry, top,
-                _sqnorms(vecs) if self.metric == "l2" else None,
+                sq_norms(vecs, self.metric),
                 part[self.key_col].to_numpy(),
                 part["__alive"].to_numpy().astype(bool)))
         return segs
@@ -767,9 +732,7 @@ class HNSWIndex(ANNArtifact):
         _, rows, segs = self._snapshot()
         q = np.asarray(qvec, dtype=np.float32).astype(np.float64)
         if self.metric == "cosine":
-            n = np.linalg.norm(q)
-            if n > 0:
-                q = q / n
+            q = unit_rows(q)
         allowed = None
         if where is not None:
             ok = rows.where(where).select("__seg", "__node").toPandas()
@@ -786,10 +749,10 @@ class HNSWIndex(ANNArtifact):
                                  sq=s.sq)
             dists += [d for d, _ in hits]
             keys += s.keys[[node for _, node in hits]].tolist()
-        scores = _emit(np.asarray(dists, dtype=np.float64), self.metric)
+        scores = emit(np.asarray(dists, dtype=np.float64), self.metric)
         hit = Row(self.key_col, "__score")
-        return [hit(key, score) for score, key in
-                sorted(zip(scores.tolist(), keys))[:kk]]
+        return [hit(keys[i], float(scores[i]))
+                for i in top_k(scores, np.asarray(keys), kk)]
 
 
 class _Resident(NamedTuple):
@@ -818,7 +781,7 @@ class _Segment(NamedTuple):
 
 
 def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,
-                  ef: int = 64, where=None,
+                  ef: int = 64, where: str | None = None,
                   query_key: str = "qid",
                   query_vec_col: str | None = None,
                   route_segments: int | None = None) -> DataFrame:
@@ -830,8 +793,8 @@ def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,
     Arrow kernel, then a global (distance, key) window top-k. The graph
     side never shuffles more than its own parquet scan; parallelism ==
     segments (size segments to >= cluster cores, same dial as IVF
-    lists). ``where`` is an arbitrary SQL predicate over the persisted
-    payload columns, evaluated JVM-side in the scan and honored
+    lists). ``where`` is an arbitrary SQL predicate (text) over the
+    persisted payload columns, evaluated JVM-side in the scan and honored
     IN-traversal (reference inline filtering); deleted rows are masked
     through the same path. Output: query_key, key_col, distance, rank.
     Duplicate query keys keep per-row semantics — each input row gets
@@ -907,8 +870,6 @@ def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,
             F.col("id").cast("int").alias("__seg"))
         probed = qside.crossJoin(F.broadcast(seg_ids))
 
-    from pyspark.sql import Column
-
     graph = index._decode(index._with_alive(index._read()))
     if routed:
         # partition-prune the graph scan to the probed-segment union —
@@ -918,8 +879,7 @@ def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,
         graph = graph.where(F.col("__seg").isin(segs))
     allowed = F.col("__alive")
     if where is not None:
-        allowed = allowed & (where if isinstance(where, Column)
-                             else F.expr(where))
+        allowed = allowed & F.expr(where)
     graph = graph.select(
         "__seg", "__node", key_col, vec_col, "__level", "__nbrs",
         allowed.alias("__ok"))
@@ -937,7 +897,7 @@ def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,
             return pd.DataFrame(columns=cols)
         right = right.sort_values("__node").reset_index(drop=True)
         vecs, levels, nbrs, entry, top = _graph_arrays(right, vec_col)
-        sq = _sqnorms(vecs) if metric == "l2" else None
+        sq = sq_norms(vecs, metric)
         keys = right[key_col].to_numpy()
         okv = right["__ok"].to_numpy()
         mask = None if bool(okv.all()) else okv.astype(bool)
@@ -947,9 +907,7 @@ def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,
                                 left["__qvec"].to_numpy()):
             q = np.asarray(qv, dtype=np.float64)
             if metric == "cosine":
-                n = np.linalg.norm(q)
-                if n > 0:
-                    q = q / n
+                q = unit_rows(q)
             hits = _search_graph(vecs, levels, nbrs, entry, top, q,
                                  kk, eff, metric, allowed=mask, sq=sq)
             for d, node in hits:
@@ -960,7 +918,7 @@ def knn_join_hnsw(queries: DataFrame, index: HNSWIndex, k: int = 10,
         d = np.asarray(dists, dtype=np.float64)
         return pd.DataFrame({"__qidx": qixs, query_key: qids,
                              key_col: rkeys,
-                             "distance": _emit(d, metric)}, columns=cols)
+                             "distance": emit(d, metric)}, columns=cols)
 
     cand = (probed.groupBy("__seg")
             .cogroup(graph.groupBy("__seg"))

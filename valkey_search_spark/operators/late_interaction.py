@@ -26,6 +26,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.distance import unit_rows
+
 
 class _RevKey:
     """Inverts comparison so a MIN-heap of (score, _RevKey(key)) evicts
@@ -116,9 +118,7 @@ def _stack_query_tokens(queries: DataFrame, query_key: str,
     if metric == "cosine":
         # row-wise (per token vector), so normalizing the stacked matrix
         # is identical to normalizing each bag separately
-        n = np.linalg.norm(qmat, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        qmat = qmat / n
+        qmat = unit_rows(qmat)
     return keys, qmat, offs
 
 
@@ -216,9 +216,7 @@ def maxsim_join(queries: DataFrame, docs: DataFrame, k: int = 10,
                                   pdf[dvecs_col].to_numpy()):
                 d = _stack_bag(toks, dkey, "doc")
                 if metric == "cosine":
-                    n = np.linalg.norm(d, axis=1, keepdims=True)
-                    n[n == 0] = 1.0
-                    d = d / n
+                    d = unit_rows(d)
                 sims = qmat @ d.T                    # (Tq_total, t_d)
                 tokmax = sims.max(axis=1)
                 for i in range(nq):
@@ -300,11 +298,7 @@ def maxsim_score(queries: DataFrame, docs: DataFrame,
                 qm = _stack_bag(qtoks, qkeys_b[i], "query")
                 dm = _stack_bag(dtoks, dkeys_b[i], "doc")
                 if metric == "cosine":
-                    qn = np.linalg.norm(qm, axis=1, keepdims=True)
-                    qn[qn == 0] = 1.0
-                    dn = np.linalg.norm(dm, axis=1, keepdims=True)
-                    dn[dn == 0] = 1.0
-                    qm, dm = qm / qn, dm / dn
+                    qm, dm = unit_rows(qm), unit_rows(dm)
                 scores[i] = float((qm @ dm.T).max(axis=1).sum())
             out = pdf[[query_key, doc_key]].copy()
             out["score"] = pd.Series(scores, index=out.index,

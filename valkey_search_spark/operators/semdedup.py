@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..functions.distance import unit_rows
+
 
 def _greedy_leaders(unit: np.ndarray, threshold: float,
                     chunk: int = 1024) -> tuple[np.ndarray, np.ndarray]:
@@ -163,15 +165,10 @@ def semantic_dedup_flags(df: DataFrame, key: str = "doc_id",
         if pdf.empty:
             return pd.DataFrame(columns=[f.name for f in out_schema.fields])
         cid = int(pdf["__cluster"].iloc[0])
-        vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        unit = vecs / norms
+        unit = unit_rows(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
         keys = pdf[key].to_numpy()
         if policy == "centroid_far":
-            c = cents[origin[cid]]
-            cn = np.linalg.norm(c)
-            csim = unit @ (c / cn if cn > 0 else c)
+            csim = unit @ unit_rows(cents[origin[cid]])
             order = np.lexsort((keys, csim))        # far-first, key tiebreak
         else:
             order = np.argsort(keys)
