@@ -169,24 +169,46 @@ def hnsw_eng(spark, tmp_path_factory):
     return e
 
 
-def test_planner_loose_filter_goes_inline(hnsw_eng):
-    """A filter matching ~most documents exceeds the prefiltering ratio
-    (planner.cc) -> inline ANN: the plan reads the IVF artifact."""
+def test_planner_loose_filter_prefilters_on_small_index(hnsw_eng):
+    """A filter matching every document of a small index: the probed
+    lists' modelled cost is no lower than scoring the kept rows exactly,
+    so the planner stays on the exact pre-filter path (no artifact scan
+    in the plan)."""
     df = hnsw_eng.ft_search("emb_auto", "@label:[0 1000]=>[KNN 5 @embedding $v]",
                             params={"v": QVEC}, limit=(0, 5))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "__list" in plan                 # probed partitioned artifact
-    assert len(df.collect()) >= 1
+    assert "__list" not in plan
+    assert len(df.collect()) == 5
 
 
 def test_planner_selective_filter_prefilters(hnsw_eng):
-    """A filter matching ~one document stays on the exact pre-filter
-    path (estimated fraction <= 0.001)."""
+    """A filter matching ~no document stays on the exact pre-filter
+    path."""
     df = hnsw_eng.ft_search("emb_auto", "@label:[3 3] @label:[-5 -5]"
                             "=>[KNN 5 @embedding $v]",
                             params={"v": QVEC}, limit=(0, 5))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "__list" not in plan             # no artifact scan: exact path
+
+
+def test_planner_loose_filter_goes_inline_on_large_index(hnsw_eng,
+                                                        monkeypatch):
+    """Priced as a large index (scoring far dearer than measured), the
+    loose filter's exact scan costs more than probing an eighth of the
+    lists: the plan reads the IVF artifact. The selective filter still
+    prefilters."""
+    from valkey_search_spark.plans import planner
+
+    monkeypatch.setattr(planner, "SCORE_MS", 1.0)
+    df = hnsw_eng.ft_search("emb_auto", "@label:[0 1000]=>[KNN 5 @embedding $v]",
+                            params={"v": QVEC}, limit=(0, 5))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "__list" in plan                 # probed partitioned artifact
+    assert len(df.collect()) >= 1
+    ex = hnsw_eng.ft_explain("emb_auto", "@label:[3 3] @label:[-5 -5]"
+                             "=>[KNN 5 @embedding $v]", params={"v": QVEC})
+    assert ex["knn"]["mode"] == "prefilter"
+    assert ex["knn"]["estimated_rows"] == 0
 
 
 def test_planner_flat_always_prefilters(eng):

@@ -14,6 +14,8 @@ from valkey_search_spark.functions.distance import (
     unit_vector_expr,
 )
 
+from valkey_search_spark.operators.ann import knn_join
+
 from .test_exact_knn import GOOD, QUERIES, _oracle
 
 METRICS = ["l2", "ip", "cosine"]
@@ -53,6 +55,69 @@ def test_norm_expansion_matches_sequential_on_finite_queries(metric):
     for row, q in zip(got, raw):
         np.testing.assert_allclose(row, _oracle(metric, q), rtol=1e-12,
                                    atol=0)
+
+
+@pytest.mark.parametrize("qname", ["nan", "pinf", "ninf"])
+def test_norm_expansion_takes_direct_form_on_non_finite_queries(qname):
+    # ||q||² is not finite, so the expansion would be inf - inf: the query
+    # takes the direct form, alone or as a row of a query batch
+    raw = QUERIES[qname]
+    v = _stored("l2")
+    want = _oracle("l2", raw)
+    with np.errstate(all="ignore"):
+        one = emit(distances(np.array(raw), v, "l2", sq_norms(v, "l2")), "l2")
+        qs = np.vstack([QUERIES["finite"], raw])
+        batch = emit(distances(qs, v, "l2", sq_norms(v, "l2")), "l2")
+    np.testing.assert_allclose(one, want, rtol=1e-12, atol=0, equal_nan=True)
+    np.testing.assert_allclose(batch[1], want, rtol=1e-12, atol=0,
+                               equal_nan=True)
+    np.testing.assert_allclose(batch[0], _oracle("l2", QUERIES["finite"]),
+                               rtol=1e-12, atol=0)
+
+
+def test_norm_expansion_scores_non_finite_rows_directly():
+    # a stored row whose squared norm is not finite (an infinite or NaN
+    # component, or an overflowing norm) would be inf - inf in the
+    # expansion: a query vector takes the direct form for the matrix, a
+    # query batch scores only that row directly and keeps the expansion
+    # (the same values, bit for bit) for the other rows
+    v = _stored("l2")
+    bad = np.vstack([v, np.full(v.shape[1], np.inf),
+                     np.full(v.shape[1], np.nan), np.full(v.shape[1], 1e200)])
+    qs = np.vstack([QUERIES["finite"], [0.5, -1.0, 2.0, 0.0, 1e-3, 7.0]])
+    with np.errstate(over="ignore"):
+        assert sq_norms(bad, "l2") is None
+        one = distances(qs[0], bad, "l2", sq_norms(bad, "l2"))
+        batch = distances(qs, bad, "l2", sq_norms(bad, "l2"))
+    np.testing.assert_array_equal(one[:len(v)], distances(qs[0], v, "l2"))
+    np.testing.assert_array_equal(batch[:, :len(v)],
+                                  distances(qs, v, "l2", sq_norms(v, "l2")))
+    for got in (one, batch):
+        assert np.isinf(got[..., len(v)]).all()
+        assert np.isnan(got[..., len(v) + 1]).all()
+        assert np.isinf(got[..., len(v) + 2]).all()
+
+
+def test_knn_join_batch_over_a_nan_row(spark):
+    # a NaN component survives dropna: the broadcast join scores that row
+    # NaN (last) for every query of a batch, and the rest exactly
+    rows = [[float(i), 1.0, -1.0] for i in range(6)] + [[np.nan, 0.0, 0.0]]
+    corpus = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(rows)], "cid int, embedding array<double>")
+    queries = spark.createDataFrame(
+        [(j, [j + 0.25, 1.0, -1.0]) for j in range(4)],
+        "qid int, embedding array<double>")
+    got = {(r["qid"], r["rank"]): (r["cid"], r["distance"])
+           for r in knn_join(queries, corpus, k=7, metric="l2",
+                             batch_size=4).collect()}
+    for j in range(4):
+        ranked = [got[(j, rank)] for rank in range(1, 8)]
+        # NaN, which pandas hands to Spark as NULL
+        assert ranked[-1] == (6, None)
+        want = sorted((abs(j + 0.25 - i), i) for i in range(6))
+        assert [c for c, _ in ranked[:-1]] == [i for _, i in want]
+        np.testing.assert_allclose([d for _, d in ranked[:-1]],
+                                   [d for d, _ in want], rtol=1e-12)
 
 
 @pytest.mark.parametrize("metric", METRICS)

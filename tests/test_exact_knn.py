@@ -105,3 +105,30 @@ def test_null_element_vector_is_untracked(eng, tmp_path):
                          params={"q": [float(x) for x in GOOD[0]]},
                          limit=(0, 20)).collect()
     assert sorted(r["__key"] for r in rows) == [f"g{i}" for i in range(8)]
+
+
+def test_ivf_float_scores_equal_exact_for_cosine(eng, tmp_path):
+    """The IVF float tier scores a cosine query through the same SQL
+    kernel as the exact scan, which makes the query unit itself, so a
+    full probe reports the exact scan's scores bit for bit."""
+    eng.ft_create("ivf_cos", eng.catalog.get("cosine").doc_df,
+                  [VectorField("v", dim=DIM, metric="cosine")],
+                  key_column="id")
+    eng.ft_build_ann("ivf_cos", "v", str(tmp_path / "ivf_cos"),
+                     algorithm="ivf", n_lists=2)
+    from valkey_search_spark.functions.distance import unit_rows
+
+    # queries whose unit vector moves when made unit a second time
+    rng = np.random.default_rng(11)
+    queries = []
+    while len(queries) < 5:
+        q = rng.normal(size=DIM).astype(np.float32).astype(np.float64)
+        if not np.array_equal(unit_rows(unit_rows(q)), unit_rows(q)):
+            queries.append(q.tolist())
+    for q in queries:
+        exact = {r["__key"]: r["__v_score"] for r in eng.ft_search(
+            "cosine", "*=>[KNN 8 @v $q]", params={"q": q}).collect()}
+        ivf = {r["__key"]: r["__v_score"] for r in eng.ft_search(
+            "ivf_cos", "*=>[KNN 8 @v $q EF_RUNTIME 40]",
+            params={"q": q}).collect()}
+        assert ivf == exact

@@ -1,5 +1,6 @@
 """ft_explain: the plan-inspection surface — parsed predicate, pushed
-filters, Python-stage and exchange counts, KNN planner mode."""
+filters, Python-stage and exchange counts, KNN planner mode, estimate
+and modelled costs."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
@@ -40,7 +41,10 @@ def test_ft_explain_knn_mode_and_metrics_untouched(spark, sf_dir):
     # no ANN artifact: match-all KNN is FLAT exact
     ex = eng.ft_explain("exp_vecs", "*=>[KNN 5 @embedding $v]",
                         params={"v": [0.0] * 64})
-    assert ex["knn"] == {"attr": "embedding", "k": 5, "mode": "exact"}
+    # the cost planner runs only for a hybrid op on an HNSW artifact
+    assert ex["knn"] == {"attr": "embedding", "k": 5, "mode": "exact",
+                         "estimated_rows": None, "exact_cost_ms": None,
+                         "ann_cost_ms": None}
     # hybrid exact KNN: filter first = prefilter
     ex2 = eng.ft_explain("exp_vecs", "@grp:{1}=>[KNN 5 @embedding $v]",
                          params={"v": [0.0] * 64})

@@ -67,25 +67,30 @@ def test_ef_runtime_routes_to_graph_beam(eng):
     assert ex["knn"]["mode"] == "inline"
 
 
-def test_planner_defaults_beam_for_loose_hybrid(eng, monkeypatch):
+def test_planner_prefilters_loose_hybrid_on_small_index(eng, monkeypatch):
     from valkey_search_spark.plans.predicate_translator import (
         PredicateTranslator,
     )
 
     e, emb = eng
-    # loose filter + no EF_RUNTIME: the planner picks the inline graph path
+    # loose filter + no EF_RUNTIME on a small index: the graph path's two
+    # jobs cost more than scoring the kept rows exactly
     ex = e.ft_explain("hemb", "@label:[0 9]=>[KNN 5 @embedding $v AS dist]",
                       params={"v": QVEC})
-    assert ex["knn"]["mode"] == "inline"
-    # the planner's probe and the inline filter share ONE translation
+    assert ex["knn"]["mode"] == "prefilter"
+    # scoring every row already costs less: no estimate is made
+    assert ex["knn"]["exact_cost_ms"] < ex["knn"]["ann_cost_ms"]
+    assert ex["knn"]["estimated_rows"] is None
+    # the op translates its filter ONCE
     calls = []
-    orig = PredicateTranslator.translate
+    for name in ("translate", "translate_staged"):
+        orig = getattr(PredicateTranslator, name)
 
-    def counting(self, *a, **k):
-        calls.append(1)
-        return orig(self, *a, **k)
+        def counting(self, *a, _orig=orig, **k):
+            calls.append(1)
+            return _orig(self, *a, **k)
 
-    monkeypatch.setattr(PredicateTranslator, "translate", counting)
+        monkeypatch.setattr(PredicateTranslator, name, counting)
     n = e.ft_search("hemb", "@label:[0 9]=>[KNN 5 @embedding $v AS dist]",
                     params={"v": QVEC}, count_only=True)
     assert n == 5

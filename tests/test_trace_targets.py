@@ -15,7 +15,7 @@ def test_every_trace_target_is_defined_on_its_owner():
     assert not missing, f"trace targets not in their owner's __dict__: {missing}"
 
 
-def test_traced_layers_record_spans(spark, tmp_path):
+def test_traced_layers_record_spans(spark, tmp_path, monkeypatch):
     """Every serving layer records a span on an HNSW FT.SEARCH and an
     FT.AGGREGATE under the installed tracer: a layer whose traced name
     the engine stops calling (say, a helper bypassing the wrapped
@@ -29,6 +29,11 @@ def test_traced_layers_record_spans(spark, tmp_path):
     from valkey_search_spark import (
         CommandDispatcher, SearchEngine, TagField, VectorField,
     )
+    from valkey_search_spark.plans import planner
+
+    # price scoring as on a large index, so the planner estimates the
+    # filter's size instead of choosing exact from the row count alone
+    monkeypatch.setattr(planner, "SCORE_MS", 1.0)
 
     rng = np.random.RandomState(3)
     rows = [(i, f"c{i % 2}", [float(x) for x in rng.randn(8)])
@@ -46,10 +51,11 @@ def test_traced_layers_record_spans(spark, tmp_path):
     tracer.install(trace_targets())
     try:
         tracer.begin_op("smoke")
-        # hybrid, no EF_RUNTIME: the planner's probe runs, and the loose
-        # (half-matching) filter sends the query into the graph
-        disp.execute_reply(["FT.SEARCH", "tv", "@cat:{c0}=>[KNN 5 @vec $v]",
-                            "PARAMS", "2", "v", blob])
+        # hybrid, no EF_RUNTIME: the planner's estimate runs; EF_RUNTIME
+        # drives the graph search whatever the planner chooses
+        for knn in ("[KNN 5 @vec $v]", "[KNN 5 @vec $v EF_RUNTIME 40]"):
+            disp.execute_reply(["FT.SEARCH", "tv", f"@cat:{{c0}}=>{knn}",
+                                "PARAMS", "2", "v", blob])
         disp.execute_reply(["FT.AGGREGATE", "tv", "@cat:{c1}", "GROUPBY",
                             "1", "@cat", "REDUCE", "COUNT", "0", "AS", "n"])
         tracer.end_op()

@@ -43,7 +43,8 @@ from .functions.analysis import (
     text_tokens_column,
 )
 from .functions.distance import unit_vector_expr
-from .functions.sqltext import sql_ident, sql_str
+from .functions.sqltext import double_literal, sql_ident, sql_str
+from .plans.planner import IndexStats, NumericStats, TagStats
 
 
 def tag_col(f: str) -> str:
@@ -76,6 +77,11 @@ _view_ids = itertools.count()
 # index-level union ("field-mask") columns for wide uniform text schemas
 MASK_TOK_COL = "__fm_tok"
 MASK_STEM_COL = "__fm_stem"
+
+# planner statistics (IndexSchema.stats): equi-depth buckets per NUMERIC
+# field, most frequent tags kept per TAG field
+STATS_BUCKETS = 64
+STATS_TOP_TAGS = 64
 
 
 @dataclass
@@ -261,6 +267,10 @@ class IndexSchema:
         self._ann: dict = {}            # attr -> ANN artifact (ft_build_ann)
         self._view: tuple[str, list[str], list[str]] | None = None
         self._view_lock = threading.Lock()
+        # the planner's row count and statistics, collected on demand
+        self._stats_lock = threading.Lock()
+        self._rows: int | None = None
+        self._stats: IndexStats | None = None
         for f in self.fields:
             self._by_attr[f.attr] = f
 
@@ -338,6 +348,70 @@ class IndexSchema:
     def sql(self, statement: str) -> DataFrame:
         """Run one statement in the session that holds ``self.view``."""
         return self.doc_df.sparkSession.sql(statement)
+
+    def row_count(self) -> int:
+        """The rows of this index version, for the hybrid-KNN planner's
+        cost bound (``plans/planner.py``): one count over the view the
+        first time a planner needs it, then kept, so it goes with the
+        schema (a re-created index counts again); FT.CREATE stays lazy."""
+        view = self.view
+        with self._stats_lock:
+            if self._rows is None:
+                self._rows = self.sql(
+                    f"SELECT count(*) FROM {sql_ident(view)}").collect()[0][0]
+            return self._rows
+
+    def stats(self) -> IndexStats:
+        """The hybrid-KNN planner's statistics of this index version: the
+        row count; per NUMERIC field its non-null count and equi-depth
+        quantiles; per TAG field its most frequent tags with counts, its
+        (row, tag) pairs and its distinct tags. Collected by one statement
+        over the view the first time the planner needs an estimate (only
+        on an index large enough that the ANN path may be cheaper), then
+        kept like ``row_count``. Their own lock, not the view's: a
+        collection does not hold up the index's other ops."""
+        view = self.view
+        with self._stats_lock:
+            if self._stats is None:
+                self._stats = self._collect_stats(view)
+            return self._stats
+
+    def _collect_stats(self, view: str) -> IndexStats:
+        """``stats`` in one scan: each row explodes into a row marker
+        (``f`` 0) plus one element per tag of each TAG field (``f`` i), so
+        the row-level aggregates read the markers and each tag field its
+        own elements."""
+        nums = [f for f in self.fields if isinstance(f, NumericField)]
+        tags = [f for f in self.fields if isinstance(f, TagField)]
+        probs = "array(" + ", ".join(double_literal(i / STATS_BUCKETS)
+                                     for i in range(STATS_BUCKETS + 1)) + ")"
+        cols = [sql_ident(num_col(f.attr)) for f in nums]
+        elems = ["array(named_struct('f', 0, 't', CAST(NULL AS STRING)))"]
+        aggs = ["count(*) FILTER (WHERE `f` = 0)"]
+        for v in cols:
+            aggs += [f"count({v}) FILTER (WHERE `f` = 0)",
+                     f"percentile_approx({v}, {probs}) FILTER (WHERE `f` = 0)"]
+        for i, f in enumerate(tags, 1):
+            elems.append(f"transform(coalesce({sql_ident(tag_col(f.attr))}, "
+                         f"array()), x -> named_struct('f', {i}, 't', x))")
+            aggs += [f"{a} FILTER (WHERE `f` = {i})" for a in (
+                "count(*)", f"approx_top_k(`t`, {STATS_TOP_TAGS})",
+                "approx_count_distinct(`t`)")]
+        row = self.sql(
+            f"SELECT {', '.join(aggs)} FROM (SELECT "
+            + "".join(c + ", " for c in cols)
+            + f"inline(concat({', '.join(elems)})) FROM {sql_ident(view)})"
+        ).collect()[0]
+        it = iter(row)
+        n = next(it)
+        numeric = {f.attr: NumericStats(next(it), next(it) or [])
+                   for f in nums}
+        tag = {f.attr: TagStats(pairs=next(it),
+                                top={r["item"]: r["count"]
+                                     for r in next(it) or []},
+                                distinct=next(it), fold=not f.casesensitive)
+               for f in tags}
+        return IndexStats(n, numeric, tag)
 
     @property
     def text_fields(self) -> list[TextField]:

@@ -16,6 +16,8 @@ between equal vectors), and cuts with ``top_k``.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 from pyspark.sql import Column, functions as F
@@ -69,27 +71,55 @@ def distance_column(col: str, vec: list[float], metric: str) -> Column:
 
 
 def sq_norms(mat: np.ndarray, metric: str) -> np.ndarray | None:
-    """Squared row norms for the l2 norm expansion; None for ip/cosine."""
-    return (mat * mat).sum(axis=1) if metric == "l2" else None
+    """Squared row norms for the l2 norm expansion; None for ip/cosine,
+    and when a row's is not finite (its expansion would be inf - inf): a
+    query vector then takes the direct form, query rows the expansion
+    with that row scored directly (``distances``)."""
+    if metric != "l2":
+        return None
+    sq = (mat * mat).sum(axis=1)
+    return sq if np.isfinite(sq).all() else None
+
+
+def _sq_diff(q: np.ndarray, mat: np.ndarray) -> np.ndarray:
+    """Squared l2 as the sum of squared differences."""
+    diff = mat - q if q.ndim == 1 else q[:, None, :] - mat
+    return (diff * diff).sum(axis=-1)
 
 
 def distances(q: np.ndarray, mat: np.ndarray, metric: str,
               sqnorms: np.ndarray | None = None, qq=None) -> np.ndarray:
     """Internal distances from ``q`` (a vector, or query rows) to the rows
-    of ``mat``. l2 is squared: given the rows' ``sqnorms``, the norm
-    expansion ||v||² - 2v·q + ||q||² (one GEMM; ``qq`` = ||q||²) clipped
-    at 0, else the sum of squared differences."""
+    of ``mat``. l2 is squared. A query vector takes the norm expansion
+    ||v||² - 2v·q + ||q||² (one GEMV; ``qq`` = ||q||²) clipped at 0 when
+    given the rows' ``sqnorms`` and its own ||q||² is finite, else the sum
+    of squared differences. Query rows always take the expansion (one
+    GEMM; the row norms are computed here when not given), with each row
+    and each query whose squared norm is not finite scored by the direct
+    form alone, so a batch never builds a queries x rows x dim array."""
     if metric != "l2":
         check_metric(metric)
         return 1.0 - (mat @ q if q.ndim == 1 else q @ mat.T)
-    if sqnorms is None:
-        diff = mat - q if q.ndim == 1 else q[:, None, :] - mat
-        return (diff * diff).sum(axis=-1)
-    if qq is None:
-        qq = (q * q).sum(axis=-1)
     if q.ndim == 1:
+        if sqnorms is None:
+            return _sq_diff(q, mat)
+        if qq is None:
+            qq = (q * q).sum()
+        if not math.isfinite(qq):
+            return _sq_diff(q, mat)
         return np.maximum(sqnorms - 2.0 * (mat @ q) + qq, 0.0)
-    return np.maximum(sqnorms - 2.0 * (q @ mat.T) + qq[:, None], 0.0)
+    if sqnorms is None:
+        sqnorms = (mat * mat).sum(axis=1)
+    if qq is None:
+        qq = (q * q).sum(axis=1)
+    with np.errstate(invalid="ignore"):
+        d = np.maximum(sqnorms - 2.0 * (q @ mat.T) + qq[:, None], 0.0)
+    bad = ~np.isfinite(sqnorms)
+    if bad.any():
+        d[:, bad] = _sq_diff(q, mat[bad])
+    for i in np.flatnonzero(~np.isfinite(qq)):
+        d[i] = _sq_diff(q[i], mat)
+    return d
 
 
 def emit(d: np.ndarray, metric: str) -> np.ndarray:

@@ -317,14 +317,16 @@ class IVFIndex(ANNArtifact):
         column) makes the cut deterministic under distance ties."""
         lists = self._probe_lists(qvec, nprobe)
         q = np.asarray(qvec, dtype=np.float64)
-        q = (unit_rows(q) if self.metric == "cosine" else q).tolist()
         if self.pq is not None:
             # ADC fast path: score straight off the m-byte codes (exact
             # query vs per-subspace LUT, pure JVM element_at) — the
             # float reconstruction column stays in the plan only if the
             # prefilter or a downstream projection actually asks for the
             # vector (so the prefilter sees the same columns as on
-            # float/int8 indexes)
+            # float/int8 indexes). The LUTs take the query as given, so
+            # a cosine query is made unit here; distance_sql does that
+            # itself on the other tiers.
+            q = (unit_rows(q) if self.metric == "cosine" else q).tolist()
             df = self.scan_raw().where(F.col("__list").isin(lists))
             scored = self.pq.attach_adc(df, q, self.metric,
                                         score_name=score_name)
@@ -336,7 +338,8 @@ class IVFIndex(ANNArtifact):
             if prefilter is not None:
                 df = df.where(prefilter)
             scored = df.withColumn(
-                score_name, distance_column(self.vec_col, q, self.metric))
+                score_name, distance_column(self.vec_col, q.tolist(),
+                                            self.metric))
         order = [F.col(score_name).asc()]
         if tiebreak_col is not None:
             order.append(F.col(tiebreak_col).asc())

@@ -37,6 +37,7 @@ from ..parser.ast import (
     query_operation_flags,
 )
 from ..parser.filter_parser import parse_query
+from ..plans import planner
 from ..plans.predicate_translator import (
     PredicateTranslator, QueryLimits, predicate_depth_and_count,
 )
@@ -290,9 +291,13 @@ class SearchEngine:
         the filters PUSHED into the parquet scan, and the count of
         Python (Arrow) stages and exchanges. Builds the same lazy plan
         as ``ft_search`` (same kwargs) without executing it; the only
-        work is Catalyst analysis plus any planner selectivity probe
-        the query itself would run, and on an HNSW artifact the graph
-        search, whose hits the plan carries as literals."""
+        work is Catalyst analysis, the index's planner row count and
+        statistics if a hybrid query needs them and they are not yet
+        collected (one job each, once per index version; the statistics
+        only on an index large enough that the ANN path may win), and on
+        an HNSW artifact the graph search, whose hits the plan carries as
+        literals. ``knn`` carries the planner's ``estimated_rows`` and its
+        ``exact_cost_ms`` / ``ann_cost_ms`` beside the ``mode``."""
         import re as _re
 
         if kwargs.get("count_only") or kwargs.get("_observe_total"):
@@ -301,8 +306,8 @@ class SearchEngine:
                 "count_only/_observe_total would run the query")
         # _ft_search (not ft_search): an explain is not a served
         # request, so no INFO SEARCH counter moves
-        df, req, ann_mode = self._ft_search(index, query, params=params,
-                                            **kwargs)
+        df, req, ann_mode, cost = self._ft_search(index, query,
+                                                  params=params, **kwargs)
         parsed = req.parsed
         plan = df._jdf.queryExecution().executedPlan().toString()
         # plan toString truncates long scan lines: capture to the
@@ -316,8 +321,12 @@ class SearchEngine:
             pushed.extend(f for f in items if f != "...")
         knn = None
         if parsed.knn is not None:
+            # the planner's estimate and both modelled costs (ms); None
+            # where it did not run or could not estimate
+            est, exact_ms, ann_ms = (None,) * 3 if cost is None else cost[1:]
             knn = {"attr": parsed.knn.attr, "k": parsed.knn.k,
-                   "mode": ann_mode}
+                   "mode": ann_mode, "estimated_rows": est,
+                   "exact_cost_ms": exact_ms, "ann_cost_ms": ann_ms}
         return {
             "predicate": repr(parsed.predicate),
             "operations": sorted(query_operation_flags(req.pred)),
@@ -467,20 +476,28 @@ class SearchEngine:
 
         ``dialect`` is accepted for API parity (the engine always speaks
         dialect-2 syntax). ``timeout_ms`` is ENFORCED on executing calls
-        (count_only here, and ft_search_reply): the call's job group is
+        (count_only here, and ft_search_reply): the call's job group —
+        every Spark job of the op, including the planner's row count and
+        statistics and the graph path's load and allowed-set jobs — is
         cancelled at the deadline and SearchTimeoutError raised
         (ft.search.md TIMEOUT). Lazy calls return a plan, so the budget
         applies where execution happens; the reference's
         partial-results-on-timeout fanout modes have no single-engine
         analogue."""
-        try:
-            out, req, ann_mode = self._ft_search(
+        def run():
+            return self._ft_search(
                 index, query, params=params, limit=limit, sortby=sortby,
                 sortby_desc=sortby_desc, return_fields=return_fields,
                 nocontent=nocontent, verbatim=verbatim, slop=slop,
                 inorder=inorder, count_only=count_only, dialect=dialect,
                 timeout_ms=timeout_ms, withsortkeys=withsortkeys,
                 _observe_total=_observe_total)
+
+        try:
+            # a count executes here: its budget covers every job of the op
+            out, req, ann_mode, _ = (
+                self._run_with_timeout(run, timeout_ms) if count_only
+                else run())
         except Exception:
             self._count("failure_requests_count")
             raise
@@ -601,9 +618,14 @@ class SearchEngine:
         _observe_total=None,
     ):
         """FT.SEARCH without the request counters. Returns (DataFrame or
-        count, the SearchRequest, the ANN mode): ``exact`` / ``prefilter``
-        for the exact scan without / with a filter, ``ann`` / ``inline``
-        for the ANN artifact without / with one, None for no KNN."""
+        count, the SearchRequest, the ANN mode, the planner's ``KnnCost``
+        or None when it did not run). The mode is ``exact`` /
+        ``prefilter`` for the exact scan without / with a filter, ``ann``
+        / ``inline`` for the ANN artifact without / with one, None for no
+        KNN. Every Spark job it starts (the planner's row count and
+        statistics, the resident graphs' load, the allowed set, a count)
+        runs on the caller's thread, so a TIMEOUT wrapper around the call
+        bounds them."""
         import time as _time
 
         _t0 = _time.perf_counter()
@@ -623,10 +645,8 @@ class SearchEngine:
         # a segment-graph HNSWIndex
         artifact = (None if knn is None
                     else schema._ann.get(schema.field(knn.attr).attr))
-        # the filter as ONE SQL expression: the planner's probe and the
-        # inline filter share it
-        where = None
         budget = None           # the graph beam, or the IVF lists probed
+        cost = None             # the planner's decision, when it ran
         if artifact is not None:
             from .hnsw import HNSWIndex
 
@@ -641,27 +661,24 @@ class SearchEngine:
                 budget = ef if graph else max(1, min(
                     artifact.n_lists, math.ceil(ef / max(knn.k, 1))))
             elif not match_all and schema.field(knn.attr).algo == "hnsw":
-                # ANN planner (the reference's pre-filter vs inline-filter
-                # choice, planner.cc:21-46): estimate the filter's
-                # selectivity from a bounded prefix probe — selective
-                # filters pre-filter exactly, loose filters run the
-                # predicate INSIDE the index (probed IVF lists, or
-                # in-traversal on the graph — the inline-filtering branch,
-                # search.cc:102-133 InlineVectorFilter)
-                from ..plans.planner import (
-                    estimate_match_fraction, use_prefiltering,
-                )
-
-                where = translator.translate(pred)
-                frac = estimate_match_fraction(
-                    schema.sql(f"SELECT * FROM {sql_ident(schema.view)}"),
-                    where)
-                if not use_prefiltering(frac, "hnsw"):
-                    # inline defaults: a beam 4x the reference's default
-                    # dial, wide enough that a loose filter keeps recall;
-                    # an eighth of the IVF lists
-                    budget = (max(4 * knn.k, 40) if graph
-                              else max(1, artifact.n_lists // 8))
+                # the reference's pre-filter vs inline-filter choice
+                # (planner.cc:21-46, search.cc:102-133 InlineVectorFilter),
+                # by modelled cost: the row count first, the statistics
+                # only if the filter's size can decide. The planner's
+                # functions are read off its module at call time, so a
+                # wrapper installed there sees the call.
+                # inline defaults: a beam 4x the reference's default
+                # dial, wide enough that a loose filter keeps recall; an
+                # eighth of the IVF lists
+                inline = (max(4 * knn.k, 40) if graph
+                          else max(1, artifact.n_lists // 8))
+                cost = planner.knn_cost(
+                    schema.row_count(), schema.field(knn.attr).dim,
+                    None if graph else inline / artifact.n_lists,
+                    lambda: planner.estimate_match_fraction(
+                        pred, schema.stats()))
+                if cost.ann:
+                    budget = inline
 
         # a KNN lazy frame without SORTBY takes its LIMIT page straight
         # from the top-k cut: one ORDER BY/LIMIT
@@ -675,8 +692,8 @@ class SearchEngine:
                             else "exact" if match_all else "prefilter")
                 cands = self._exact(req, *page)
             else:
-                if where is None and not match_all:
-                    where = translator.translate(pred)
+                # the inline filter, as one SQL expression
+                where = None if match_all else translator.translate(pred)
                 ann_mode = "ann" if where is None else "inline"
                 score = knn.score_alias()
                 if graph:
@@ -700,17 +717,16 @@ class SearchEngine:
             if count_only:
                 # the KNN candidates are the top-k cut, so every path
                 # reports the <=k result-set size
-                total = self._run_with_timeout(schema.sql(cands).count,
-                                               timeout_ms)
+                total = schema.sql(cands).count()
                 if knn is not None:
                     tier = "flat" if budget is None else "hnsw"
                     self._count(f"{tier}_vector_index_search_latency_usec",
                                 int((_time.perf_counter() - _t0) * 1e6))
-                return total, req, ann_mode
+                return total, req, ann_mode, cost
             return (self._finish(req, cands, None if paged else limit,
                                  sortby, sortby_desc, return_fields,
                                  nocontent, withsortkeys, _observe_total),
-                    req, ann_mode)
+                    req, ann_mode, cost)
         finally:
             if ann_view is not None:
                 # every statement over the view is analyzed by now
@@ -817,16 +833,18 @@ class SearchEngine:
                                    count_only=True,
                                    **{k: v for k, v in kw.items()
                                       if k != "nocontent"})]
-        obs = Observation()
-        timeout_ms = kw.get("timeout_ms")
-        df = self.ft_search(index, query, params=params, limit=limit,
-                            _observe_total=obs, **kw)
         from .reply import search_reply
 
+        obs = Observation()
+        # the budget covers planning too: its jobs (the planner's row
+        # count and statistics, the graph path) start before the reply's
+        # own
         return self._run_with_timeout(
-            lambda: search_reply(df, observation=obs, nocontent=nocontent,
-                                 offset=limit[0]),
-            timeout_ms)
+            lambda: search_reply(
+                self.ft_search(index, query, params=params, limit=limit,
+                               _observe_total=obs, **kw),
+                observation=obs, nocontent=nocontent, offset=limit[0]),
+            kw.get("timeout_ms"))
 
     # -- FT.AGGREGATE ------------------------------------------------------
     def ft_aggregate(
